@@ -21,7 +21,7 @@ import os
 import re
 import tempfile
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,9 +61,12 @@ TABLES = [
 ]
 
 
-def _views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view (lazy — schema only)."""
-    for t in TABLES:
+def _views(spark: SparkSession, sf_dir: str, tables: Iterable[str] = TABLES) -> None:
+    """Register the named synthetic tables as temp views. Lazy, and no
+    Spark job: each schema comes from its parquet footer. Registry
+    entries name the tables they read; the all-tables default is
+    ``bench.py``'s session warmup."""
+    for t in tables:
         _table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
@@ -76,8 +79,13 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _sql(sql: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Registry entry for one SQL text: registers only the tables the
+    text names (found once, here, by whole-word match, so a column or
+    alias that spells a table name only adds a view)."""
+    used = [t for t in TABLES if re.search(rf"\b{t}\b", sql, re.IGNORECASE)]
+
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _views(spark, sf_dir)
+        _views(spark, sf_dir, used)
         return spark.sql(sql)
 
     return fn
@@ -118,12 +126,22 @@ def _stream_state_partitions(spark: SparkSession, n_groups: int):
 # Shared SQL (identical text runs on Spark and DuckDB)
 # ---------------------------------------------------------------------------
 
-Q1_PRICING_SUMMARY = """
+#: Revenue in exact arithmetic. Prices hold whole cents and discounts and
+#: taxes whole hundredths, so these DECIMAL casts are exact, and so are
+#: the sums over them. The same sums over doubles can land on either side
+#: of a half-cent tie, depending on each engine's addition order, and
+#: ROUND then splits the engines (q5 on one seeded table set: 1693528.31
+#: in Spark, 1693528.32 in DuckDB).
+_PRICE_DEC = "CAST(l_extendedprice AS DECIMAL(12,2))"
+_DISC_PRICE_DEC = f"{_PRICE_DEC} * (1 - CAST(l_discount AS DECIMAL(3,2)))"
+_CHARGE_DEC = f"{_DISC_PRICE_DEC} * (1 + CAST(l_tax AS DECIMAL(3,2)))"
+
+Q1_PRICING_SUMMARY = f"""
 SELECT l_returnflag, l_linestatus,
        ROUND(SUM(l_quantity), 2)                                        AS sum_qty,
        ROUND(SUM(l_extendedprice), 2)                                   AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)                AS sum_disc_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)  AS sum_charge,
+       CAST(ROUND(SUM({_DISC_PRICE_DEC}), 2) AS DOUBLE)                 AS sum_disc_price,
+       CAST(ROUND(SUM({_CHARGE_DEC}), 2) AS DOUBLE)                     AS sum_charge,
        ROUND(AVG(l_quantity), 4)                                        AS avg_qty,
        ROUND(AVG(l_extendedprice), 4)                                   AS avg_price,
        ROUND(AVG(l_discount), 4)                                        AS avg_disc,
@@ -148,9 +166,9 @@ ORDER BY revenue DESC, o_orderkey
 LIMIT 10
 """
 
-Q5_LOCAL_SUPPLIER_VOLUME = """
+Q5_LOCAL_SUPPLIER_VOLUME = f"""
 SELECT n_name,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       CAST(ROUND(SUM({_DISC_PRICE_DEC}), 2) AS DOUBLE) AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -627,7 +645,7 @@ _SCD2_MERGE_TS = "2000-06-01 00:00:00"
 def _q_scd2_price_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5 SCD2: initial load = per-part price extremes before 1999; merge
     the full-history snapshot at a fixed effective ts."""
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["lineitem"])
     initial = spark.sql(
         f"""SELECT l_partkey AS partkey,
                    MIN(l_extendedprice) AS low, MAX(l_extendedprice) AS high
@@ -1501,8 +1519,8 @@ def _q_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         filter_reasons,
     )
 
-    _views(spark, sf_dir)
-    docs = _table(spark, sf_dir, "documents")
+    _views(spark, sf_dir, ["documents"])
+    docs = spark.table("documents")
     (
         docs.select(F.explode(filter_reasons(F.col("text"))).alias("reason"))
         .groupBy("reason")
@@ -3140,7 +3158,7 @@ def _q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONTRACT instead: each engine checks its own sketch against its own
     exact answer and emits deterministic error-bound booleans — hash-
     comparable across engines (round-2 judge ask; was rows-only)."""
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["lineitem"])
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -3172,7 +3190,7 @@ def _q_udf_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_sql_functions(spark)
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["documents"])
     return spark.sql(
         """
         SELECT doc_id,
@@ -3418,43 +3436,29 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table, tolerant of BOTH
     timestamp encodings the driver has generated across rounds: plain
     TIMESTAMP(MICROS) (read natively) and TIMESTAMP(NANOS) (read as long
-    + truncated to micros, mirroring sources.readers.read_parquet — a
+    + truncated to micros). The stream schema and the NANOS columns come
+    from the parquet footer, as in sources.readers.read_parquet — a
     hardcoded nanos assumption here silently collapsed every event into
-    two 1970 windows when the testdata flipped to micros)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    two 1970 windows when the testdata flipped to micros."""
+    from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
     from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.sources.readers import (
-        _parquet_nanos_cols,
+        _nanos_to_micros,
+        parquet_footer_schema,
     )
 
-    nanos = "ts" in _parquet_nanos_cols(f"{sf_dir}/events.parquet")
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema, nanos = parquet_footer_schema(spark, f"{sf_dir}/events.parquet")
+    # withWatermark needs event time as TIMESTAMP; Spark reads a naive
+    # (isAdjustedToUTC=false) micros column as one
     schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", LongType() if nanos else TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
+        [StructField(f.name, TimestampType()) if f.dataType == TimestampNTZType() else f for f in schema]
     )
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if nanos:
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return stream
+    return _nanos_to_micros(stream, nanos)
 
 
 def _run_stream(df: DataFrame, prefix: str, mode: str) -> DataFrame:
@@ -4296,7 +4300,7 @@ def _q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     error-bound booleans (relative 5% OR absolute 5 — small per-user
     cardinalities make a pure relative bound flap on the oracle engine's
     sketch)."""
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["events"])
     return spark.sql(
         """
         WITH daily AS (
@@ -6538,7 +6542,7 @@ def _q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_sql_functions(spark)
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["documents"])
     return spark.sql(
         """
         SELECT d.doc_id, s.pos, s.sentence
@@ -6770,7 +6774,7 @@ def _q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is cheaper than the serialization. The registry therefore still
     maps mad_outliers to the shared SQL; revisit only if the median
     passes dominate at much larger volume."""
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["orders"])
     orders = spark.table("orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -7049,7 +7053,7 @@ def _q_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitionByRange (sampled boundaries — layout may jitter between
     runs, answers never do); the NTILE global sort here is the price of
     a deterministic bucket id, paid only in the oracle harness."""
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["orders"])
     return spark.sql(_zorder_sql("spark"))
 
 
@@ -7097,7 +7101,7 @@ def _q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         url_dedup,
     )
 
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["documents"])
     docs = spark.sql(
         f"SELECT doc_id, {_messy_url_sql('STRING')} AS url FROM documents"
     )
@@ -7514,7 +7518,7 @@ def _q_k_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         generalize_to_k,
     )
 
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["customer"])
     cust = spark.sql(_GEN_BASE)
     rel = generalize_to_k(
         cust, k=_GEN_K, ladder=list(_GEN_LADDER), max_suppression_bp=_GEN_BP
@@ -8030,7 +8034,7 @@ def _q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         link_records,
     )
 
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["customer"])
     left = spark.table("customer")
     right = spark.sql(_LINK_DIRTY_SQL)
     pairs = link_records(
@@ -8085,7 +8089,7 @@ def _q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         triangle_count,
     )
 
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["lineitem"])
     # the %2 keyspace subsample keeps the ENTRY at bench scale (the
     # wedge count of the full sf0.1 graph is a ~40s workload on BOTH
     # engines — honest, but it would dominate the suite); the full
@@ -8440,7 +8444,7 @@ def _q_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         bfs_levels,
     )
 
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["lineitem"])
     edges = spark.sql(
         """
         SELECT DISTINCT l1.l_partkey AS src, l2.l_partkey AS dst
@@ -8724,7 +8728,7 @@ def _q_schema_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema_diff,
     )
 
-    _views(spark, sf_dir)
+    _views(spark, sf_dir, ["orders"])
     left = spark.sql(
         "SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS price, "
         "o_orderstatus AS status FROM orders"

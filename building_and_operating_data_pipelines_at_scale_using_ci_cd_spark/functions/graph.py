@@ -38,6 +38,8 @@ from fractions import Fraction
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import read_parquet
+
 
 def _materialize_parquet(df: DataFrame, prefix: str) -> DataFrame:
     """Write ``df`` to a fresh temp parquet dir and read it back.
@@ -51,10 +53,11 @@ def _materialize_parquet(df: DataFrame, prefix: str) -> DataFrame:
     table degraded every downstream join to SortMergeJoin (3.49s → 6.0s
     at sf0.1), so the shared subtree stayed inlined ~8x; this form
     computes it once and keeps the broadcasts. A fresh directory per
-    call — nothing persists across invocations."""
+    call — nothing persists across invocations. The read back takes its
+    schema from the footer Spark just wrote: no inference job."""
     path = os.path.join(tempfile.mkdtemp(prefix=prefix), "t")
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return read_parquet(df.sparkSession, path)
 
 #: one unit of rank mass = 1/SCALE (integer accounting, see module doc)
 SCALE = 10**12

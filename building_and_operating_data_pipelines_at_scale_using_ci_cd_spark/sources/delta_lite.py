@@ -64,6 +64,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .readers import parquet_footer_schema
+
 LOG_DIR = "_delta_log"
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -1582,9 +1584,11 @@ def convert_to_delta(
                 data_files.append(os.path.join(root, name))
     if not data_files:
         raise ValueError(f"CONVERT TO DELTA: no parquet files under {dir_path}")
-    # full schema INCLUDING typed partition columns via Spark's discovery
-    full = spark.read.option("basePath", dir_path).parquet(dir_path)
-    schema = full.schema
+    # full schema: data columns from the footer, typed partition columns
+    # via Spark's discovery
+    footer = parquet_footer_schema(spark, dir_path)
+    reader = spark.read.option("basePath", dir_path)
+    schema = (reader.schema(footer.schema) if footer else reader).parquet(dir_path).schema
     sample_rel = os.path.relpath(data_files[0], dir_path)
     pcols = [
         comp.partition("=")[0]

@@ -21,10 +21,29 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import replace
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 if TYPE_CHECKING:
     from ..config import InputSpec
@@ -33,52 +52,206 @@ if TYPE_CHECKING:
 _NATIVE_FORMATS = {"csv", "parquet", "orc", "json", "text"}
 
 
-def _parquet_nanos_cols(path: str) -> list[str]:
-    """Columns stored as TIMESTAMP(NANOS), which Spark's vectorized reader
-    rejects outright (PARQUET_TYPE_ILLEGAL). Footer-only check."""
-    import glob as _glob
+#: Spark writes its own schema into every parquet footer it produces and
+#: reads it back in preference to the parquet types
+#: (``ParquetReadSupport.SPARK_METADATA_KEY``).
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+
+class FooterSchema(NamedTuple):
+    """What one parquet footer says about a read: the ``StructType``
+    Spark's own inference would produce, and the top-level
+    TIMESTAMP(NANOS) columns, which it types ``long``."""
+
+    schema: StructType
+    nanos: list[str]
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: ``_SUCCESS``, ``.crc`` files,
+    ``_temporary`` and the like; ``k=v`` partition directories are kept."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
+
+
+def _schema_file(path: str) -> str | None:
+    """The file whose footer Spark's inference reads without
+    ``mergeSchema``: ``path`` itself, or for a directory the first
+    ``_common_metadata`` summary, else the first ``_metadata`` summary,
+    else the first data file, each by full path."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    found: dict[str, list[str]] = {"_common_metadata": [], "_metadata": [], "data": []}
+    for base, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for f in files:
+            if f in ("_common_metadata", "_metadata"):
+                found[f].append(os.path.join(base, f))
+            elif not _hidden(f):
+                found["data"].append(os.path.join(base, f))
+    return next((min(v) for v in found.values() if v), None)
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and map value nullable, as Spark
+    makes the schema of every file source."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+#: Spark's types for INT32 ``Int(bitWidth, isSigned)`` annotations:
+#: unsigned ones widen to the next signed type
+_INT32_TYPES = {
+    (8, True): ByteType(), (16, True): ShortType(), (32, True): IntegerType(),
+    (8, False): ShortType(), (16, False): IntegerType(), (32, False): LongType(),
+}
+
+
+def _leaf_type(col, conf) -> DataType:
+    """Spark's type for one parquet primitive column, rule for rule as
+    ``ParquetToSparkSchemaConverter`` maps it; anything else raises."""
+    phys = col.physical_type
+    lt = json.loads(col.logical_type.to_json())
+    kind = lt["Type"]
+    if kind == "Decimal":
+        return DecimalType(lt["precision"], lt["scale"])
+    if phys == "BOOLEAN" and kind == "None":
+        return BooleanType()
+    if phys == "FLOAT" and kind == "None":
+        return FloatType()
+    if phys == "DOUBLE" and kind == "None":
+        return DoubleType()
+    if phys == "INT32":
+        if kind == "None":
+            return IntegerType()
+        if kind == "Date":
+            return DateType()
+        if kind == "Int" and (lt["bitWidth"], lt["isSigned"]) in _INT32_TYPES:
+            return _INT32_TYPES[(lt["bitWidth"], lt["isSigned"])]
+    if phys == "INT64":
+        if kind == "None" or (kind == "Int" and lt["isSigned"] and lt["bitWidth"] == 64):
+            return LongType()
+        if kind == "Int" and not lt["isSigned"] and lt["bitWidth"] == 64:
+            return DecimalType(20, 0)
+        if kind == "Timestamp":
+            if lt["timeUnit"] == "nanoseconds":
+                return LongType()
+            if lt["isAdjustedToUTC"] or conf("spark.sql.parquet.inferTimestampNTZ.enabled", "true") != "true":
+                return TimestampType()
+            return TimestampNTZType()
+    if phys == "INT96" and kind == "None" and conf("spark.sql.parquet.int96AsTimestamp", "true") == "true":
+        return TimestampType()
+    if phys == "BYTE_ARRAY":
+        if kind in ("String", "Enum", "JSON"):
+            return StringType()
+        if kind == "BSON":
+            return BinaryType()
+        if kind == "None":
+            return StringType() if conf("spark.sql.parquet.binaryAsString", "false") == "true" else BinaryType()
+    if phys == "FIXED_LEN_BYTE_ARRAY" and kind == "None":
+        return BinaryType()
+    raise ValueError(f"no footer mapping for {col.path}: {phys} {lt}")
+
+
+def _spark_type(arrow_type, leaves, conf) -> DataType:
+    """Rebuild one column's nesting from the Arrow view of the footer,
+    typing each leaf from its parquet column (in depth-first order) —
+    the Arrow leaf types are not Spark's (INT96 and ``isAdjustedToUTC``
+    timestamps, unsigned ints), the parquet ones are."""
+    import pyarrow as pa
+
+    if isinstance(arrow_type, pa.StructType):
+        return StructType([StructField(f.name, _spark_type(f.type, leaves, conf)) for f in arrow_type])
+    if isinstance(arrow_type, pa.MapType):
+        key = _spark_type(arrow_type.key_type, leaves, conf)
+        return MapType(key, _spark_type(arrow_type.item_type, leaves, conf))
+    if isinstance(arrow_type, (pa.ListType, pa.LargeListType, pa.FixedSizeListType)):
+        return ArrayType(_spark_type(arrow_type.value_type, leaves, conf))
+    return _leaf_type(next(leaves), conf)
+
+
+def parquet_footer_schema(spark: SparkSession, path: str) -> FooterSchema | None:
+    """The schema ``spark.read.parquet(path)`` would infer, derived from
+    one parquet footer on the driver instead of by a Spark job. Every
+    field is nullable, as Spark makes every file-source field; INT96 is
+    ``timestamp``; ``TIMESTAMP(isAdjustedToUTC=false)`` is
+    ``timestamp_ntz``; TIMESTAMP(NANOS) is ``long``. Hive partition
+    columns are not in it: Spark still discovers them from the path.
+    ``None`` when no local footer can be read or a type has no mapping
+    here; the caller then lets Spark infer."""
     import pyarrow.parquet as pq
 
-    f = path
-    if os.path.isdir(path):
-        cands = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if not cands:
-            return []
-        f = cands[0]
+    f = _schema_file(path)
+    if f is None:
+        return None
     try:
-        # Check the PARQUET schema, not the Arrow view of it: pyarrow
-        # surfaces Spark's INT96 timestamps as timestamp[ns] too, and those
-        # read natively — only true INT64/TIMESTAMP(NANOS) columns trip
-        # Spark's reader and need the nanos-as-long conversion.
-        md = pq.read_metadata(f).schema
-        cols = []
-        for i in range(len(md)):
-            col = md.column(i)
-            lt = str(col.logical_type)
-            if col.physical_type == "INT64" and "Timestamp" in lt and "nano" in lt:
-                cols.append(col.name)
-        return cols
-    except Exception:
-        return []
+        pf = pq.ParquetFile(f)
+        kv = pf.metadata.metadata or {}
+        cols = [pf.metadata.schema.column(i) for i in range(pf.metadata.num_columns)]
+        if _SPARK_SCHEMA_KEY in kv:
+            schema = _as_nullable(StructType.fromJson(json.loads(kv[_SPARK_SCHEMA_KEY])))
+        else:
+            leaves = iter(cols)
+            conf = spark.conf.get
+            schema = StructType(
+                [StructField(fld.name, _spark_type(fld.type, leaves, conf)) for fld in pf.schema_arrow]
+            )
+            if next(leaves, None) is not None:
+                raise ValueError(f"{f}: Arrow nesting does not cover every parquet column")
+    except (OSError, ValueError, KeyError, NotImplementedError):
+        # an unreadable footer or an unmapped type: Spark's own inference
+        # is always right, only slower
+        return None
+    nanos = [
+        c.path
+        for c in cols
+        if "." not in c.path and c.physical_type == "INT64" and '"nanoseconds"' in c.logical_type.to_json()
+    ]
+    return FooterSchema(schema, nanos)
+
+
+def _nanos_to_micros(df: DataFrame, cols: list[str]) -> DataFrame:
+    """TIMESTAMP(NANOS) columns arrive as epoch-nanos longs; integer
+    division keeps every microsecond exact at epoch-nanos magnitudes,
+    where a double would not."""
+    from pyspark.sql import functions as F
+
+    for c in cols:
+        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    return df
+
+
+def _footer(spark: SparkSession, path: str, options: dict[str, str]) -> FooterSchema | None:
+    """The footer schema of a read, or ``None`` when Spark must infer:
+    under ``mergeSchema`` (the option, or ``spark.sql.parquet.mergeSchema``),
+    which reads every footer, or when no local footer can be read."""
+    merge = options.get("mergeSchema", spark.conf.get("spark.sql.parquet.mergeSchema", "false"))
+    return None if str(merge).lower() == "true" else parquet_footer_schema(spark, path)
 
 
 def read_parquet(spark: SparkSession, path: str, options: dict[str, str] | None = None) -> DataFrame:
-    """Parquet scan tolerant of TIMESTAMP(NANOS) columns: reads nanos as
-    long (``spark.sql.legacy.parquet.nanosAsLong``) and converts to a
-    microsecond timestamp with integer division — no double-precision loss
-    on epoch-nanos magnitudes."""
-    from pyspark.sql import functions as F
+    """Parquet scan whose schema comes from the footer
+    (:func:`parquet_footer_schema`), so building the DataFrame runs no
+    schema-inference job. TIMESTAMP(NANOS) columns, which Spark's reader
+    only accepts as ``long``, come back as microsecond timestamps.
 
-    ns_cols = _parquet_nanos_cols(path)
-    reader = spark.read.options(**(options or {}))
-    if not ns_cols:
+    ``mergeSchema`` is the one inference path: Spark then reads every
+    footer itself and NANOS columns follow its own rules (rejected unless
+    the caller sets ``spark.sql.legacy.parquet.nanosAsLong``). Remote and
+    glob paths, whose footer is not a local file, are inferred too. No
+    session configuration changes."""
+    options = options or {}
+    reader = spark.read.options(**options)
+    footer = _footer(spark, path, options)
+    if footer is None:
         return reader.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = reader.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    return df
+    return _nanos_to_micros(reader.schema(footer.schema).parquet(path), footer.nanos)
 
 
 def load_schema_mapping(metadata_path: str) -> StructType:
@@ -176,14 +349,6 @@ def _read_xml(spark: SparkSession, spec: "InputSpec") -> DataFrame:
         ) from e
 
 
-def _sftp_download(sftp, remote_path: str, local_dir: str) -> str:
-    """Back-compat alias — the staged fetch lives in the shared
-    :mod:`..sftp` module now (the W9 sink shares it)."""
-    from ..sftp import download
-
-    return download(sftp, remote_path, local_dir)
-
-
 def _read_sftp(spark: SparkSession, spec: "InputSpec") -> DataFrame:
     """S11 (``spark.json:15`` dataSource sftp): no native Spark connector —
     stage the remote file(s) to a local temp dir over SFTP, then delegate
@@ -243,10 +408,11 @@ def _read_jdbc(spark: SparkSession, spec: "InputSpec") -> DataFrame:
 
 def read_stream_input(spark: SparkSession, spec: "InputSpec") -> DataFrame:
     """Streaming twin of :func:`read_input` for file sources: the schema
-    comes from the external mapping when given, else from a footer/sample
-    inference batch read (readStream requires an explicit schema). The
-    checkpoint (managed by the engine) makes repeated runs incremental —
-    the streaming-native form of the dialect's duplicateRunCheck."""
+    comes from the external mapping when given, else for parquet from the
+    footer, else from a sample inference batch read (readStream requires
+    an explicit schema). The checkpoint (managed by the engine) makes
+    repeated runs incremental — the streaming-native form of the
+    dialect's duplicateRunCheck."""
     if spec.data_source in ("database", "sftp"):
         raise ValueError(f"streaming not supported for dataSource={spec.data_source}")
     if not spec.path:
@@ -264,8 +430,11 @@ def read_stream_input(spark: SparkSession, spec: "InputSpec") -> DataFrame:
         return df
     if fmt not in _NATIVE_FORMATS:
         raise ValueError(f"streaming not supported for fileFormat={fmt}")
+    nanos: list[str] = []
     if spec.data_mapping and spec.metadata_path:
         schema = load_schema_mapping(spec.metadata_path)
+    elif fmt == "parquet" and (footer := _footer(spark, spec.path, spec.options)):
+        schema, nanos = footer
     else:
         schema = read_input(
             spark, replace(spec, streaming=False)
@@ -273,7 +442,7 @@ def read_stream_input(spark: SparkSession, spec: "InputSpec") -> DataFrame:
     reader = spark.readStream.options(**spec.options).schema(schema)
     if fmt == "csv":
         reader = reader.option("header", str(spec.header).lower())
-    df = reader.format(fmt).load(spec.path)
+    df = _nanos_to_micros(reader.format(fmt).load(spec.path), nanos)
     if spec.select_columns:
         df = df.select(*spec.select_columns)
     return df

@@ -11,6 +11,10 @@ TABLES = [
 ]
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "slow: a long-running end-to-end run (example scripts, multi-job pipelines)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_session(

@@ -1,0 +1,97 @@
+"""q1_pricing_summary and q5_local_supplier_volume sum revenue in exact
+DECIMAL arithmetic: on tables whose exact sums sit on a half-cent tie,
+Spark and the DuckDB oracle both round the tie up, as the exact answer
+does. Summed as doubles, in any order, the three order-1 lines below
+come to 203693.22499999998, which rounds to 203693.22."""
+
+import datetime
+from decimal import ROUND_HALF_UP, Decimal
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+DAY = datetime.datetime(1996, 6, 1)
+
+#: (orderkey, returnflag, linestatus, price, discount, tax): group A/F
+#: (order 1) has the exact discounted sum 203693.225, group N/O (order 2)
+#: the exact charge sum 49918.785. Only order 1 falls in q5's date window.
+LINES = [
+    (1, "A", "F", "99370.84", "0.07", "0.00"),
+    (1, "A", "F", "54238.74", "0.07", "0.00"),
+    (1, "A", "F", "66126.43", "0.08", "0.00"),
+    (2, "N", "O", "105.36", "0.03", "0.00"),
+    (2, "N", "O", "10233.05", "0.10", "0.02"),
+    (2, "N", "O", "44420.49", "0.09", "0.00"),
+]
+
+TABLES = {
+    "lineitem": pa.table({
+        "l_orderkey": pa.array([r[0] for r in LINES], pa.int64()),
+        "l_suppkey": pa.array([1] * len(LINES), pa.int64()),
+        "l_quantity": [1.0] * len(LINES),
+        "l_extendedprice": [float(r[3]) for r in LINES],
+        "l_discount": [float(r[4]) for r in LINES],
+        "l_tax": [float(r[5]) for r in LINES],
+        "l_returnflag": [r[1] for r in LINES],
+        "l_linestatus": [r[2] for r in LINES],
+        "l_shipdate": pa.array([DAY] * len(LINES), pa.timestamp("us")),
+    }),
+    "orders": pa.table({
+        "o_orderkey": pa.array([1, 2], pa.int64()),
+        "o_custkey": pa.array([1, 1], pa.int64()),
+        "o_orderdate": pa.array([DAY, DAY.replace(year=1995)], pa.timestamp("us")),
+    }),
+    "customer": pa.table({"c_custkey": pa.array([1], pa.int64()), "c_nationkey": pa.array([1], pa.int32())}),
+    "supplier": pa.table({"s_suppkey": pa.array([1], pa.int64()), "s_nationkey": pa.array([1], pa.int32())}),
+    "nation": pa.table({
+        "n_nationkey": pa.array([1], pa.int32()), "n_name": ["JAPAN"], "n_regionkey": pa.array([1], pa.int32()),
+    }),
+    "region": pa.table({"r_regionkey": pa.array([1], pa.int32()), "r_name": ["ASIA"]}),
+}
+
+
+def _exact(order: int, charge: bool = False) -> float:
+    """Half-up cents of one order's exact discounted (or charge) sum."""
+    total = Decimal(0)
+    for o, _, _, price, disc, tax in LINES:
+        if o == order:
+            v = Decimal(price) * (1 - Decimal(disc))
+            total += v * (1 + Decimal(tax)) if charge else v
+    return float(total.quantize(Decimal("0.01"), rounding=ROUND_HALF_UP))
+
+
+@pytest.fixture(scope="module")
+def tie_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("revenue_ties")
+    for name, table in TABLES.items():
+        pq.write_table(table, str(d / f"{name}.parquet"))
+    return str(d)
+
+
+def _both_engines(spark, tie_dir, key):
+    import __spark_entry__ as em
+
+    spark_rows = [r.asDict() for r in em.queries()[key](spark, tie_dir).collect()]
+    con = duckdb.connect()
+    for name in TABLES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{tie_dir}/{name}.parquet'")
+    rel = con.sql(em.oracle_sql()[key])
+    duck_rows = [dict(zip(rel.columns, r)) for r in rel.fetchall()]
+    return spark_rows, duck_rows
+
+
+def test_q1_half_cent_ties(spark, tie_dir):
+    assert (_exact(1), _exact(2, charge=True)) == (203693.23, 49918.79)
+    for rows in _both_engines(spark, tie_dir, "q1_pricing_summary"):
+        got = {(r["l_returnflag"], r["l_linestatus"]): (r["sum_disc_price"], r["sum_charge"]) for r in rows}
+        assert got == {
+            ("A", "F"): (_exact(1), _exact(1, charge=True)),
+            ("N", "O"): (_exact(2), _exact(2, charge=True)),
+        }
+
+
+def test_q5_half_cent_tie(spark, tie_dir):
+    spark_rows, duck_rows = _both_engines(spark, tie_dir, "q5_local_supplier_volume")
+    assert spark_rows == duck_rows == [{"n_name": "JAPAN", "revenue": _exact(1)}]
