@@ -34,11 +34,6 @@ def tokens(text: Column, sep: str = " ") -> Column:
     return F.split(text, sep)
 
 
-def regex_tokens(text: Column) -> Column:
-    """BPE-ish tokenizer: word pieces plus standalone punctuation."""
-    return F.split(F.trim(F.regexp_replace(text, r"(\w+|[^\w\s])", r" $1 ")), r"\s+")
-
-
 def token_count(text: Column, sep: str = " ") -> Column:
     return F.size(tokens(text, sep))
 

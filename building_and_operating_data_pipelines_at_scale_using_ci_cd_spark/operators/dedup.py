@@ -79,15 +79,6 @@ def minhash_from_hashes(hashed_col: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> Column:
-    """Single-expression form of shingle→signature (kept for API
-    compatibility). Prefer the staged two-projection form
-    (:func:`shingle_hashes` materialized, then
-    :func:`minhash_from_hashes`) on any hot path — see the performance
-    contract on :func:`minhash_from_hashes`."""
-    return minhash_from_hashes(shingle_hashes(shingle_col), num_hashes)
-
-
 def lsh_band_keys(sig_col: Column, num_hashes: int = 16, bands: int = 4) -> Column:
     """Band the signature: ``bands`` keys, each the md5 of one contiguous
     slice of the signature. Docs sharing any band key are candidates."""
@@ -246,25 +237,6 @@ def _candidates_from_shingles(
         )
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .distinct()
-    )
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """MinHash+LSH candidate generation: shingle → signature → band →
-    bucket self-join. Returns distinct (id_a, id_b) with id_a < id_b.
-
-    The self-join shuffles on the band key only; at scale, bucket skew is
-    bounded because identical-content floods share a band key — pair those
-    with :func:`exact_dedup_groups` first to collapse exact copies."""
-    return _candidates_from_shingles(
-        _hashed_shingle_df(df, id_col, text_col, shingle_n), num_hashes, bands
     )
 
 

@@ -6,7 +6,7 @@ training-data operators (MinHash near-dup, clustering, splits, packing,
 ANN) are multi-step DataFrame programs a SQL string can't express. This
 registry makes them config-callable as a peer of ``sqlQuery``::
 
-    {"operatorName": "minhash_near_dups",
+    {"operatorName": "minhashNearDups",
      "inputDFName": "documents",
      "operatorParams": {"id_col": "doc_id", "text_col": "text"},
      "outputDFName": "dups"}
@@ -18,11 +18,33 @@ and operator steps chain freely in one job and Catalyst still owns the
 whole plan (operators build lazy DataFrames; nothing executes until the
 load phase).
 
+BINDING: most entries are a :class:`_LibraryStep` — the module and name
+of a library function whose parameters ARE the step's parameters. The
+library signature is the one place a parameter type is declared; config
+values are converted from it by one rule (:func:`_call`):
+
+  - a parameter annotated ``int`` or ``float`` (with or without
+    ``| None``) gets ``int(value)`` / ``float(value)``, so a templated
+    ``"${bits}"`` (substitution always yields strings) and a literal
+    ``32`` run the same;
+  - a ``dict[str, int]`` / ``dict[str, float]`` parameter gets its values
+    converted the same way;
+  - ``None`` is never converted; ``bool``, ``str``, lists and other
+    unions (``bool | str``) pass through untouched.
+
+The step exposes the library signature (``__signature__``), so the CI dry
+run (``plans/validate.py``) flags a misspelt or missing parameter.
+Hand-written adapters remain only where a step does real work: building
+Columns, resolving other views by name, parsing JSON/list strings, the
+``delta*`` table DML family. They forward to the library through the
+same :func:`_call`, except the ``delta*`` adapters, which still convert
+their own version/retention values.
+
 CONSTRUCTION-JOB CONTRACT: a handful of steps run ONE small, bounded
 Spark job while BUILDING their plan (not at load time), because the
 right plan depends on a scalar fact about the data — ``domainCap``
 (hash-prefix shortfall check), ``rankSumTest`` (cardinality guard, only
-when ``max_values`` is set), ``nearDupPairs`` / ``ngramJaccardDups``
+when ``max_values`` is set), ``minhashNearDups`` / ``ngramJaccardPairs``
 (duplication-ratio probe, only when ``collapse_exact="auto"``), and
 ``generalizeToK`` (per-level suppression stats).  All of them route
 through :mod:`.guards`, which bounds each job by a design parameter;
@@ -31,16 +53,67 @@ see that module's docstring for the full contract.
 
 from __future__ import annotations
 
-from typing import Callable
+import importlib
+import inspect
+import re
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_NUMBERS = {"int": int, "float": float}
+_NUMBER_DICT = re.compile(r"dict\[str, *(int|float)\]")
 
-def _exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from .dedup import exact_dedup_groups
 
-    return exact_dedup_groups(df, text_col, id_col)
+def _convert(annotation: Any, value: Any) -> Any:
+    """One config value converted by its parameter's annotation (the
+    rule in the module docstring)."""
+    if value is None or annotation is inspect.Parameter.empty:
+        return value
+    if not isinstance(annotation, str):
+        annotation = inspect.formatannotation(annotation)
+    members = {m.strip() for m in annotation.split("|")} - {"None"}
+    if isinstance(value, dict):
+        for m in members:
+            hit = _NUMBER_DICT.fullmatch(m)
+            if hit:
+                kind = _NUMBERS[hit.group(1)]
+                return {k: v if v is None else kind(v) for k, v in value.items()}
+        return value
+    scalars = {m for m in members if not m.startswith("dict[")}
+    kind = _NUMBERS.get(scalars.pop()) if len(scalars) == 1 else None
+    return value if kind is None else kind(value)
+
+
+def _call(fn: Callable[..., Any], *args: Any, **kwargs: Any) -> Any:
+    """Call ``fn`` with config values converted by its own signature."""
+    sig = inspect.signature(fn)
+    bound = sig.bind(*args, **kwargs)
+    for name, value in bound.arguments.items():
+        p = sig.parameters[name]
+        if p.kind not in (p.VAR_POSITIONAL, p.VAR_KEYWORD):
+            bound.arguments[name] = _convert(p.annotation, value)
+    return fn(*bound.args, **bound.kwargs)
+
+
+class _LibraryStep:
+    """A registry entry bound straight to library function ``name`` in
+    ``module`` (relative to this package). The target is looked up on
+    every call: imports stay lazy, and a patched module attribute (a
+    tracer's wrapper, a test's monkeypatch) is the one that runs."""
+
+    def __init__(self, module: str, name: str) -> None:
+        self.module, self.name = module, name
+
+    def target(self) -> Callable[..., DataFrame]:
+        return getattr(importlib.import_module(self.module, __package__), self.name)
+
+    @property
+    def __signature__(self) -> inspect.Signature:
+        return inspect.signature(self.target())
+
+    def __call__(self, df: DataFrame, *args: Any, **kwargs: Any) -> DataFrame:
+        return _call(self.target(), df, *args, **kwargs)
 
 
 def _dedup_survivors(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -52,36 +125,6 @@ def _dedup_survivors(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.col("keep_id").alias(id_col)
     )
     return df.join(keep, id_col)
-
-
-def _minhash_near_dups(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .dedup import near_dup_pairs
-
-    return near_dup_pairs(df, id_col, text_col, **kw)
-
-
-def _near_dup_clusters(df: DataFrame, **kw) -> DataFrame:
-    from .dedup import near_dup_clusters
-
-    return near_dup_clusters(df, **kw)
-
-
-def _simhash(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .dedup import simhash_fingerprints
-
-    return simhash_fingerprints(df, id_col, text_col, **kw)
-
-
-def _winnow_near_dups(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .dedup import winnow_near_dup_pairs
-
-    return winnow_near_dup_pairs(df, id_col, text_col, **kw)
-
-
-def _embedding_near_dups(df: DataFrame, id_col: str, vec_col: str, **kw) -> DataFrame:
-    from .dedup import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(df, id_col, vec_col, **kw)
 
 
 def _text_enrich(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -98,50 +141,11 @@ def _text_enrich(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _hash_split(df: DataFrame, id_col: str, weights: dict, **kw) -> DataFrame:
-    from .sampling import hash_split
-
-    return hash_split(df, id_col, {k: float(v) for k, v in weights.items()}, **kw)
-
-
-def _stratified_sample(df: DataFrame, strata_col: str, fractions, id_col: str, **kw) -> DataFrame:
-    from .sampling import stratified_sample
-
-    if isinstance(fractions, dict):
-        fractions = {k: float(v) for k, v in fractions.items()}
-    else:
-        fractions = float(fractions)
-    return stratified_sample(df, strata_col, fractions, id_col, **kw)
-
-
-def _pack_sequential(df: DataFrame, order_col: str, size_col: str, budget, **kw) -> DataFrame:
-    from .sampling import pack_sequential
-
-    return pack_sequential(df, order_col, size_col, int(budget), **kw)
-
-
-def _shuffle_shards(df: DataFrame, id_col: str, n_shards, seed=0, **kw) -> DataFrame:
-    """Config shape: global pseudorandom shuffle + shard assignment for
-    training-output writes — chain into a file sink with
-    ``partitionBy: [shard]`` to land one pseudorandomly-ordered shard
-    per directory."""
-    from .sampling import shuffle_shards
-
-    return shuffle_shards(df, id_col, int(n_shards), seed=int(seed), **kw)
-
-
 def _pii_redact(df: DataFrame, text_col: str = "text", output_col: str | None = None) -> DataFrame:
     """Scrub PII shapes in ``text_col``; in place unless ``output_col``."""
     from ..functions.text import redact_pii
 
     return df.withColumn(output_col or text_col, redact_pii(F.col(text_col)))
-
-
-def _heavy_hitters(df: DataFrame, item_col: str, **kw) -> DataFrame:
-    from ..functions.sketches import heavy_hitters
-
-    kw = {k: int(v) for k, v in kw.items()}  # frac_num/frac_den/k
-    return heavy_hitters(df, item_col, **kw)
 
 
 def _bloom_filtered_join(df: DataFrame, key: str, build_view: str, **kw) -> DataFrame:
@@ -151,22 +155,7 @@ def _bloom_filtered_join(df: DataFrame, key: str, build_view: str, **kw) -> Data
     by-name resolution config SQL uses)."""
     from .scale import bloom_filtered_join
 
-    kw = {k: int(v) if k in ("k", "m") else v for k, v in kw.items()}
-    return bloom_filtered_join(df, df.sparkSession.table(build_view), key, **kw)
-
-
-def _random_projection(df: DataFrame, id_col: str, vec_col: str, out_dim, **kw) -> DataFrame:
-    from ..functions.similarity import random_projection
-
-    kw = {k: int(v) if k in ("in_dim", "scale") else v for k, v in kw.items()}
-    return random_projection(df, id_col, vec_col, int(out_dim), **kw)
-
-
-def _term_cooccurrence(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .corpus import term_cooccurrence
-
-    kw = {k: int(v) for k, v in kw.items()}
-    return term_cooccurrence(df, id_col, text_col, **kw)
+    return _call(bloom_filtered_join, df, df.sparkSession.table(build_view), key, **kw)
 
 
 def _bm25_score(df: DataFrame, id_col: str, text_col: str, query_terms, **kw) -> DataFrame:
@@ -179,8 +168,7 @@ def _bm25_score(df: DataFrame, id_col: str, text_col: str, query_terms, **kw) ->
         if isinstance(query_terms, str)
         else list(query_terms)
     )
-    kw = {k: (int(v) if k == "round_dp" else float(v)) for k, v in kw.items()}
-    return bm25_scores(df, id_col, text_col, terms, **kw)
+    return _call(bm25_scores, df, id_col, text_col, terms, **kw)
 
 
 def _rrf_fuse(df: DataFrame, id_col: str, other_views, rank_col: str = "rank", **kw) -> DataFrame:
@@ -195,59 +183,7 @@ def _rrf_fuse(df: DataFrame, id_col: str, other_views, rank_col: str = "rank", *
         else list(other_views)
     )
     dfs = [df] + [df.sparkSession.table(v) for v in views]
-    kw = {k: int(v) for k, v in kw.items()}
-    return rrf_fuse(dfs, id_col, rank_col=rank_col, **kw)
-
-
-def _phash_fingerprints(df: DataFrame, **kw) -> DataFrame:
-    """Config shape: input view carries (doc_id, payload) image rows."""
-    from ..functions.phash import phash_fingerprints
-
-    return phash_fingerprints(df, **kw)
-
-
-def _phash_near_pairs(df: DataFrame, **kw) -> DataFrame:
-    """Config shape: input view is a phashFingerprints output."""
-    from ..functions.phash import phash_near_pairs
-
-    return phash_near_pairs(df, **{k: int(v) for k, v in kw.items()})
-
-
-def _url_dedup(df: DataFrame, url_col: str, id_col: str) -> DataFrame:
-    """Config shape: crawl-hygiene URL dedup — canonicalize (case /
-    www. / default port / tracking params / param order / trailing
-    slash) then one groupBy on the canonical URL."""
-    from .web import url_dedup
-
-    return url_dedup(df, url_col, id_col)
-
-
-def _domain_cap(df: DataFrame, host_col: str, cap, id_col: str, **kw) -> DataFrame:
-    """Config shape: keep at most ``cap`` rows per registrable domain
-    (eTLD+1 over the bounded public-suffix excerpt), deterministic
-    portable-hash draw."""
-    from .web import domain_cap
-
-    if "seed" in kw:
-        kw["seed"] = int(kw["seed"])
-    return domain_cap(df, host_col, int(cap), id_col, **kw)
-
-
-def _logbucket_sketch(df: DataFrame, col: str, **kw) -> DataFrame:
-    """Config shape: the mergeable deterministic log-bucket histogram
-    (keep per-shard sketches; summing counts = the whole-corpus
-    sketch)."""
-    from ..functions.sketches import logbucket_sketch
-
-    return logbucket_sketch(df, col, **{k: int(v) for k, v in kw.items()})
-
-
-def _ohlc_bars(df: DataFrame, key_col: str, ts_col: str, value_col: str,
-               tie_col: str, **kw) -> DataFrame:
-    """Config shape: irregular ticks → OHLCV bars per (key, bucket)."""
-    from .timeseries import ohlc_bars
-
-    return ohlc_bars(df, key_col, ts_col, value_col, tie_col, **kw)
+    return _call(rrf_fuse, dfs, id_col, rank_col=rank_col, **kw)
 
 
 def _funnel(df: DataFrame, user_col: str, ts_col: str, type_col: str,
@@ -262,24 +198,6 @@ def _funnel(df: DataFrame, user_col: str, ts_col: str, type_col: str,
     return funnel(df, user_col, ts_col, type_col, steps)
 
 
-def _retention(df: DataFrame, user_col: str, ts_col: str, **kw) -> DataFrame:
-    """Config shape: daily cohort retention basis points."""
-    from .analytics import retention
-
-    return retention(df, user_col, ts_col, **{k: int(v) for k, v in kw.items()})
-
-
-def _transition_matrix(df: DataFrame, user_col: str, ts_col: str,
-                       type_col: str, **kw) -> DataFrame:
-    """Config shape: first-order Markov transition counts +
-    basis-point row probabilities over per-user event sequences."""
-    from .analytics import transition_matrix
-
-    if "min_count" in kw:
-        kw["min_count"] = int(kw["min_count"])
-    return transition_matrix(df, user_col, ts_col, type_col, **kw)
-
-
 def _dsir_select(df: DataFrame, target_view: str, id_col: str,
                  text_col: str, k, **kw) -> DataFrame:
     """Config shape: DSIR importance selection. The step's input view
@@ -287,9 +205,8 @@ def _dsir_select(df: DataFrame, target_view: str, id_col: str,
     rrfFuse view-resolution pattern)."""
     from .sampling import dsir_select
 
-    return dsir_select(
-        df, df.sparkSession.table(target_view), id_col, text_col, int(k),
-        **{key: int(v) for key, v in kw.items()},
+    return _call(
+        dsir_select, df, df.sparkSession.table(target_view), id_col, text_col, k, **kw
     )
 
 
@@ -305,31 +222,6 @@ def _expectations(df: DataFrame, rules) -> DataFrame:
     return expectations_report(df, [Expectation(**r) for r in spec])
 
 
-def _linear_fit(df: DataFrame, key_col: str, x_col: str, y_col: str,
-                scale="1000") -> DataFrame:
-    """Config shape: per-key OLS trend slope in integer 1/scale units."""
-    from .analytics import linear_fit
-
-    return linear_fit(df, key_col, x_col, y_col, scale=int(scale))
-
-
-def _exif_report(df: DataFrame) -> DataFrame:
-    """Config shape: per-image EXIF metadata report over (doc_id,
-    payload) — orientation/capture time/make/GPS micro-degrees, broken
-    EXIF null-routed."""
-    from ..functions.exif import exif_features
-
-    return exif_features(df)
-
-
-def _strip_exif(df: DataFrame) -> DataFrame:
-    """Config shape: privacy scrub — APP1..APP15 metadata removed from
-    (doc_id, payload) JPEGs, pixels untouched."""
-    from ..functions.exif import strip_exif_payloads
-
-    return strip_exif_payloads(df)
-
-
 def _k_anonymity(df: DataFrame, quasi_cols, k, **kw) -> DataFrame:
     """Config shape: k-anonymity (+ optional l-diversity) privacy audit.
     ``quasi_cols`` is a comma-separated list or JSON array."""
@@ -343,7 +235,7 @@ def _k_anonymity(df: DataFrame, quasi_cols, k, **kw) -> DataFrame:
             if quasi_cols.lstrip().startswith("[")
             else [c.strip() for c in quasi_cols.split(",") if c.strip()]
         )
-    return k_anonymity_report(df, list(quasi_cols), int(k), **kw)
+    return _call(k_anonymity_report, df, list(quasi_cols), k, **kw)
 
 
 def _redact_cards(df: DataFrame, text_col: str, out_col: str | None = None) -> DataFrame:
@@ -672,11 +564,7 @@ def _generalize_to_k(df: DataFrame, k, ladder_json: str, **kw) -> DataFrame:
 
     from .validation import generalize_to_k
 
-    if "max_suppression_bp" in kw:
-        kw["max_suppression_bp"] = int(kw["max_suppression_bp"])
-    if "l_diversity" in kw:
-        kw["l_diversity"] = int(kw["l_diversity"])
-    return generalize_to_k(df, int(k), _json.loads(ladder_json), **kw)
+    return _call(generalize_to_k, df, k, _json.loads(ladder_json), **kw)
 
 
 def _registrable_domain_psl(
@@ -688,27 +576,7 @@ def _registrable_domain_psl(
     publicsuffix.org-format file on the driver."""
     from .web import load_psl, registrable_domain_psl
 
-    return registrable_domain_psl(df, host_col, load_psl(psl_path), **kw)
-
-
-def _ab_test(df: DataFrame, arm_col: str, converted_col: str, **kw) -> DataFrame:
-    """Config shape: exact two-proportion A/B significance decision."""
-    from .analytics import ab_test
-
-    if "z2_x10000" in kw:
-        kw["z2_x10000"] = int(kw["z2_x10000"])
-    return ab_test(df, arm_col, converted_col, **kw)
-
-
-def _rank_sum_test(df: DataFrame, arm_col: str, value_col: str,
-                   arm_a: str, arm_b: str, **kw) -> DataFrame:
-    """Config shape: exact Mann–Whitney rank-sum significance."""
-    from .analytics import rank_sum_test
-
-    for k in ("z2_x10000", "max_values", "n_buckets_bits"):
-        if kw.get(k) is not None:
-            kw[k] = int(kw[k])
-    return rank_sum_test(df, arm_col, value_col, arm_a, arm_b, **kw)
+    return _call(registrable_domain_psl, df, host_col, load_psl(psl_path), **kw)
 
 
 def _psi_report(df: DataFrame, ref_view: str, value_col: str, **kw) -> DataFrame:
@@ -716,10 +584,7 @@ def _psi_report(df: DataFrame, ref_view: str, value_col: str, **kw) -> DataFrame
     reference view (the rrfFuse view-resolution pattern)."""
     from .validation import psi_report
 
-    return psi_report(
-        df.sparkSession.table(ref_view), df, value_col,
-        **{k: int(v) for k, v in kw.items()},
-    )
+    return _call(psi_report, df.sparkSession.table(ref_view), df, value_col, **kw)
 
 
 def _schema_diff(df: DataFrame, right_view: str) -> DataFrame:
@@ -736,7 +601,7 @@ def _kmv_intersect(df: DataFrame, other_view: str, k) -> DataFrame:
     names sketch B (the rrfFuse view-resolution pattern)."""
     from ..functions.sketches import kmv_intersect
 
-    return kmv_intersect(df, df.sparkSession.table(other_view), int(k))
+    return _call(kmv_intersect, df, df.sparkSession.table(other_view), k)
 
 
 def _link_records(df: DataFrame, right_view: str, block_keys: str,
@@ -760,28 +625,7 @@ def _link_records(df: DataFrame, right_view: str, block_keys: str,
         for a, b in (p.split(":") for p in block_keys.split(",") if p)
     ]
     comps = [FieldComparator(**c) for c in _json.loads(comparators)]
-    return link_records(df, right, blocks, comps, int(threshold), left_id, right_id)
-
-
-def _bar_returns(df: DataFrame, **kw) -> DataFrame:
-    """Config shape: per-bar returns + drawdown over an ohlcBars view."""
-    from .timeseries import bar_returns
-
-    return bar_returns(df, **kw)
-
-
-def _skew_report(df: DataFrame, key_col: str, **kw) -> DataFrame:
-    """Config shape: quantified join-key skew diagnosis."""
-    from .scale import skew_report
-
-    return skew_report(df, key_col, **{k: int(v) for k, v in kw.items()})
-
-
-def _triangle_count(df: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Config shape: exact triangle census of an edge-list view."""
-    from ..functions.graph import triangle_count
-
-    return triangle_count(df, src, dst)
+    return _call(link_records, df, right, blocks, comps, threshold, left_id, right_id)
 
 
 def _bfs_levels(df: DataFrame, sources_view: str, src: str = "src",
@@ -792,77 +636,11 @@ def _bfs_levels(df: DataFrame, sources_view: str, src: str = "src",
     (the rrfFuse view-resolution pattern)."""
     from ..functions.graph import bfs_levels
 
-    return bfs_levels(
-        df, df.sparkSession.table(sources_view), src, dst, node_col,
-        max_hops=int(max_hops),
+    return _call(
+        bfs_levels, df, df.sparkSession.table(sources_view), src, dst, node_col,
+        max_hops=max_hops,
         directed=str(directed).lower() in ("true", "1", "yes"),
     )
-
-
-def _geo_proximity_pairs(df: DataFrame, id_col: str, lat_col: str,
-                         lon_col: str, radius_micro) -> DataFrame:
-    """Config shape: all point pairs within a micro-degree radius."""
-    from .geo import proximity_pairs
-
-    return proximity_pairs(df, id_col, lat_col, lon_col, int(radius_micro))
-
-
-def _ohlc_tumbling(df: DataFrame, ts_col: str, key_col: str, value_col: str,
-                   tie_col: str, **kw) -> DataFrame:
-    """Config shape: streaming tumbling-window OHLCV (the ohlcBars
-    twin for a readStream input view)."""
-    from ..streaming.ops import ohlc_tumbling
-
-    return ohlc_tumbling(df, ts_col, key_col, value_col, tie_col, **kw)
-
-
-def _kmv_sketch(df: DataFrame, col: str, **kw) -> DataFrame:
-    """Config shape: the mergeable bottom-k rows (keep per-shard
-    sketches; union+rerank = the whole-corpus sketch)."""
-    from ..functions.sketches import kmv_sketch
-
-    return kmv_sketch(df, col, **{k: int(v) for k, v in kw.items()})
-
-
-def _decode_image(df: DataFrame, **kw) -> DataFrame:
-    """Config shape for the image lane: input view carries (doc_id,
-    payload) binary rows; PPM/PGM/BMP/JPEG/PNG/GIF decode natively."""
-    from ..functions.multimodal import decode_image
-
-    if "thumb" in kw:
-        kw["thumb"] = int(kw["thumb"])
-    return decode_image(df, **kw)
-
-
-def _audio_features(df: DataFrame) -> DataFrame:
-    from ..functions.audio import audio_features
-
-    return audio_features(df)
-
-
-def _sample_video_frames(df: DataFrame, **kw) -> DataFrame:
-    from ..functions.avi import sample_video_frames
-
-    if "every" in kw:
-        kw["every"] = int(kw["every"])
-    return sample_video_frames(df, **kw)
-
-
-def _chunk_documents(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .corpus import chunk_documents
-
-    kw = {k: int(v) if k in ("chunk_tokens", "overlap") else v for k, v in kw.items()}
-    return chunk_documents(df, id_col, text_col, **kw)
-
-
-def _frequent_ngrams(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .corpus import frequent_ngrams
-
-    if "n" in kw:
-        kw["n"] = int(kw["n"])
-    if "min_doc_freq" in kw:
-        kw["min_doc_freq"] = int(kw["min_doc_freq"])
-    return frequent_ngrams(df, id_col, text_col, **kw)
 
 
 def _decontaminate(
@@ -873,33 +651,14 @@ def _decontaminate(
     set, the rest the corpus to scrub."""
     from .corpus import contaminated_docs
 
-    if "n" in kw:
-        kw["n"] = int(kw["n"])
-    if "min_overlap" in kw:
-        kw["min_overlap"] = int(kw["min_overlap"])
-    return contaminated_docs(
+    return _call(
+        contaminated_docs,
         df.filter(f"NOT ({eval_predicate})"),
         df.filter(eval_predicate),
         id_col,
         text_col,
         **kw,
     )
-
-
-def _repetition_profile(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .corpus import repetition_profile
-
-    if "n" in kw:
-        kw["n"] = int(kw["n"])
-    return repetition_profile(df, id_col, text_col, **kw)
-
-
-def _remove_duplicate_spans(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .corpus import remove_duplicate_spans
-
-    if "span_tokens" in kw:
-        kw["span_tokens"] = int(kw["span_tokens"])
-    return remove_duplicate_spans(df, id_col, text_col, **kw)
 
 
 def _nfc_normalize(df: DataFrame, text_col: str = "text", output_col: str | None = None) -> DataFrame:
@@ -919,24 +678,6 @@ def _filter_with_reasons(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _semantic_dedup(df: DataFrame, id_col: str, vec_col: str, **kw) -> DataFrame:
-    from .dedup import semantic_dedup_keep
-
-    if "n_clusters" in kw:
-        kw["n_clusters"] = int(kw["n_clusters"])
-    if "threshold" in kw:
-        kw["threshold"] = float(kw["threshold"])
-    return semantic_dedup_keep(df, id_col, vec_col, **kw)
-
-
-def _fuzzy_self_join(df: DataFrame, id_col: str, text_col: str, **kw) -> DataFrame:
-    from .fuzzy import fuzzy_self_join
-
-    if "max_distance" in kw:
-        kw["max_distance"] = int(kw["max_distance"])
-    return fuzzy_self_join(df, id_col, text_col, **kw)
-
-
 def _query_split(df: DataFrame, query_predicate: str | None):
     """Shared convention for the similarity ops: one input view, queries
     selected by a SQL predicate (None/absent = self-search, every row is
@@ -948,32 +689,24 @@ def _topk_neighbors(df: DataFrame, id_col: str, vec_col: str,
                     query_predicate: str | None = None, **kw) -> DataFrame:
     from ..functions.similarity import topk_neighbors
 
-    if "k" in kw:
-        kw["k"] = int(kw["k"])
     q, c = _query_split(df, query_predicate)
-    return topk_neighbors(q, c, id_col, vec_col, **kw)
+    return _call(topk_neighbors, q, c, id_col, vec_col, **kw)
 
 
 def _ann_lsh_topk(df: DataFrame, id_col: str, vec_col: str, dim: int,
                   query_predicate: str | None = None, **kw) -> DataFrame:
     from ..functions.similarity import ann_topk_lsh
 
-    for key in ("k", "num_planes", "num_tables", "num_probes"):
-        if key in kw:
-            kw[key] = int(kw[key])
     q, c = _query_split(df, query_predicate)
-    return ann_topk_lsh(q, c, id_col, vec_col, dim=int(dim), **kw)
+    return _call(ann_topk_lsh, q, c, id_col, vec_col, dim=dim, **kw)
 
 
 def _ivf_topk(df: DataFrame, id_col: str, vec_col: str,
               query_predicate: str | None = None, **kw) -> DataFrame:
     from ..functions.similarity import ivf_topk
 
-    for key in ("k", "n_centroids", "n_probe", "kmeans_iters"):
-        if key in kw and kw[key] is not None:
-            kw[key] = int(kw[key])
     q, c = _query_split(df, query_predicate)
-    return ivf_topk(q, c, id_col, vec_col, **kw)
+    return _call(ivf_topk, q, c, id_col, vec_col, **kw)
 
 
 def _bloom_incremental(df: DataFrame, key_col: str, new_predicate: str, **kw) -> DataFrame:
@@ -982,33 +715,10 @@ def _bloom_incremental(df: DataFrame, key_col: str, new_predicate: str, **kw) ->
     rest the historical corpus (the ``_decontaminate`` convention)."""
     from .dedup import bloom_incremental_new
 
-    if "m" in kw:
-        kw["m"] = int(kw["m"])
-    if "k" in kw:
-        kw["k"] = int(kw["k"])
-    return bloom_incremental_new(
-        df.filter(new_predicate), df.filter(f"NOT ({new_predicate})"), key_col, **kw
+    return _call(
+        bloom_incremental_new,
+        df.filter(new_predicate), df.filter(f"NOT ({new_predicate})"), key_col, **kw,
     )
-
-
-def _domain_mix(df: DataFrame, strata_col: str, weights: dict, id_col: str, **kw) -> DataFrame:
-    from .sampling import domain_mix_sample
-
-    return domain_mix_sample(
-        df, strata_col, {k: int(v) for k, v in weights.items()}, id_col, **kw
-    )
-
-
-def _lm_cross_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    from ..functions.text import unigram_cross_entropy
-
-    return unigram_cross_entropy(df, id_col, text_col)
-
-
-def _bigram_lm(df: DataFrame, id_col: str, text_col: str, lam=0.7) -> DataFrame:
-    from ..functions.text import bigram_cross_entropy
-
-    return bigram_cross_entropy(df, id_col, text_col, lam=float(lam))
 
 
 def _bpe_tokenize(df: DataFrame, id_col: str, text_col: str, n_merges=24) -> DataFrame:
@@ -1017,7 +727,7 @@ def _bpe_tokenize(df: DataFrame, id_col: str, text_col: str, n_merges=24) -> Dat
     output stays sink-friendly)."""
     from ..functions.bpe import bpe_apply, bpe_train
 
-    merges = bpe_train(df, text_col, n_merges=int(n_merges))
+    merges = _call(bpe_train, df, text_col, n_merges=n_merges)
     out = bpe_apply(df, id_col, text_col, merges)
     return out.select(id_col, "n_tokens", F.array_join("tokens", " ").alias("tokens"))
 
@@ -1032,51 +742,12 @@ def _classifier_score(df: DataFrame, text_col: str, weights: list, output_col: s
     return df.withColumn(output_col, prob)
 
 
-def _tfidf_top_terms(df: DataFrame, id_col: str, text_col: str, top_n=3) -> DataFrame:
-    from ..functions.indexing import tfidf_top_terms
-
-    return tfidf_top_terms(df, id_col, text_col, top_n=int(top_n))
-
-
-def _inverted_index(
-    df: DataFrame, id_col: str, text_col: str, min_df=5, max_df=50, max_postings=10
-) -> DataFrame:
-    from ..functions.indexing import inverted_index
-
-    return inverted_index(
-        df, id_col, text_col,
-        min_df=int(min_df), max_df=int(max_df), max_postings=int(max_postings),
-    )
-
-
-def _weighted_sample(df: DataFrame, id_col: str, weight_col: str, k, **kw) -> DataFrame:
-    from .sampling import weighted_priority_sample
-
-    return weighted_priority_sample(df, id_col, weight_col, int(k), **kw)
-
-
-def _ngram_jaccard(
-    df: DataFrame, id_col: str, text_col: str,
-    n=3, threshold_num=3, threshold_den=5, **kw,
-) -> DataFrame:
-    from .dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(
-        df, id_col, text_col,
-        n=int(n), threshold_num=int(threshold_num), threshold_den=int(threshold_den),
-        **kw,
-    )
-
-
 def _profile_columns(df: DataFrame, columns=None, **kw) -> DataFrame:
     from .validation import profile_columns
 
     if "approx_distinct" in kw:
         kw["approx_distinct"] = str(kw["approx_distinct"]).lower() == "true"
-    if "rsd" in kw:
-        kw["rsd"] = float(kw["rsd"])
-    # distinct_mode ("exact"|"approx"|"both") passes through as a string
-    return profile_columns(df, list(columns) if columns else None, **kw)
+    return _call(profile_columns, df, list(columns) if columns else None, **kw)
 
 
 def _quantize_embeddings(df: DataFrame, id_col: str, vec_col: str, bits=8) -> DataFrame:
@@ -1086,7 +757,7 @@ def _quantize_embeddings(df: DataFrame, id_col: str, vec_col: str, bits=8) -> Da
 
     from ..functions.similarity import quantize_vector
 
-    qt = quantize_vector(F.col(vec_col), bits=int(bits))
+    qt = _call(quantize_vector, F.col(vec_col), bits=bits)
     return df.select(
         id_col,
         qt["scale"].alias("scale"),
@@ -1094,174 +765,96 @@ def _quantize_embeddings(df: DataFrame, id_col: str, vec_col: str, bits=8) -> Da
     )
 
 
-def _quality_quantile(df: DataFrame, id_col: str, text_col: str, q=0.75, accuracy=None) -> DataFrame:
-    from .corpus import quality_quantile_cut
-
-    return quality_quantile_cut(
-        df, id_col, text_col, q=float(q),
-        accuracy=None if accuracy is None else int(accuracy),
-    )
-
-
 def _kmeans(df: DataFrame, id_col: str, vec_col: str, k=8, iters=3) -> DataFrame:
     from ..functions.clustering import kmeans_fit_predict
 
     adaptive = k is None or str(k).lower() in ("", "none", "auto")
-    return kmeans_fit_predict(
-        df, id_col, vec_col, k=None if adaptive else int(k), iters=int(iters)
+    return _call(
+        kmeans_fit_predict, df, id_col, vec_col, k=None if adaptive else k, iters=iters
     )
-
-
-def _session_aggregate(df: DataFrame, ts_col: str, key: str, **kw) -> DataFrame:
-    """Streaming-capable session windows (works on batch views too)."""
-    from ..streaming.ops import session_aggregate
-
-    return session_aggregate(df, ts_col, key, **kw)
-
-
-def _tumbling_counts(df: DataFrame, ts_col: str, **kw) -> DataFrame:
-    from ..streaming.ops import tumbling_counts
-
-    return tumbling_counts(df, ts_col, **kw)
-
-
-def _streaming_dedup_op(df: DataFrame, keys: list, ts_col: str, **kw) -> DataFrame:
-    from ..streaming.ops import streaming_dedup
-
-    return streaming_dedup(df, list(keys), ts_col, **kw)
-
-
-def _session_close_events(df: DataFrame, key_col: str, ts_col: str, **kw) -> DataFrame:
-    from ..streaming.ops import session_close_events
-
-    kw = {k: int(v) if k == "gap_minutes" else v for k, v in kw.items()}
-    return session_close_events(df, key_col, ts_col, **kw)
-
-
-def _resample_ffill(df: DataFrame, key_col: str, ts_col: str, value_col: str, **kw) -> DataFrame:
-    from .timeseries import resample_ffill
-
-    return resample_ffill(df, key_col, ts_col, value_col, **kw)
-
-
-def _resample_interpolate(
-    df: DataFrame, key_col: str, ts_col: str, value_col: str, **kw
-) -> DataFrame:
-    from .timeseries import resample_interpolate
-
-    kw = {k: int(v) if k == "decimals" else v for k, v in kw.items()}
-    return resample_interpolate(df, key_col, ts_col, value_col, **kw)
 
 
 def _pq_topk(df: DataFrame, id_col: str, vec_col: str, **kw) -> DataFrame:
     from ..functions.similarity import pq_topk
 
-    kw = {
-        k: int(v) if k in ("k", "m", "k_codes", "iters", "shortlist") else v
-        for k, v in kw.items()
-    }
     # config steps have ONE input view: self-search (corpus queries itself)
-    return pq_topk(df, df, id_col, vec_col, **kw)
+    return _call(pq_topk, df, df, id_col, vec_col, **kw)
 
 
 def _knn_pagerank(df: DataFrame, id_col: str, vec_col: str, **kw) -> DataFrame:
     from ..functions.graph import knn_pagerank
 
-    kw = {
-        k: int(v)
-        if k in ("k", "iters", "n_probe", "top_n")
-        else (str(v).lower() == "true" if k == "weighted" else v)
-        for k, v in kw.items()
-    }
-    return knn_pagerank(df, id_col, vec_col, **kw)
+    if "weighted" in kw:
+        kw["weighted"] = str(kw["weighted"]).lower() == "true"
+    return _call(knn_pagerank, df, id_col, vec_col, **kw)
 
 
 def _ivfpq_topk(df: DataFrame, id_col: str, vec_col: str, **kw) -> DataFrame:
     from ..functions.similarity import ivfpq_topk
 
-    kw = {
-        k: int(v)
-        if k in ("k", "n_centroids", "n_probe", "m", "k_codes", "iters", "shortlist")
-        else v
-        for k, v in kw.items()
-    }
-    return ivfpq_topk(df, df, id_col, vec_col, **kw)
-
-
-def _cms_frequency(df: DataFrame, item_col: str, **kw) -> DataFrame:
-    from ..functions.sketches import cms_frequency
-
-    kw = {k: int(v) if k in ("depth", "width") else v for k, v in kw.items()}
-    return cms_frequency(df, item_col, **kw)
-
-
-def _zorder_layout(df: DataFrame, cols: list, **kw) -> DataFrame:
-    from .scale import zorder_layout
-
-    kw = {k: int(v) if k in ("bits", "num_partitions") else v for k, v in kw.items()}
-    return zorder_layout(df, list(cols), **kw)
+    return _call(ivfpq_topk, df, df, id_col, vec_col, **kw)
 
 
 OPERATORS: dict[str, Callable[..., DataFrame]] = {
-    "exactDedupGroups": _exact_dedup,
+    "exactDedupGroups": _LibraryStep(".dedup", "exact_dedup_groups"),
     "exactDedupSurvivors": _dedup_survivors,
-    "minhashNearDups": _minhash_near_dups,
-    "nearDupClusters": _near_dup_clusters,
-    "simhashFingerprints": _simhash,
-    "winnowNearDups": _winnow_near_dups,
-    "embeddingNearDups": _embedding_near_dups,
+    "minhashNearDups": _LibraryStep(".dedup", "near_dup_pairs"),
+    "nearDupClusters": _LibraryStep(".dedup", "near_dup_clusters"),
+    "simhashFingerprints": _LibraryStep(".dedup", "simhash_fingerprints"),
+    "winnowNearDups": _LibraryStep(".dedup", "winnow_near_dup_pairs"),
+    "embeddingNearDups": _LibraryStep(".dedup", "embedding_near_dup_pairs"),
     "textEnrich": _text_enrich,
-    "hashSplit": _hash_split,
-    "stratifiedSample": _stratified_sample,
-    "packSequential": _pack_sequential,
-    "shuffleShards": _shuffle_shards,
+    "hashSplit": _LibraryStep(".sampling", "hash_split"),
+    "stratifiedSample": _LibraryStep(".sampling", "stratified_sample"),
+    "packSequential": _LibraryStep(".sampling", "pack_sequential"),
+    "shuffleShards": _LibraryStep(".sampling", "shuffle_shards"),
     "piiRedact": _pii_redact,
-    "frequentNgrams": _frequent_ngrams,
-    "chunkDocuments": _chunk_documents,
+    "frequentNgrams": _LibraryStep(".corpus", "frequent_ngrams"),
+    "chunkDocuments": _LibraryStep(".corpus", "chunk_documents"),
     "decontaminate": _decontaminate,
-    "repetitionProfile": _repetition_profile,
-    "removeDuplicateSpans": _remove_duplicate_spans,
+    "repetitionProfile": _LibraryStep(".corpus", "repetition_profile"),
+    "removeDuplicateSpans": _LibraryStep(".corpus", "remove_duplicate_spans"),
     "nfcNormalize": _nfc_normalize,
     "filterWithReasons": _filter_with_reasons,
-    "semanticDedup": _semantic_dedup,
+    "semanticDedup": _LibraryStep(".dedup", "semantic_dedup_keep"),
     "topkNeighbors": _topk_neighbors,
-    "fuzzySelfJoin": _fuzzy_self_join,
+    "fuzzySelfJoin": _LibraryStep(".fuzzy", "fuzzy_self_join"),
     "annLshTopk": _ann_lsh_topk,
     "ivfTopk": _ivf_topk,
     "bloomIncrementalDedup": _bloom_incremental,
-    "domainMixSample": _domain_mix,
-    "lmCrossEntropy": _lm_cross_entropy,
-    "bigramLm": _bigram_lm,
+    "domainMixSample": _LibraryStep(".sampling", "domain_mix_sample"),
+    "lmCrossEntropy": _LibraryStep("..functions.text", "unigram_cross_entropy"),
+    "bigramLm": _LibraryStep("..functions.text", "bigram_cross_entropy"),
     "bpeTokenize": _bpe_tokenize,
     "classifierScore": _classifier_score,
-    "tfidfTopTerms": _tfidf_top_terms,
-    "invertedIndex": _inverted_index,
-    "weightedSample": _weighted_sample,
-    "ngramJaccardPairs": _ngram_jaccard,
+    "tfidfTopTerms": _LibraryStep("..functions.indexing", "tfidf_top_terms"),
+    "invertedIndex": _LibraryStep("..functions.indexing", "inverted_index"),
+    "weightedSample": _LibraryStep(".sampling", "weighted_priority_sample"),
+    "ngramJaccardPairs": _LibraryStep(".dedup", "ngram_jaccard_pairs"),
     "kmeansClusters": _kmeans,
-    "qualityQuantileCut": _quality_quantile,
+    "qualityQuantileCut": _LibraryStep(".corpus", "quality_quantile_cut"),
     "profileColumns": _profile_columns,
     "quantizeEmbeddings": _quantize_embeddings,
     "pqTopk": _pq_topk,
     "ivfpqTopk": _ivfpq_topk,
-    "resampleFfill": _resample_ffill,
-    "resampleInterpolate": _resample_interpolate,
+    "resampleFfill": _LibraryStep(".timeseries", "resample_ffill"),
+    "resampleInterpolate": _LibraryStep(".timeseries", "resample_interpolate"),
     "knnPagerank": _knn_pagerank,
-    "cmsFrequency": _cms_frequency,
-    "heavyHitters": _heavy_hitters,
+    "cmsFrequency": _LibraryStep("..functions.sketches", "cms_frequency"),
+    "heavyHitters": _LibraryStep("..functions.sketches", "heavy_hitters"),
     "bloomFilteredJoin": _bloom_filtered_join,
-    "zorderLayout": _zorder_layout,
-    "sessionAggregate": _session_aggregate,
-    "tumblingCounts": _tumbling_counts,
-    "streamingDedup": _streaming_dedup_op,
-    "sessionCloseEvents": _session_close_events,
-    "termCooccurrence": _term_cooccurrence,
-    "randomProjection": _random_projection,
+    "zorderLayout": _LibraryStep(".scale", "zorder_layout"),
+    "sessionAggregate": _LibraryStep("..streaming.ops", "session_aggregate"),
+    "tumblingCounts": _LibraryStep("..streaming.ops", "tumbling_counts"),
+    "streamingDedup": _LibraryStep("..streaming.ops", "streaming_dedup"),
+    "sessionCloseEvents": _LibraryStep("..streaming.ops", "session_close_events"),
+    "termCooccurrence": _LibraryStep(".corpus", "term_cooccurrence"),
+    "randomProjection": _LibraryStep("..functions.similarity", "random_projection"),
     "bm25Score": _bm25_score,
     "rrfFuse": _rrf_fuse,
-    "kmvSketch": _kmv_sketch,
-    "urlDedup": _url_dedup,
-    "domainCap": _domain_cap,
+    "kmvSketch": _LibraryStep("..functions.sketches", "kmv_sketch"),
+    "urlDedup": _LibraryStep(".web", "url_dedup"),
+    "domainCap": _LibraryStep(".web", "domain_cap"),
     "registrableDomainPsl": _registrable_domain_psl,
     "robotsFilter": _robots_filter,
     "robotsFilterFromBodies": _robots_filter_from_bodies,
@@ -1279,33 +872,33 @@ OPERATORS: dict[str, Callable[..., DataFrame]] = {
     "deltaVacuum": _delta_vacuum,
     "deltaChanges": _delta_changes,
     "redactCards": _redact_cards,
-    "exifReport": _exif_report,
-    "stripExif": _strip_exif,
+    "exifReport": _LibraryStep("..functions.exif", "exif_features"),
+    "stripExif": _LibraryStep("..functions.exif", "strip_exif_payloads"),
     "funnel": _funnel,
-    "retention": _retention,
-    "transitionMatrix": _transition_matrix,
+    "retention": _LibraryStep(".analytics", "retention"),
+    "transitionMatrix": _LibraryStep(".analytics", "transition_matrix"),
     "kmvIntersect": _kmv_intersect,
     "dsirSelect": _dsir_select,
     "bfsLevels": _bfs_levels,
     "expectations": _expectations,
-    "linearFit": _linear_fit,
-    "abTest": _ab_test,
+    "linearFit": _LibraryStep(".analytics", "linear_fit"),
+    "abTest": _LibraryStep(".analytics", "ab_test"),
     "psiReport": _psi_report,
     "schemaDiff": _schema_diff,
-    "rankSumTest": _rank_sum_test,
+    "rankSumTest": _LibraryStep(".analytics", "rank_sum_test"),
     "linkRecords": _link_records,
-    "ohlcTumbling": _ohlc_tumbling,
-    "triangleCount": _triangle_count,
-    "geoProximityPairs": _geo_proximity_pairs,
-    "barReturns": _bar_returns,
-    "skewReport": _skew_report,
-    "logbucketSketch": _logbucket_sketch,
-    "ohlcBars": _ohlc_bars,
-    "phashFingerprints": _phash_fingerprints,
-    "phashNearPairs": _phash_near_pairs,
-    "decodeImage": _decode_image,
-    "audioFeatures": _audio_features,
-    "sampleVideoFrames": _sample_video_frames,
+    "ohlcTumbling": _LibraryStep("..streaming.ops", "ohlc_tumbling"),
+    "triangleCount": _LibraryStep("..functions.graph", "triangle_count"),
+    "geoProximityPairs": _LibraryStep(".geo", "proximity_pairs"),
+    "barReturns": _LibraryStep(".timeseries", "bar_returns"),
+    "skewReport": _LibraryStep(".scale", "skew_report"),
+    "logbucketSketch": _LibraryStep("..functions.sketches", "logbucket_sketch"),
+    "ohlcBars": _LibraryStep(".timeseries", "ohlc_bars"),
+    "phashFingerprints": _LibraryStep("..functions.phash", "phash_fingerprints"),
+    "phashNearPairs": _LibraryStep("..functions.phash", "phash_near_pairs"),
+    "decodeImage": _LibraryStep("..functions.multimodal", "decode_image"),
+    "audioFeatures": _LibraryStep("..functions.audio", "audio_features"),
+    "sampleVideoFrames": _LibraryStep("..functions.avi", "sample_video_frames"),
 }
 
 

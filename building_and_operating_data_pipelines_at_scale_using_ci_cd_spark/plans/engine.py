@@ -5,7 +5,7 @@ PySpark-native re-implementation of the reference engine's entry point
 ``example-shareprice.py:78-88``) over the dialect in ``spark.json:1-108``.
 
 Execution model (SURVEY.md §3, entry point A):
-  1. apply per-job sparkConfig (spark.json:3-6)
+  1. apply per-job sparkConfig (spark.json:3-6), restored when the run ends
   2. duplicateRunCheck idempotency gate (spark.json:8)
   3. pre-execution bash hooks + junk-char cleanse flag (spark.json:26-31)
   4. phase_1: read primary + additional inputs, register temp views
@@ -35,16 +35,12 @@ from ..config import JobConfig
 from ..operators.cleansing import remove_junk_characters
 from ..operators.runledger import RunLedger, input_fingerprint
 from ..operators.validation import bad_fraction, count_within_threshold, dedup_split, null_pk_split
-from ..session import apply_job_confs
+from ..session import apply_job_confs, restore_confs
 from ..sinks.writers import archive_input, write_error_records, write_target
 
 
 class ThresholdExceeded(RuntimeError):
     """V4: error-lane share (or count variance) beyond thresholdLimit."""
-
-
-class DuplicateRun(RuntimeError):
-    """V5: this exact input set was already processed."""
 
 
 @dataclass
@@ -123,19 +119,21 @@ class Orchestrator:
                 "JobConfig has already had its placeholders resolved"
             )
 
-        apply_job_confs(self.spark, config.spark_config)
-        if config.temp_path:
-            # W13 (spark.json:9): engine scratch / checkpoint location
-            import os as _os
-
-            self.spark.sparkContext.setCheckpointDir(
-                _os.path.join(config.temp_path, "checkpoints")
-            )
         result = JobResult(job_name=config.name)
         import time as _time
 
         t_start = _time.monotonic()
+        # the job's sparkConfig holds for this run only: restored below,
+        # so it never leaks into the caller's session
+        prior_confs = apply_job_confs(self.spark, config.spark_config)
         try:
+            if config.temp_path:
+                # W13 (spark.json:9): engine scratch / checkpoint location
+                import os as _os
+
+                self.spark.sparkContext.setCheckpointDir(
+                    _os.path.join(config.temp_path, "checkpoints")
+                )
             return self._run_phases(config, result, _time)
         except BaseException as exc:
             result.error = f"{type(exc).__name__}: {exc}"
@@ -143,6 +141,7 @@ class Orchestrator:
         finally:
             result.total_secs = _time.monotonic() - t_start
             self._write_metrics(config, result)
+            restore_confs(self.spark, prior_confs)
 
     def _write_metrics(self, config: JobConfig, result: JobResult) -> None:
         """Run-observability sidecar: when ``configs.metricsPath`` is

@@ -73,14 +73,30 @@ def get_session(
     return builder.getOrCreate()
 
 
-def apply_job_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+def apply_job_confs(spark: SparkSession, confs: dict[str, str]) -> dict[str, str | None]:
     """Apply a job's ``sparkConfig`` map to a live session (O8 passthrough,
     reference ``spark.json:3-6``). Only runtime-mutable SQL confs take
-    effect on a live session; that covers the dialect's documented keys."""
+    effect on a live session; that covers the dialect's documented keys.
+    Returns each applied key's prior value (``None``: it was unset) for
+    :func:`restore_confs`."""
+    prior: dict[str, str | None] = {}
     for k, v in confs.items():
         try:
+            before = spark.conf.get(k, None)
             spark.conf.set(k, str(v))
         except Exception:
             # Static confs (executor memory etc.) can't change post-launch;
             # the reference applies those at submit time (deploy.yaml:16-18).
-            pass
+            continue
+        prior[k] = before
+    return prior
+
+
+def restore_confs(spark: SparkSession, prior: dict[str, str | None]) -> None:
+    """Undo :func:`apply_job_confs`: put back each key's prior value and
+    unset the keys that were unset before."""
+    for k, v in prior.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)

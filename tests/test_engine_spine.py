@@ -2,6 +2,7 @@
 view → sqlQuery transform → write parquet, end to end."""
 
 import duckdb
+import pytest
 
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark import Orchestrator
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.config import JobConfig
@@ -87,3 +88,27 @@ def test_config_parse_reference_template_shape(sf_dir):
     assert cfg.threshold_limit == 0.3
     assert cfg.transformations[0].output_df_name == "pricing_summary"
     assert cfg.targets[0].load_type == "truncateInsert"
+
+
+def test_job_spark_config_is_restored_after_run(spark, sf_dir, tmp_path):
+    """A job's sparkConfig holds for its run only. After a successful run
+    and after a failing one, a key that was set has its prior value again
+    and a key that was unset is unset again."""
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.sql.files.maxRecordsPerFile"
+    prior = spark.conf.get(set_key)
+    spark.conf.unset(unset_key)
+    job_confs = {set_key: str(int(prior) + 3), unset_key: "100000"}
+
+    ok = q1_config(sf_dir, str(tmp_path / "ok"))
+    ok["configs"]["sparkConfig"] = job_confs
+    Orchestrator(spark).run(ok)
+    assert spark.conf.get(set_key) == prior
+    assert spark.conf.get(unset_key, None) is None
+
+    bad = q1_config(sf_dir, str(tmp_path / "bad"))
+    bad["configs"]["sparkConfig"] = job_confs
+    bad["phase_2"]["data_transformations"][0]["sqlQuery"] = "SELECT no_such_col FROM lineitem"
+    with pytest.raises(Exception, match="no_such_col"):
+        Orchestrator(spark).run(bad)
+    assert spark.conf.get(set_key) == prior
+    assert spark.conf.get(unset_key, None) is None

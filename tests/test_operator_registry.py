@@ -1,6 +1,9 @@
 """Config-dialect operator steps (operatorName alongside sqlQuery):
 curation operators chained with SQL in one job config."""
 
+import inspect
+import json
+
 import pytest
 
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.registry import (
@@ -192,3 +195,61 @@ def test_similarity_ops_config_callable(spark, tables):
          "n_centroids": "8", "n_probe": "3"},
     )
     assert ivf.collect()
+
+
+def _simhash_cfg(sf_dir, bits):
+    cfg = _curation_cfg(sf_dir, "/tmp/unused_simhash")
+    del cfg["phase_3"]["target_record_insert"]
+    cfg["phase_2"]["data_transformations"] = [
+        {"operatorName": "simhashFingerprints", "inputDFName": "documents",
+         "operatorParams": {"id_col": "doc_id", "text_col": "text", "bits": bits},
+         "outputDFName": "fps"}
+    ]
+    return cfg
+
+
+def test_templated_numeric_param_matches_literal(spark, sf_dir):
+    """``${...}`` substitution always yields strings; a library-bound step
+    converts ``"bits": "${bits}"`` by the target's ``int`` annotation, so
+    the run equals the one with a literal int."""
+    templated = Orchestrator(spark).run(_simhash_cfg(sf_dir, "${bits}"), params={"bits": 16})
+    literal = Orchestrator(spark).run(_simhash_cfg(sf_dir, 16))
+    got = sorted(tuple(r) for r in templated.output.collect())
+    assert got and got == sorted(tuple(r) for r in literal.output.collect())
+    assert all(0 <= fp < 2 ** 16 for _, fp in got)
+
+
+def test_null_param_means_library_default(spark):
+    """``"k": null`` reaches ``heavy_hitters(k=None)`` unconverted (its
+    ``int | None`` default), not ``int(None)``."""
+    items = spark.createDataFrame([(c,) for c in "aaaaabbbc"], "item string")
+    params = json.loads('{"item_col": "item", "frac_num": "1", "frac_den": "4", "k": null}')
+    got = sorted(tuple(r) for r in apply_operator("heavyHitters", items, params).collect())
+    want = sorted(
+        tuple(r)
+        for r in apply_operator(
+            "heavyHitters", items, {"item_col": "item", "frac_num": 1, "frac_den": 4}
+        ).collect()
+    )
+    assert got and got == want
+
+
+def test_library_step_resolves_target_per_call(monkeypatch):
+    """A library-bound entry looks its target up on every call, so a
+    patched module attribute is the one that runs, and its signature is
+    the target's."""
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators import dedup
+
+    seen = {}
+
+    def fake(df, id_col: str, text_col: str, bits: int = 32, shingle_n: int = 3):
+        seen.update(df=df, id_col=id_col, bits=bits, shingle_n=shingle_n)
+        return "out"
+
+    monkeypatch.setattr(dedup, "simhash_fingerprints", fake)
+    op = OPERATORS["simhashFingerprints"]
+    assert op("frame", "doc_id", "text", "8", shingle_n="2") == "out"
+    assert seen == {"df": "frame", "id_col": "doc_id", "bits": 8, "shingle_n": 2}
+    assert list(inspect.signature(op).parameters) == [
+        "df", "id_col", "text_col", "bits", "shingle_n"
+    ]

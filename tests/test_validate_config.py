@@ -359,3 +359,24 @@ def test_dry_run_restores_replaced_view_and_drops_table_shadow(spark, tmp_path):
         assert spark.table("out").columns == ["tbl_col"]
     finally:
         spark.sql("DROP TABLE IF EXISTS out")
+
+
+def test_library_bound_operator_params_are_linted(spark, tmp_path):
+    """A library-bound step exposes its library signature, so the dry run
+    flags a misspelt parameter (``num_hash`` for ``num_hashes``) that a
+    ``**kw`` adapter used to forward unchecked."""
+    cfg = _base_cfg(tmp_path)
+    cfg["phase_2"]["data_transformations"].append({
+        "operatorName": "minhashNearDups", "inputDFName": "out",
+        "operatorParams": {"id_col": "o_orderkey", "text_col": "o_custkey",
+                           "num_hash": "32"},
+        "outputDFName": "pairs"})
+    cfg["phase_3"]["target_record_insert"][0]["dataFrameName"] = "pairs"
+    rep = validate_config(spark, cfg)
+    assert any(
+        "does not accept parameter(s) ['num_hash']" in str(f) for f in rep.errors
+    ), [str(f) for f in rep.findings]
+    cfg["phase_2"]["data_transformations"][1]["operatorParams"] = {
+        "id_col": "o_orderkey", "text_col": "o_custkey", "num_hashes": "32"}
+    rep = validate_config(spark, cfg)
+    assert not any("does not accept" in str(f) for f in rep.errors)

@@ -7,17 +7,20 @@ check is cheap enough to run every session:
   - every bench HEADLINE name resolves in ``queries()`` (or is a
     bench-local extra);
   - ``set(queries()) == set(oracle_sql())`` — zero no-oracle entries;
-  - the checked-50 cap: the rotation comment's arithmetic matches the
-    actual dict (50 first keys, cutoff where documented);
+  - the checked 50: ``CHECKED_HEAD`` holds 50 unique registry names and
+    ``queries()`` starts with exactly them;
   - README's "N queries/operators" claim equals the real count;
   - every config-registry operator name appears in COVERAGE.md or
-    README.md (operators exist to be discoverable).
+    README.md (operators exist to be discoverable);
+  - every config-registry step resolves to a callable whose first
+    parameter is the input DataFrame.
 
 Exit code 1 on any failure; prints each finding.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 import sys
@@ -30,6 +33,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> int:
     import bench
     import __spark_entry__ as entry
+    from pyspark.sql import DataFrame
+
     from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.registry import (
         OPERATORS,
     )
@@ -68,21 +73,17 @@ def main() -> int:
     if undocumented:
         failures.append(f"registry steps not mentioned in README/COVERAGE: {undocumented}")
 
-    # 5. rotation comment arithmetic: 'a + b + ... = 50 checked; ... N
-    #    total' (any number of + terms — round 9 has five cohorts)
-    src = open(os.path.join(REPO, "__spark_entry__.py")).read()
-    mc = re.search(
-        r"counts?.*?: ((?:\d+ \+ )+\d+) = 50 checked;.*?(\d+) total", src, re.S
-    )
-    if not mc:
-        failures.append("rotation comment arithmetic not found")
-    else:
-        terms = [int(t) for t in mc.group(1).split("+")]
-        total = int(mc.group(2))
-        if sum(terms) != 50:
-            failures.append(f"rotation comment sums to {sum(terms)}, not 50")
-        if total != len(q):
-            failures.append(f"rotation comment says {total} total, registry has {len(q)}")
+    # 5. the checked head: the strict correctness check covers the first
+    #    50 entries, and CHECKED_HEAD names them — 50 unique registry
+    #    names, in the order queries() yields them
+    head = entry.CHECKED_HEAD
+    if len(head) != 50 or len(set(head)) != 50:
+        failures.append(f"CHECKED_HEAD has {len(head)} names, {len(set(head))} unique; need 50")
+    unknown = sorted(set(head) - set(q))
+    if unknown:
+        failures.append(f"CHECKED_HEAD names not in queries(): {unknown}")
+    if list(q)[:50] != head:
+        failures.append("queries() does not start with CHECKED_HEAD")
 
     # 6. plan-audit allowlist hygiene (the round-6 failure mode: an entry
     #    shipped in the final commit without an allowlist decision or a
@@ -104,6 +105,24 @@ def main() -> int:
             failures.append(f"entries missing from PLAN_BASELINE.json: {stale}")
     else:
         failures.append("PLAN_BASELINE.json missing")
+
+    # 7. every config-registry step resolves (a library-bound step looks
+    #    its target up lazily, so a typo'd module or function name would
+    #    otherwise surface only at first use) to a callable whose first
+    #    parameter is the input frame
+    for name, op in OPERATORS.items():
+        try:
+            fn = op.target() if hasattr(op, "target") else op
+            first = next(iter(inspect.signature(fn).parameters.values()), None)
+        except Exception as exc:  # noqa: BLE001 — report, don't crash
+            failures.append(f"registry step {name} does not resolve: {type(exc).__name__}: {exc}")
+            continue
+        if (
+            first is None
+            or first.kind not in (first.POSITIONAL_ONLY, first.POSITIONAL_OR_KEYWORD)
+            or first.annotation not in ("DataFrame", DataFrame)
+        ):
+            failures.append(f"registry step {name}: first parameter is not the input DataFrame ({first})")
 
     for f in failures:
         print(f"FAIL {f}")
