@@ -192,17 +192,18 @@ def _deinterlace(raw: bytes, width: int, height: int, bpp: int) -> np.ndarray:
     scanline has no Up/Paeth predecessor) — unfilter each with the same
     machinery, then scatter onto the pass grid. Returns the same
     (height, width*bpp) layout as :func:`_unfilter`."""
+    passes = [p for p in _pass_dims(width, height) if p[4] and p[5]]
+    # checked BEFORE allocating: a corrupt header must not size the
+    # raster beyond what the inflated data holds
+    if sum(ph * (1 + pw * bpp) for *_, pw, ph in passes) != len(raw):
+        raise ValueError("corrupt PNG: interlaced raster length mismatch")
     full = np.zeros((height, width, bpp), dtype=np.uint8)
     pos = 0
-    for x0, y0, dx, dy, pw, ph in _pass_dims(width, height):
-        if pw == 0 or ph == 0:
-            continue
+    for x0, y0, dx, dy, pw, ph in passes:
         n = ph * (1 + pw * bpp)
         sub = _unfilter(raw[pos : pos + n], pw, ph, bpp)
         pos += n
         full[y0::dy, x0::dx, :] = sub.reshape(ph, pw, bpp)
-    if pos != len(raw):
-        raise ValueError("corrupt PNG: interlaced raster length mismatch")
     return full.reshape(height, width * bpp)
 
 

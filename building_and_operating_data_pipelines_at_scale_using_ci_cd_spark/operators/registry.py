@@ -37,8 +37,8 @@ run (``plans/validate.py``) flags a misspelt or missing parameter.
 Hand-written adapters remain only where a step does real work: building
 Columns, resolving other views by name, parsing JSON/list strings, the
 ``delta*`` table DML family. They forward to the library through the
-same :func:`_call`, except the ``delta*`` adapters, which still convert
-their own version/retention values.
+same :func:`_call`, so version/retention values convert by the library's
+annotations there too.
 
 CONSTRUCTION-JOB CONTRACT: a handful of steps run ONE small, bounded
 Spark job while BUILDING their plan (not at load time), because the
@@ -352,11 +352,7 @@ def _delta_restore(
     the post-restore snapshot."""
     from ..sources.delta_lite import read_delta_lite, restore_delta_lite
 
-    restore_delta_lite(
-        table_path,
-        version=int(version) if version is not None else None,
-        timestamp=timestamp,
-    )
+    _call(restore_delta_lite, table_path, version=version, timestamp=timestamp)
     return read_delta_lite(df.sparkSession, table_path)
 
 
@@ -468,12 +464,7 @@ def _delta_clone(
     never touch the source. Returns the clone's snapshot."""
     from ..sources.delta_lite import clone_delta_lite, read_delta_lite
 
-    clone_delta_lite(
-        source_path,
-        table_path,
-        version=int(version) if version is not None else None,
-        timestamp=timestamp,
-    )
+    _call(clone_delta_lite, source_path, table_path, version=version, timestamp=timestamp)
     return read_delta_lite(df.sparkSession, table_path)
 
 
@@ -492,11 +483,9 @@ def _delta_optimize(
         if isinstance(zorder_by, str)
         else (list(zorder_by) if zorder_by else None)
     )
-    optimize_delta_lite(
-        table_path,
-        df.sparkSession,
-        target_files=int(target_files),
-        zorder_by=cols,
+    _call(
+        optimize_delta_lite, table_path, df.sparkSession,
+        target_files=target_files, zorder_by=cols,
     )
     return read_delta_lite(df.sparkSession, table_path)
 
@@ -519,20 +508,16 @@ def _delta_changes(
     if (from_version is None) == (from_timestamp is None):
         raise ValueError("pass exactly one of from_version / from_timestamp")
     lo = (
-        int(from_version)
+        from_version
         if from_version is not None
         else _resolve_timestamp(table_path, from_timestamp)
     )
     hi = (
-        int(to_version)
-        if to_version is not None
-        else (
-            _resolve_timestamp(table_path, to_timestamp)
-            if to_timestamp is not None
-            else None
-        )
+        _resolve_timestamp(table_path, to_timestamp)
+        if to_version is None and to_timestamp is not None
+        else to_version
     )
-    return delta_changes(df.sparkSession, table_path, lo, hi)
+    return _call(delta_changes, df.sparkSession, table_path, lo, hi)
 
 
 def _delta_vacuum(
@@ -546,10 +531,9 @@ def _delta_vacuum(
     (unchanged) current snapshot for chaining."""
     from ..sources.delta_lite import read_delta_lite, vacuum_delta_lite
 
-    vacuum_delta_lite(
-        table_path,
-        retain_versions=int(retain_versions),
-        retention_hours=float(retention_hours) if retention_hours is not None else None,
+    _call(
+        vacuum_delta_lite, table_path,
+        retain_versions=retain_versions, retention_hours=retention_hours,
     )
     return read_delta_lite(df.sparkSession, table_path)
 

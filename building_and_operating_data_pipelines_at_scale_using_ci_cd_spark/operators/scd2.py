@@ -23,9 +23,10 @@ fingerprint, then a union of (history, closed, carried, inserted). At scale:
   - change detection via ``xxhash64`` over the compare columns avoids a
     wide column-by-column comparison and handles NULLs consistently.
   - the rewritten table is written once; history rows are carried through
-    unchanged (for file sinks this is the standard overwrite pattern; a
-    Delta MERGE would rewrite only matched files — noted as the upgrade
-    path when the delta package is present).
+    unchanged (for file sinks this is the standard overwrite pattern).
+    Into a delta-lite table, ``sources/delta_lite.merge_scd2_delta_lite``
+    feeds this merge only the files holding a matched current key and
+    rewrites just those.
 """
 
 from __future__ import annotations
@@ -40,6 +41,19 @@ SCD2_META_COLS = [EFF_START, EFF_END, IS_CURRENT]
 
 #: open-ended "current" sentinel kept finite so sorting/serialization is sane
 _HIGH_TS = "9999-12-31 23:59:59"
+
+
+def require_scd2_columns(columns: list[str], target: str = "") -> None:
+    """Refuse an existing target that lacks the SCD2 meta columns: such a
+    table (e.g. one a simpleInsert loaded before) is almost certainly a
+    config mistake, and merging into it would destroy it."""
+    if not set(SCD2_META_COLS) <= set(columns):
+        where = repr(target) if target else f"with columns {list(columns)}"
+        raise ValueError(
+            f"scdType2Insert target {where} exists but lacks the SCD2 meta "
+            f"columns {SCD2_META_COLS}; refusing to overwrite a non-SCD2 "
+            "table — point the target elsewhere or migrate it"
+        )
 
 
 def _fingerprint(cols: list[str]):
@@ -103,6 +117,7 @@ def scd2_merge(
         incoming = _dedup_incoming(incoming, keys, [c for c in incoming.columns if c not in keys])
         return scd2_initial(incoming, effective_ts if effective_ts is not None else F.current_timestamp())
 
+    require_scd2_columns(target.columns)
     data_cols = [c for c in target.columns if c not in SCD2_META_COLS]
     missing = set(data_cols) - set(incoming.columns)
     if missing:

@@ -412,61 +412,24 @@ def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> None:
             return
         if not _has_delta_spark():
             # the delta-lite lane: real transaction-log MERGE that rewrites
-            # only matched files (sources/delta_lite.py), replacing the
-            # full-table swap the plain file sink needs.
-            from ..sources.delta_lite import (
-                is_delta_table,
-                merge_scd2_delta_lite,
-                read_delta_lite,
-                write_delta_lite,
-            )
+            # only matched files (and creates the table on first load),
+            # replacing the full-table swap the plain file sink needs
+            from ..sources.delta_lite import merge_scd2_delta_lite
 
-            if is_delta_table(spec.path):
-                existing_cols = read_delta_lite(spark, spec.path).columns
-                if not set(SCD2_META_COLS) <= set(existing_cols):
-                    raise ValueError(
-                        f"scdType2Insert target '{spec.path}' exists but lacks "
-                        f"the SCD2 meta columns {SCD2_META_COLS}; refusing to "
-                        "overwrite a non-SCD2 table"
-                    )
-                merge_scd2_delta_lite(
-                    spark,
-                    spec.path,
-                    df,
-                    keys=keys,
-                    compare_cols=spec.scd2_compare_cols or None,
-                    effective_ts=spec.scd2_effective_col,
-                )
-            else:
-                # initial load through scd2_merge's None-target lane so
-                # dedup/versioning semantics match the file sink exactly
-                write_delta_lite(
-                    scd2_merge(
-                        None,
-                        df,
-                        keys=keys,
-                        compare_cols=spec.scd2_compare_cols or None,
-                        effective_ts=spec.scd2_effective_col,
-                    ),
-                    spec.path,
-                    mode="errorifexists",
-                )
+            merge_scd2_delta_lite(
+                spark,
+                spec.path,
+                df,
+                keys=keys,
+                compare_cols=spec.scd2_compare_cols or None,
+                effective_ts=spec.scd2_effective_col,
+            )
             return
 
-    target = None
-    if _fs_exists(spark, spec.path):
-        existing = spark.read.format(fmt).load(spec.path)
-        if set(SCD2_META_COLS) <= set(existing.columns):
-            target = existing
-        elif existing.columns:
-            # an existing non-SCD2 table here is almost certainly a config
-            # mistake (e.g. the path previously loaded via simpleInsert);
-            # silently replacing it with an initial load would destroy it.
-            raise ValueError(
-                f"scdType2Insert target '{spec.path}' exists but lacks the "
-                f"SCD2 meta columns {SCD2_META_COLS}; refusing to overwrite "
-                "a non-SCD2 table — point the target elsewhere or migrate it"
-            )
+    # scd2_merge refuses an existing table that lacks the SCD2 meta columns
+    target = (
+        spark.read.format(fmt).load(spec.path) if _fs_exists(spark, spec.path) else None
+    )
     merged = scd2_merge(
         target,
         df,

@@ -328,10 +328,12 @@ def _check_writable(snap: "DeltaSnapshot") -> None:
     """Refuse to WRITE to a table whose protocol demands writer features
     this engine does not implement (reading such tables may still be
     fine — the reader gate is separate and checked at replay). Writer
-    version 3 = CHECK constraints, which :func:`_rule_observe` now
-    enforces on every row-adding path (inside the staging write); anything newer (generated
-    columns, CDF files, column mapping, deletion vectors) would be
-    silently violated by a blind write, so it raises instead."""
+    version 3 = CHECK constraints, which :func:`_rule_observe` enforces
+    inside the staging write of every row-adding path (``write_delta_lite``
+    and :func:`_pruned_rewrite`, which every data-removing DML shares);
+    anything newer (generated columns, CDF files, column mapping,
+    deletion vectors) would be silently violated by a blind write, so it
+    raises instead."""
     proto = snap.protocol or _PROTOCOL
     w = int(proto.get("minWriterVersion", 2))
     if w <= 3:
@@ -2330,35 +2332,49 @@ def _source_key_conjuncts(source: DataFrame, on_keys: list) -> list:
 def _pruned_rewrite(
     spark: SparkSession,
     table_path: str,
-    match_files_df,
-    rewrite_fn,
+    snap: DeltaSnapshot,
+    conjuncts: list,
+    match,
+    rewrite,
     operation: str,
     op_params: dict,
-    snap: DeltaSnapshot | None = None,
     out_schema: StructType | None = None,
     new_metadata: dict | None = None,
-    read_set: list | None = None,
-    conjuncts: list | None = None,
+    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
-    """Shared DML skeleton: find the files holding rows matched by
-    ``match_files_df`` (a DataFrame of rows from the tagged table that
-    the operation touches), run ``rewrite_fn(pruned_rows)`` over ONLY
-    those files' rows, and commit remove(matched)+add(rewritten).
-    Untouched files never move. Driver traffic = file paths.
+    """The one transaction path of every data-removing DML (DELETE,
+    UPDATE, MERGE, replaceWhere, SCD2 MERGE). The caller supplies its
+    predicate bound (``conjuncts``), ``match(tagged)`` — the rows of the
+    ``__file``-tagged candidate scan that the operation touches — and
+    ``rewrite(rows)``, the new content of the matched files; this
+    skeleton does the rest:
+
+      - refuses tables whose writer protocol it cannot honour;
+      - scans only the files the conjuncts' stats cannot rule out, and
+        keys the matched files as the snapshot does (table-relative for
+        owned files, absolute for files a shallow CLONE references);
+      - applies the appendOnly rule when anything is removed;
+      - sizes the output from the matched bytes and stages it under the
+        table's CHECK constraints / invariants;
+      - commits remove(matched) + add(rewritten) in one version, with the
+        disjoint-transaction retry over the scanned files
+        (:func:`_commit_dml`), then checkpoints every
+        ``checkpoint_interval`` commits.
+
+    Untouched files never move; driver traffic = file paths.
 
     ``out_schema`` / ``new_metadata`` carry an ADDITIVE schema
     evolution (MERGE ``merge_schema=True``): the rewritten rows cast to
     the evolved schema and the metaData action rides the same commit,
-    so the upsert + evolution are one atomic version.
-
-    ``read_set`` (the candidate files this DML scanned) + ``conjuncts``
-    (its predicate bound) enable the disjoint-transaction commit retry
-    (:func:`_commit_dml`); without them a lost commit race raises."""
-    if snap is None:
-        snap = load_snapshot(table_path)
+    so the upsert + evolution are one atomic version."""
+    _check_writable(snap)
     out_schema = out_schema or snap.schema
+    cand = _candidate_files(snap, conjuncts)
+    tagged = _read_files(spark, snap, cand).withColumn(
+        "__file", F.input_file_name()
+    )
     matched_files = [
-        r["__file"] for r in match_files_df.select("__file").distinct().collect()
+        r["__file"] for r in match(tagged).select("__file").distinct().collect()
     ]
 
     def _snapshot_key(f: str) -> str:
@@ -2376,7 +2392,7 @@ def _pruned_rewrite(
         # dataChange=true removes — a DML that matched nothing is legal
         _check_append_only(snap, operation)
     pruned = _read_files(spark, snap, rel_matched)
-    rewritten = rewrite_fn(pruned).select(
+    rewritten = rewrite(pruned).select(
         *[F.col(f.name).cast(f.dataType) for f in out_schema.fields]
     )
     # output sizing (round 13, guide §6): without it the staged rewrite
@@ -2399,7 +2415,11 @@ def _pruned_rewrite(
         {
             "commitInfo": {
                 "operation": operation,
-                "operationParameters": {**op_params, "matchedFiles": len(rel_matched)},
+                "operationParameters": {
+                    **op_params,
+                    "candidateFiles": len(cand),
+                    "matchedFiles": len(rel_matched),
+                },
                 "engineInfo": "delta-lite (PySpark analytics engine)",
             }
         }
@@ -2422,10 +2442,8 @@ def _pruned_rewrite(
         rules=_row_rules(new_metadata or snap.metadata), operation=operation,
     )
     actions.extend(new_adds)
-    if read_set is not None:
-        return _commit_dml(table_path, snap, actions, set(read_set), conjuncts or [])
-    version = snap.version + 1
-    _commit(table_path, version, actions)
+    version = _commit_dml(table_path, snap, actions, set(cand), conjuncts)
+    _maybe_checkpoint(table_path, version, checkpoint_interval)
     return version
 
 
@@ -2437,13 +2455,6 @@ def delete_delta_lite(spark: SparkSession, table_path: str, condition: str) -> i
     partition values) prove the predicate unsatisfiable are never
     read — on an unpartitioned 100-TB table a keyed DELETE touches a
     handful of files, not all of them."""
-    snap = load_snapshot(table_path)
-    _check_writable(snap)
-    conj = _parse_conjuncts(condition)
-    cand = _candidate_files(snap, conj)
-    tagged = _read_files(spark, snap, cand).withColumn(
-        "__file", F.input_file_name()
-    )
     # SQL DELETE semantics: only rows where the predicate is TRUE are
     # deleted — a NULL predicate row in a rewritten file must SURVIVE
     # (plain ~cond would drop it: NOT(NULL) filters as not-true)
@@ -2451,13 +2462,12 @@ def delete_delta_lite(spark: SparkSession, table_path: str, condition: str) -> i
     return _pruned_rewrite(
         spark,
         table_path,
-        tagged.filter(F.expr(condition)),
+        load_snapshot(table_path),
+        _parse_conjuncts(condition),
+        lambda tagged: tagged.filter(F.expr(condition)),
         lambda rows: rows.filter(keep),
         "DELETE",
-        {"predicate": condition, "candidateFiles": len(cand)},
-        snap=snap,
-        read_set=cand,
-        conjuncts=conj,
+        {"predicate": condition},
     )
 
 
@@ -2468,13 +2478,6 @@ def update_delta_lite(
     (including the stats/partition data-skipping pre-pass on the
     match-finding scan); ``set_exprs`` maps column → SQL expression
     (evaluated only on matching rows)."""
-    snap = load_snapshot(table_path)
-    _check_writable(snap)
-    conj = _parse_conjuncts(condition)
-    cand = _candidate_files(snap, conj)
-    tagged = _read_files(spark, snap, cand).withColumn(
-        "__file", F.input_file_name()
-    )
     cond = F.expr(condition)
 
     def rewrite(rows: DataFrame) -> DataFrame:
@@ -2492,17 +2495,12 @@ def update_delta_lite(
     return _pruned_rewrite(
         spark,
         table_path,
-        tagged.filter(cond),
+        load_snapshot(table_path),
+        _parse_conjuncts(condition),
+        lambda tagged: tagged.filter(cond),
         rewrite,
         "UPDATE",
-        {
-            "predicate": condition,
-            "set": sorted(set_exprs),
-            "candidateFiles": len(cand),
-        },
-        snap=snap,
-        read_set=cand,
-        conjuncts=conj,
+        {"predicate": condition, "set": sorted(set_exprs)},
     )
 
 
@@ -2548,7 +2546,6 @@ def merge_delta_lite(
     table.
     """
     snap = load_snapshot(table_path)
-    _check_writable(snap)
     declared = snap.schema
     declared_names = {f.name for f in declared.fields}
     extra = [c for c in source.columns if c not in declared_names]
@@ -2574,16 +2571,7 @@ def merge_delta_lite(
     # (a groupBy'd snapshot, a join) re-executes up to 4×, and a
     # nondeterministic source could diverge between the passes.
     source = source.localCheckpoint(eager=False)
-    key_conj = _source_key_conjuncts(source, on_keys)
-    cand = _candidate_files(snap, key_conj)
-    target = _read_files(spark, snap, cand)
-    tagged = target.withColumn("__file", F.input_file_name())
     src_keys = source.select(*on_keys).dropDuplicates(on_keys)
-    # no broadcast hint: Catalyst/AQE picks broadcast for a small key
-    # set and falls back to a shuffled semi-join when the MERGE source
-    # is batch-sized — an unconditional broadcast would cap the source
-    # at driver memory
-    matched = tagged.join(src_keys, on=on_keys, how="leftsemi")
 
     # source side: keys + src_-prefixed payload, tagged so the left join
     # marks matched target rows; one deterministic row per key
@@ -2591,16 +2579,6 @@ def merge_delta_lite(
         *[F.col(k) for k in on_keys],
         *[F.col(c).alias(f"src_{c}") for c in source.columns if c not in on_keys],
     ).dropDuplicates(on_keys).withColumn("__src_hit", F.lit(True))
-
-    # inserts computed against the PRE-merge snapshot and unioned into
-    # the rewrite, so the whole MERGE is ONE atomic commit
-    inserts = (
-        source.join(target.select(*on_keys).dropDuplicates(on_keys), on=on_keys, how="leftanti")
-        .dropDuplicates(on_keys)
-        .select(*[F.col(f.name) for f in out_schema.fields])
-        if when_not_matched_insert
-        else None
-    )
 
     def rewrite(rows: DataFrame) -> DataFrame:
         out = rows.join(marker, on=on_keys, how="left")
@@ -2638,20 +2616,34 @@ def merge_delta_lite(
                 for f in out_schema.fields
             ]
         )
-        return out.unionByName(inserts) if inserts is not None else out
+        if not when_not_matched_insert:
+            return out
+        # inserts: source keys absent from the PRE-merge table, unioned
+        # into the rewrite so the whole MERGE is ONE atomic commit. Every
+        # target row holding a source key sits in a matched file, so the
+        # matched files' rows are the whole anti-join side.
+        inserts = (
+            source.join(rows.select(*on_keys), on=on_keys, how="leftanti")
+            .dropDuplicates(on_keys)
+            .select(*[F.col(f.name) for f in out_schema.fields])
+        )
+        return out.unionByName(inserts)
 
     return _pruned_rewrite(
         spark,
         table_path,
-        matched,
+        snap,
+        _source_key_conjuncts(source, on_keys),
+        # no broadcast hint: Catalyst/AQE picks broadcast for a small key
+        # set and falls back to a shuffled semi-join when the MERGE source
+        # is batch-sized — an unconditional broadcast would cap the source
+        # at driver memory
+        lambda tagged: tagged.join(src_keys, on=on_keys, how="leftsemi"),
         rewrite,
         "MERGE",
-        {"on": on_keys, "candidateFiles": len(cand)},
-        snap=snap,
+        {"on": on_keys},
         out_schema=out_schema,
         new_metadata=new_metadata,
-        read_set=cand,
-        conjuncts=key_conj,
     )
 
 
@@ -2689,29 +2681,18 @@ def _replace_where(
             f"replaceWhere violation: input rows do not all satisfy "
             f"{condition!r}"
         )
-    conj = _parse_conjuncts(condition)
-    cand = _candidate_files(snap, conj)
-    tagged = _read_files(spark, snap, cand).withColumn(
-        "__file", F.input_file_name()
-    )
     keep = ~F.coalesce(cond, F.lit(False))
-    version = _pruned_rewrite(
+    return _pruned_rewrite(
         spark,
         table_path,
-        tagged.filter(cond),
+        snap,
+        _parse_conjuncts(condition),
+        lambda tagged: tagged.filter(cond),
         lambda rows: rows.filter(keep).unionByName(aligned),
         "WRITE",
-        {
-            "mode": "OVERWRITE",
-            "replaceWhere": condition,
-            "candidateFiles": len(cand),
-        },
-        snap=snap,
-        read_set=cand,
-        conjuncts=conj,
+        {"mode": "OVERWRITE", "replaceWhere": condition},
+        checkpoint_interval=checkpoint_interval,
     )
-    _maybe_checkpoint(table_path, version, checkpoint_interval)
-    return version
 
 
 def delta_changes(
@@ -3056,20 +3037,25 @@ def merge_scd2_delta_lite(
     keys: list,
     compare_cols: list | None = None,
     effective_ts=None,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
-    """SCD2 MERGE against a delta-lite table, rewriting ONLY matched files.
+    """SCD2 MERGE of the ``incoming`` snapshot into a delta-lite table
+    (the scdType2Insert load), rewriting ONLY matched files; returns the
+    committed version.
 
-    File pruning (the at-scale point of MERGE): one semi-join of the
-    current slice tagged with ``input_file_name()`` against the incoming
-    keys finds the files that hold a matched CURRENT row; every other
-    file is untouched. Those files' rows — current AND history alike,
+    No table at ``table_path`` yet: the first load creates it through
+    ``scd2_merge``'s None-target lane, so dedup/versioning match the file
+    sink exactly. An existing table must carry the SCD2 meta columns.
+
+    Otherwise the merge runs through :func:`_pruned_rewrite`, the path
+    every data-removing DML shares (CHECK constraints, appendOnly,
+    shallow-clone file keys, commit retry, checkpoints): stats skipping
+    on the incoming key range, then one semi-join of the candidate files'
+    CURRENT rows against the incoming keys finds the files that hold a
+    matched current row. Those files' rows — current AND history alike,
     since a parquet file may hold both — are re-merged with the standard
     ``scd2_merge`` lanes (feeding it only these rows is sufficient:
     untouched files contain no matched current key, so their merge would
     be the identity). Brand-new keys insert regardless of pruning.
-    Driver traffic is one ``collect()`` of distinct file PATHS, bounded
-    by the table's file count, never rows.
 
     Partitioned tables work the same way — the pruned read recovers the
     partition columns from the matched files' hive paths, and the
@@ -3078,74 +3064,31 @@ def merge_scd2_delta_lite(
     handled naturally: its old current row is closed in the old
     partition's rewrite and the new version inserts into the new one).
     """
-    from ..operators.scd2 import IS_CURRENT, scd2_merge
+    from ..operators.scd2 import IS_CURRENT, require_scd2_columns, scd2_merge
 
-    snap = load_snapshot(table_path)
-    _check_writable(snap)
-    pcols = snap.partition_columns
-    # Materialize the incoming snapshot once (round-12 optimization;
-    # delta-spark's MERGE materializes its source the same way): it is
-    # consumed by the key-range bound, the matched-file semi-join, and
-    # the rewrite's scd2_merge — an aggregated snapshot would otherwise
-    # re-execute its shuffle 3×.
-    incoming = incoming.localCheckpoint(eager=False)
-    # stats skipping BEFORE the semi-join scan: files whose key range
-    # provably misses the incoming key range can hold no matched
-    # current row, so they are never read to find matches either
-    key_conj = _source_key_conjuncts(incoming, keys)
-    cand = _candidate_files(snap, key_conj)
-    target = _read_files(spark, snap, cand)
-    tagged = target.withColumn("__file", F.input_file_name())
-    inc_keys = incoming.select(*keys).dropDuplicates(keys)
-    matched_files = [
-        r["__file"]
-        for r in tagged.filter(F.col(IS_CURRENT))
-        .join(inc_keys, on=keys, how="leftsemi")  # AQE sizes the key set
-        .select("__file")
-        .distinct()
-        .collect()
-    ]
-    rel_matched = sorted(
-        os.path.relpath(
-            urllib.parse.unquote(urllib.parse.urlparse(f).path), table_path
-        ).replace(os.sep, "/")
-        for f in matched_files
-    )
-    # re-scan ONLY the matched files — a plain pruned parquet read, no
-    # filter UDF, no second pass over untouched files
-    pruned_rows = _read_files(spark, snap, rel_matched)
-
-    merged = scd2_merge(
-        pruned_rows,
-        incoming,
-        keys,
-        compare_cols=compare_cols,
-        effective_ts=effective_ts,
-    ).select(*[F.col(f.name).cast(f.dataType) for f in snap.schema.fields])
-
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "MERGE",
-                "operationParameters": {"matchedFiles": len(rel_matched)},
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        }
-    ]
-    now_ms = int(os.path.getmtime(table_path) * 1000)
-    for rel in rel_matched:
-        actions.append(
-            {
-                "remove": {
-                    "path": urllib.parse.quote(rel),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
+    opts = {"compare_cols": compare_cols, "effective_ts": effective_ts}
+    if not is_delta_table(table_path):
+        return write_delta_lite(
+            scd2_merge(None, incoming, keys, **opts), table_path, mode="errorifexists"
         )
-    actions.extend(_stage_and_adds(merged, table_path, pcols))
-    # disjoint-transaction retry: a racing SCD2 MERGE into other
-    # partitions/key ranges commutes; overlap or schema change raises
-    version = _commit_dml(table_path, snap, actions, set(cand), key_conj)
-    _maybe_checkpoint(table_path, version, checkpoint_interval)
-    return version
+    snap = load_snapshot(table_path)
+    require_scd2_columns(snap.schema.fieldNames(), table_path)
+    # Materialize the incoming snapshot once (delta-spark's MERGE
+    # materializes its source the same way): it is consumed by the
+    # key-range bound, the matched-file semi-join and the rewrite's
+    # scd2_merge — an aggregated snapshot would otherwise re-execute its
+    # shuffle 3×.
+    incoming = incoming.localCheckpoint(eager=False)
+    inc_keys = incoming.select(*keys).dropDuplicates(keys)
+    return _pruned_rewrite(
+        spark,
+        table_path,
+        snap,
+        _source_key_conjuncts(incoming, keys),
+        lambda tagged: tagged.filter(F.col(IS_CURRENT)).join(
+            inc_keys, on=keys, how="leftsemi"  # AQE sizes the key set
+        ),
+        lambda rows: scd2_merge(rows, incoming, keys, **opts),
+        "MERGE",
+        {"on": keys},
+    )

@@ -663,3 +663,105 @@ def test_checkpoint_preserves_feature_lists(spark, tmp_path):
     assert "readerFeatures" not in snap.protocol  # null field dropped on read
     dl.write_delta_lite(_mk(spark, 2), tp, mode="append")  # still writable
     assert dl.read_delta_lite(spark, tp).count() == 25
+
+
+# -- SCD2 MERGE rides the shared DML path ----------------------------------
+
+
+def _scd2_table(spark, tp, n=20, **kw):
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.scd2 import (
+        scd2_initial,
+    )
+
+    dl.write_delta_lite(
+        scd2_initial(_mk(spark, n).withColumnRenamed("id", "k"), "2024-01-01 00:00:00"),
+        tp,
+        **kw,
+    )
+
+
+def test_scd2_merge_refuses_check_violation(spark, tmp_path):
+    """An SCD2 load that would commit a row violating a CHECK constraint
+    raises and commits nothing, called directly or as an scdType2Insert
+    target of a config job."""
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.plans.engine import (
+        Orchestrator,
+    )
+
+    tp = str(tmp_path / "t")
+    _scd2_table(spark, tp)
+    dl.add_check_constraint(spark, tp, "v_ok", "v >= 0")
+    bad = spark.createDataFrame([(3, -5)], "k bigint, v bigint")
+    with pytest.raises(ValueError, match="MERGE .* violates v_ok"):
+        dl.merge_scd2_delta_lite(spark, tp, bad, ["k"], effective_ts="2024-02-01 00:00:00")
+    assert dl.load_snapshot(tp).version == 1
+
+    src = str(tmp_path / "incoming.parquet")
+    bad.write.parquet(src)
+    cfg = {
+        "configs": {
+            "name": "scd2_constrained",
+            "phase_1": {
+                "input_data": {
+                    "dataSource": "local",
+                    "dataFrameName": "snapshot",
+                    "path": src,
+                    "fileProperties": {"fileFormat": "parquet"},
+                }
+            },
+        },
+        "phase_3": {
+            "target_record_insert": [
+                {
+                    "dataTarget": "local",
+                    "dataFrameName": "snapshot",
+                    "loadType": "scdType2Insert",
+                    "scd2Keys": ["k"],
+                    "scd2EffectiveCol": "2024-02-01 00:00:00",
+                    "path": tp,
+                    "outputDataProperties": {"fileFormat": "deltalake"},
+                }
+            ]
+        },
+    }
+    with pytest.raises(ValueError, match="violates v_ok"):
+        Orchestrator(spark).run(cfg)
+    assert dl.load_snapshot(tp).version == 1
+    assert dl.read_delta_lite(spark, tp).filter("v < 0").count() == 0
+
+
+def test_scd2_merge_respects_append_only(spark, tmp_path):
+    """Closing a current row removes its file: refused on an appendOnly
+    table. A merge that only inserts new keys removes nothing and lands."""
+    tp = str(tmp_path / "t")
+    _scd2_table(spark, tp)
+    dl.set_table_properties(tp, {"delta.appendOnly": "true"})
+    changed = spark.createDataFrame([(3, 6)], "k bigint, v bigint")
+    with pytest.raises(ValueError, match="appendOnly"):
+        dl.merge_scd2_delta_lite(spark, tp, changed, ["k"], effective_ts="2024-02-01 00:00:00")
+    assert dl.load_snapshot(tp).version == 1
+    before = set(dl.load_snapshot(tp).files)
+    new = spark.createDataFrame([(100, 1)], "k bigint, v bigint")
+    v = dl.merge_scd2_delta_lite(spark, tp, new, ["k"], effective_ts="2024-02-01 00:00:00")
+    assert v == 2 and before <= set(dl.load_snapshot(tp).files)
+    assert dl.read_delta_lite(spark, tp).count() == 21
+
+
+def test_scd2_merge_into_shallow_clone(spark, tmp_path):
+    """The clone's add actions carry absolute paths; the merge must remove
+    exactly the clone's reference to the matched source file, leaving one
+    current row per key and the source table untouched."""
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    _scd2_table(spark, src, n=100)
+    src_rows = sorted(map(tuple, dl.read_delta_lite(spark, src).collect()))
+    dl.clone_delta_lite(src, dst)
+    changed = spark.createDataFrame([(7, 99)], "k bigint, v bigint")
+    dl.merge_scd2_delta_lite(spark, dst, changed, ["k"], effective_ts="2024-02-01 00:00:00")
+    got = dl.read_delta_lite(spark, dst)
+    assert got.count() == 101
+    assert got.filter("is_current").count() == 100
+    assert {(r.v, r.is_current) for r in got.filter("k = 7").collect()} == {
+        (0, False),
+        (99, True),
+    }
+    assert sorted(map(tuple, dl.read_delta_lite(spark, src).collect())) == src_rows

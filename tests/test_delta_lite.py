@@ -1258,3 +1258,90 @@ def test_log_store_seam_racing_writer(spark, tmp_path):
     assert snap.version == 2  # racer at v1, our retry at v2
     rows = {(r["id"], r["pt"]) for r in dl.read_delta_lite(spark, tp).collect()}
     assert rows == {(i, "x") for i in range(5) if i != 1}  # y gone, id=1 gone
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_dml_writes_checkpoint_every_interval(spark, tmp_path, op):
+    """DELETE, UPDATE and MERGE commit through the shared DML path, which
+    checkpoints every CHECKPOINT_INTERVAL commits like a write does."""
+    tp = str(tmp_path / "t")
+    dl.write_delta_lite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), tp)
+    for i in range(dl.CHECKPOINT_INTERVAL - 1):  # log-only commits
+        dl.set_table_properties(tp, {"n": str(i)})
+    if op == "delete":
+        v = dl.delete_delta_lite(spark, tp, "k = 1")
+    elif op == "update":
+        v = dl.update_delta_lite(spark, tp, "k = 1", {"v": "'z'"})
+    else:
+        src = spark.createDataFrame([(1, "m")], "k int, v string")
+        v = dl.merge_delta_lite(spark, tp, src, ["k"], when_matched_update={"v": "src_v"})
+    assert v == dl.CHECKPOINT_INTERVAL
+    assert dl._checkpoint_versions(os.path.join(tp, dl.LOG_DIR)) == [v]
+
+
+class _FaultStore(dl.LocalLogStore):
+    """Raises once: at the first ``write_commit``, or at the second
+    ``publish_data_file`` (one staged file already moved into the table)."""
+
+    def __init__(self, fault):
+        self.fault, self.publishes, self.raised = fault, 0, False
+
+    def write_commit(self, log_dir, version, payload):
+        if self.fault == "commit" and not self.raised:
+            self.raised = True
+            raise OSError("injected: commit write failed")
+        super().write_commit(log_dir, version, payload)
+
+    def publish_data_file(self, src, dest):
+        self.publishes += 1
+        if self.fault == "publish" and not self.raised and self.publishes == 2:
+            self.raised = True
+            raise OSError("injected: publish failed")
+        super().publish_data_file(src, dest)
+
+
+def _fault_op(spark, tp, op):
+    """One data-removing DML that rewrites the files of both partitions."""
+    cond = "k >= 2 AND k <= 3"
+    if op == "delete":
+        return dl.delete_delta_lite(spark, tp, cond)
+    if op == "update":
+        return dl.update_delta_lite(spark, tp, cond, {"v": "'u'"})
+    rows = spark.createDataFrame([(2, "a", "n2"), (3, "b", "n3")], "k int, p string, v string")
+    if op == "scd2":
+        return dl.merge_scd2_delta_lite(spark, tp, rows, ["k"], effective_ts="2024-02-01 00:00:00")
+    full = scd2_initial(rows, "2024-02-01 00:00:00")
+    if op == "merge":
+        return dl.merge_delta_lite(spark, tp, full, ["k"], when_matched_update={"v": "src_v"})
+    return dl.write_delta_lite(full, tp, mode="overwrite", replace_where=cond)
+
+
+@pytest.mark.parametrize("fault", ["commit", "publish"])
+@pytest.mark.parametrize("op", ["delete", "update", "merge", "replace_where", "scd2"])
+def test_dml_fault_leaves_old_version(spark, tmp_path, op, fault):
+    """A LogStore primitive failing mid-transaction leaves the table at its
+    old version with the same rows and no staged file referenced; the
+    retry then commits."""
+    tp = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(k, "a" if k < 3 else "b", f"v{k}") for k in range(6)], "k int, p string, v string"
+    )
+    dl.write_delta_lite(
+        scd2_initial(base, "2024-01-01 00:00:00").coalesce(1), tp, partition_by=["p"]
+    )
+    before = dl.load_snapshot(tp)
+    rows_before = _rows(dl.read_delta_lite(spark, tp))
+    store = _FaultStore(fault)
+    prev = dl.set_log_store(store)
+    try:
+        with pytest.raises(OSError, match="injected"):
+            _fault_op(spark, tp, op)
+        assert store.raised and (fault == "commit" or store.publishes == 2)
+        after = dl.load_snapshot(tp)
+        assert after.version == before.version
+        assert set(after.files) == set(before.files)
+        assert _rows(dl.read_delta_lite(spark, tp)) == rows_before
+        assert _fault_op(spark, tp, op) == before.version + 1
+    finally:
+        dl.set_log_store(prev)
+    assert _rows(dl.read_delta_lite(spark, tp)) != rows_before

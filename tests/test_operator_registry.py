@@ -219,6 +219,48 @@ def test_templated_numeric_param_matches_literal(spark, sf_dir):
     assert all(0 <= fp < 2 ** 16 for _, fp in got)
 
 
+def test_templated_delta_version_matches_literal(spark, tmp_path):
+    """The ``delta*`` steps convert through the same rule: a templated
+    ``"version": "${v}"`` on deltaClone and deltaRestore lands on the
+    version a literal int names."""
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.sources import (
+        delta_lite as dl,
+    )
+
+    src, clone = str(tmp_path / "src"), str(tmp_path / "clone")
+    dl.write_delta_lite(spark.createDataFrame([(1,), (2,)], "k int"), src)
+    dl.write_delta_lite(spark.createDataFrame([(3,)], "k int"), src, mode="append")
+    steps = [
+        ("deltaClone", {"source_path": src, "table_path": clone, "version": "${v}"}),
+        ("deltaRestore", {"table_path": src, "version": "${v}"}),
+    ]
+    cfg = {
+        "configs": {
+            "name": "templated_delta_version",
+            "phase_1": {
+                "input_data": {
+                    "dataSource": "local",
+                    "dataFrameName": "anchor",
+                    "path": src,
+                    "fileProperties": {"fileFormat": "deltalake"},
+                }
+            },
+        },
+        "phase_2": {
+            "data_transformations": [
+                {"operatorName": op, "inputDFName": "anchor", "operatorParams": params,
+                 "outputDFName": f"out_{op}"}
+                for op, params in steps
+            ]
+        },
+    }
+    result = Orchestrator(spark).run(cfg, params={"v": 0})
+    for op, _ in steps:
+        assert sorted(r.k for r in result.views[f"out_{op}"].collect()) == [1, 2]
+    assert dl.history_delta_lite(src)[0]["operationParameters"]["version"] == 0
+    assert dl.load_snapshot(clone).version == 0
+
+
 def test_null_param_means_library_default(spark):
     """``"k": null`` reaches ``heavy_hitters(k=None)`` unconverted (its
     ``int | None`` default), not ``int(None)``."""

@@ -13,13 +13,17 @@ check is cheap enough to run every session:
   - every config-registry operator name appears in COVERAGE.md or
     README.md (operators exist to be discoverable);
   - every config-registry step resolves to a callable whose first
-    parameter is the input DataFrame.
+    parameter is the input DataFrame;
+  - delta-lite data files are staged only by the three writers that own
+    a transaction (``PRIMITIVE_CALLERS``), and DML commits only through
+    ``_pruned_rewrite`` — read from the package source's AST.
 
 Exit code 1 on any failure; prints each finding.
 """
 
 from __future__ import annotations
 
+import ast
 import inspect
 import os
 import re
@@ -28,6 +32,44 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(REPO, "building_and_operating_data_pipelines_at_scale_using_ci_cd_spark")
+
+#: delta-lite primitive → the only functions of ``sources/delta_lite.py``
+#: that may call it. ``optimize_delta_lite`` is the one dataChange=false
+#: writer; every data-removing DML goes through ``_pruned_rewrite``.
+PRIMITIVE_CALLERS = {
+    "_stage_and_adds": {"write_delta_lite", "_pruned_rewrite", "optimize_delta_lite"},
+    "_commit_dml": {"_pruned_rewrite"},
+}
+
+
+def primitive_call_findings(package: str = PACKAGE) -> list[str]:
+    """Calls of a ``PRIMITIVE_CALLERS`` primitive from anywhere else in the
+    package (another delta_lite function, another module, module level)."""
+    findings = []
+    for root, _dirs, files in os.walk(package):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, package)
+            tree = ast.parse(open(path, encoding="utf-8").read(), path)
+            for top in tree.body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if not isinstance(node, ast.Call):
+                        continue
+                    f = node.func
+                    callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    allowed = PRIMITIVE_CALLERS.get(callee)
+                    if allowed is None:
+                        continue
+                    if rel != os.path.join("sources", "delta_lite.py") or owner not in allowed:
+                        findings.append(
+                            f"{rel}:{node.lineno} {owner} calls {callee}; only "
+                            f"{sorted(allowed)} may (route DML through _pruned_rewrite)"
+                        )
+    return findings
 
 
 def main() -> int:
@@ -123,6 +165,9 @@ def main() -> int:
             or first.annotation not in ("DataFrame", DataFrame)
         ):
             failures.append(f"registry step {name}: first parameter is not the input DataFrame ({first})")
+
+    # 8. one transaction path for delta-lite DML
+    failures += primitive_call_findings()
 
     for f in failures:
         print(f"FAIL {f}")
