@@ -134,6 +134,7 @@ def _stream_state_partitions(spark: SparkSession, n_groups: int):
 #: in Spark, 1693528.32 in DuckDB).
 _PRICE_DEC = "CAST(l_extendedprice AS DECIMAL(12,2))"
 _DISC_PRICE_DEC = f"{_PRICE_DEC} * (1 - CAST(l_discount AS DECIMAL(3,2)))"
+_DISCOUNT_DEC = f"{_PRICE_DEC} * CAST(l_discount AS DECIMAL(3,2))"
 _CHARGE_DEC = f"{_DISC_PRICE_DEC} * (1 + CAST(l_tax AS DECIMAL(3,2)))"
 
 Q1_PRICING_SUMMARY = f"""
@@ -151,9 +152,9 @@ WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
 
-Q3_SHIPPING_PRIORITY = """
+Q3_SHIPPING_PRIORITY = f"""
 SELECT o_orderkey,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       CAST(ROUND(SUM({_DISC_PRICE_DEC}), 2) AS DOUBLE) AS revenue,
        o_orderdate, o_orderpriority
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
@@ -181,8 +182,8 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 """
 
-Q6_FORECAST_REVENUE = """
-SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
+Q6_FORECAST_REVENUE = f"""
+SELECT CAST(ROUND(SUM({_DISCOUNT_DEC}), 2) AS DOUBLE) AS revenue,
        COUNT(*) AS n_lines
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -191,9 +192,9 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_quantity < 24
 """
 
-Q10_RETURNED_ITEMS = """
+Q10_RETURNED_ITEMS = f"""
 SELECT c_custkey, c_name, n_name,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       CAST(ROUND(SUM({_DISC_PRICE_DEC}), 2) AS DOUBLE) AS revenue,
        ROUND(MAX(c_acctbal), 2) AS c_acctbal
 FROM customer
 JOIN orders   ON c_custkey = o_custkey

@@ -13,7 +13,8 @@ the two cases AQE can't:
     pre-bucket both tables on the join key: every subsequent join is
     shuffle-free (bucket-local sort-merge), amortizing one write-time
     shuffle across all future reads. This is Spark's answer to
-    co-located/partitioned joins in MPP warehouses.
+    co-located/partitioned joins in MPP warehouses; config jobs get it
+    from the catalog target's ``bucketBy`` (``sinks/writers.py``).
 """
 
 from __future__ import annotations
@@ -221,19 +222,6 @@ def zorder_layout(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-
-
-def bucketed_write(
-    df: DataFrame, table: str, keys: list[str], num_buckets: int = 32, sort: bool = True
-) -> None:
-    """Persist ``df`` as a bucketed (and bucket-sorted) table in the
-    session catalog. Two tables bucketed identically on their join key
-    join with NO shuffle and (if sorted) NO sort — see
-    ``tests/test_scale_ops.py`` asserting the Exchange-free plan."""
-    writer = df.write.bucketBy(num_buckets, *keys)
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.mode("overwrite").format("parquet").saveAsTable(table)
 
 
 def skew_report(df: DataFrame, key_col: str, top_n: int = 5) -> DataFrame:

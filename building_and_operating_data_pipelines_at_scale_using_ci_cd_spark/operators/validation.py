@@ -5,12 +5,13 @@ job (``spark.json:41-52`` validations; ``spark.json:97-101`` error sink),
 with a percent threshold gate (``spark.json:7``).
 
 Scale notes:
-  - Both splits are single-pass expressions over the input — no self-join.
+  - Every split is a single-pass expression over the input — no self-join.
     The dedup split is one window (`row_number` over the PK) = one shuffle
     on the PK, the same shuffle a groupBy-dedup would pay, but it keeps
     every column and gives deterministic survivor selection.
-  - We return (good, bad) as two lazily-derived DataFrames off one parent;
-    callers that need both should cache the parent, not each child.
+  - ``tag_lanes`` is the engine's one pass: it names each row's lane in
+    one column, so both lanes, their counts and the quarantine read the
+    same rows and the window runs once.
 """
 
 from __future__ import annotations
@@ -23,6 +24,18 @@ from pyspark.sql import functions as F
 
 #: internal column used by the dedup window; never leaks to outputs
 _RN = "__pipelines_rn"
+
+#: lane tag added by ``tag_lanes``: the failing validation, NULL when valid
+ERROR_REASON = "__error_reason"
+
+
+def _survivor_order(df: DataFrame, keys: list[str], order_by_cols: list[str] | None) -> list[Column]:
+    """Window order that ranks the survivor of a PK group first:
+    ``orderByCols`` latest-first, else every non-PK column ascending, so
+    a re-run keeps the same survivor."""
+    if order_by_cols:
+        return [F.col(c).desc() for c in order_by_cols]
+    return [F.col(c).asc() for c in df.columns if c not in keys] or [F.lit(1).asc()]
 
 
 def null_pk_split(df: DataFrame, primary_keys: list[str]) -> tuple[DataFrame, DataFrame]:
@@ -41,28 +54,42 @@ def dedup_split(
     df: DataFrame,
     primary_keys: list[str],
     order_by_cols: list[str] | None = None,
-    descending: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """V2 (spark.json:47-51): keep one survivor per PK, chosen by
-    ``orderByCols`` (latest-first by default); the rest go to the error lane.
+    ``orderByCols`` (latest-first); the rest go to the error lane.
 
     Returns ``(survivors, duplicates)``. One window = one hash-partition
-    shuffle on the PK. With no orderByCols the survivor is still
-    deterministic (ordered by all non-PK columns) so re-runs are idempotent.
+    shuffle on the PK. The survivors keep their own ``row_number = 1``
+    filter: Spark plans that filter as a per-partition WindowGroupLimit.
     """
     if not primary_keys:
         return df, df.limit(0)
-    if order_by_cols:
-        order = [F.col(c).desc() if descending else F.col(c).asc() for c in order_by_cols]
-    else:
-        order = [F.col(c).asc() for c in df.columns if c not in primary_keys] or [
-            F.lit(1).asc()
-        ]
-    w = Window.partitionBy(*primary_keys).orderBy(*order)
+    w = Window.partitionBy(*primary_keys).orderBy(*_survivor_order(df, primary_keys, order_by_cols))
     numbered = df.withColumn(_RN, F.row_number().over(w))
     survivors = numbered.filter(F.col(_RN) == 1).drop(_RN)
     duplicates = numbered.filter(F.col(_RN) > 1).drop(_RN)
     return survivors, duplicates
+
+
+def tag_lanes(
+    df: DataFrame,
+    null_keys: list[str],
+    dup_keys: list[str],
+    order_by_cols: list[str] | None = None,
+) -> DataFrame:
+    """V1 + V2 as one projection: ``df`` plus ``__error_reason`` —
+    ``'null_primary_key'``, ``'duplicate_record'`` or NULL for a valid
+    row; an empty key list turns that validation off. The null-PK
+    condition sorts first in the dedup window, so a null-PK row never
+    outranks a valid one: the valid rows equal ``dedup_split`` of
+    ``null_pk_split``'s valid rows, even when the key lists differ."""
+    null_cond = reduce(or_, [F.col(k).isNull() for k in null_keys], F.lit(False))
+    reason = F.when(null_cond, F.lit("null_primary_key"))
+    if dup_keys:
+        order = [null_cond.asc(), *_survivor_order(df, dup_keys, order_by_cols)]
+        rn = F.row_number().over(Window.partitionBy(*dup_keys).orderBy(*order))
+        reason = reason.when(rn > 1, F.lit("duplicate_record"))
+    return df.select("*", reason.alias(ERROR_REASON))
 
 
 def count_within_threshold(
@@ -74,11 +101,6 @@ def count_within_threshold(
     if input_count == 0:
         return output_count == 0 or threshold >= 1.0
     return abs(input_count - output_count) / input_count <= threshold
-
-
-def bad_fraction(total: int, bad: int) -> float:
-    """Error-lane share of input for the V4 gate."""
-    return 0.0 if total == 0 else bad / total
 
 
 def profile_columns(

@@ -10,17 +10,18 @@ Execution model (SURVEY.md §3, entry point A):
   3. pre-execution bash hooks + junk-char cleanse flag (spark.json:26-31)
   4. phase_1: read primary + additional inputs, register temp views
      (spark.json:13-38)
-  5. phase_2a: null-PK / duplicate validation splits with the error lane
-     and thresholdLimit gate (spark.json:41-52, :7)
+  5. phase_2a: null-PK / duplicate validation as one tagged pass, then
+     the thresholdLimit gate (spark.json:41-52, :7)
   6. phase_2b: ordered Spark SQL transformations, each registering its
      outputDFName view (spark.json:54-65) — Catalyst owns optimization
   7. count validation (spark.json:66)
-  8. phase_3: fan-out writes, SCD2, reconciliation, error sink, archival,
+  8. phase_3: error sink, fan-out writes, SCD2, reconciliation, archival,
      post hooks (spark.json:68-107)
 
 Scale notes: views are lazy; nothing is collected except validation counts
-(which the dialect requires). When both the good and bad lanes of a
-validation are consumed, the parent is cached once to avoid a double scan.
+(which the dialect requires). Validation tags each row's lane once; one
+grouped count over the checkpointed tags feeds both gates, which pass
+before the quarantine or any target is written.
 """
 
 from __future__ import annotations
@@ -30,11 +31,12 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..config import JobConfig
 from ..operators.cleansing import remove_junk_characters
 from ..operators.runledger import RunLedger, input_fingerprint
-from ..operators.validation import bad_fraction, count_within_threshold, dedup_split, null_pk_split
+from ..operators.validation import ERROR_REASON, count_within_threshold, tag_lanes
 from ..session import apply_job_confs, restore_confs
 from ..sinks.writers import archive_input, write_error_records, write_target
 
@@ -187,42 +189,29 @@ class Orchestrator:
         self._run_scripts(config.pre_scripts)
 
         t0 = _time.monotonic()
-        views = self._phase1_ingest(config)
-        result.views.update(views)
+        result.views.update(self._phase1_ingest(config))
         result.phase_secs["ingest"] = _time.monotonic() - t0
 
         t0 = _time.monotonic()
-        good, bad_lanes = self._phase2_validate(config, views)
-        if good is not None:
-            result.input_count = good.count() if config.data_validation_required else 0
+        bad = self._phase2_validate(config, result)
         result.phase_secs["validate"] = _time.monotonic() - t0
-
-        t0 = _time.monotonic()
-        out_name = self._phase2_transform(config, result)
-        result.output_name = out_name
-        result.phase_secs["transform"] = _time.monotonic() - t0
-        t0 = _time.monotonic()  # quarantine + gates + loads ("load" phase)
-
-        # error lane → quarantine sink + threshold gate
-        total_bad = 0
-        if bad_lanes and config.error_sink:
-            for reason, lane in bad_lanes:
-                total_bad += write_error_records(self.spark, lane, config.error_sink, reason)
-        elif bad_lanes:
-            for _, lane in bad_lanes:
-                total_bad += lane.count()
-        result.bad_count = total_bad
         # V4 gate: active whenever validation is on AND thresholdLimit was
         # given. An explicit "0%" means zero tolerance (any bad row fails)
         # — consistent with V3 below, where 0 means exact count match; a
         # missing key disables the gate (bad rows only quarantine).
         if config.data_validation_required and config.threshold_limit is not None:
-            total = result.input_count + total_bad
-            if bad_fraction(total, total_bad) > config.threshold_limit:
+            total = result.input_count + result.bad_count
+            if total and result.bad_count / total > config.threshold_limit:
                 raise ThresholdExceeded(
-                    f"{total_bad}/{total} rows failed validation "
+                    f"{result.bad_count}/{total} rows failed validation "
                     f"(limit {config.threshold_limit:.0%})"
                 )
+
+        t0 = _time.monotonic()
+        out_name = self._phase2_transform(config, result)
+        result.output_name = out_name
+        result.phase_secs["transform"] = _time.monotonic() - t0
+        t0 = _time.monotonic()  # V3 gate + quarantine + loads ("load" phase)
 
         # V3 transformed-count validation
         # Semantics (the reference never defines them, SURVEY.md §7.3d):
@@ -241,6 +230,10 @@ class Orchestrator:
                     f"transformed count {out_count} vs input {input_count} "
                     f"outside threshold {limit:.0%}"
                 )
+
+        # error lane → quarantine sink, only once every gate has passed
+        if result.bad_count and config.error_sink:
+            write_error_records(self.spark, bad, config.error_sink, F.col(ERROR_REASON))
 
         # phase_3 loads
         for target in config.targets:
@@ -309,15 +302,14 @@ class Orchestrator:
             views[spec.dataframe_name] = df
         return views
 
-    def _phase2_validate(
-        self, config: JobConfig, views: dict[str, DataFrame]
-    ) -> tuple[DataFrame | None, list[tuple[str, DataFrame]]]:
-        """Applies V1/V2 to the primary input view; good lane replaces the
-        view so transformations see only valid rows."""
+    def _phase2_validate(self, config: JobConfig, result: JobResult) -> DataFrame | None:
+        """Applies V1/V2 to the primary input view in one tagged pass: the
+        valid rows replace the view, one grouped count sets ``input_count``
+        and ``bad_count``; returns the tagged invalid rows."""
         if not config.data_validation_required or not config.primary_input:
-            return None, []
+            return None
         name = config.primary_input.dataframe_name
-        df = views[name]
+        df = result.views[name]
         if df.isStreaming:
             raise NotImplementedError(
                 "count-based validations need bounded input; for streaming "
@@ -325,24 +317,20 @@ class Orchestrator:
                 "data_validation_required false"
             )
         v = config.validations
-        bad_lanes: list[tuple[str, DataFrame]] = []
-        # materialize the parent once: both lanes of each split re-scan
-        # it. localCheckpoint, NOT cache (round 13 — the same
-        # no-CacheManager rule the operators adopted in round 12: a
-        # cached deterministic subtree is silently substituted into any
-        # identical later plan, leaking state across runs and pinning
-        # memory for the session's lifetime; engine jobs are one-shot
-        # but must obey the same hygiene)
-        df = df.localCheckpoint(eager=False)
-        if v.null_value_validation and v.null_primary_keys:
-            df, bad = null_pk_split(df, v.null_primary_keys)
-            bad_lanes.append(("null_primary_key", bad))
-        if v.duplicate_record_validation and v.dup_primary_keys:
-            df, dups = dedup_split(df, v.dup_primary_keys, v.dup_order_by_cols)
-            bad_lanes.append(("duplicate_record", dups))
-        df.createOrReplaceTempView(name)
-        views[name] = df
-        return df, bad_lanes
+        null_keys = v.null_primary_keys if v.null_value_validation else []
+        dup_keys = v.dup_primary_keys if v.duplicate_record_validation else []
+        # the count, the valid lane and the quarantine all read these rows.
+        # localCheckpoint, NOT cache: a cached deterministic subtree is
+        # silently substituted into any identical later plan, leaking state
+        # across runs and pinning memory for the session's lifetime
+        tagged = tag_lanes(df, null_keys, dup_keys, v.dup_order_by_cols).localCheckpoint(eager=False)
+        counts = dict(tagged.groupBy(ERROR_REASON).count().collect())
+        result.input_count = counts.pop(None, 0)
+        result.bad_count = sum(counts.values())
+        good = tagged.filter(F.col(ERROR_REASON).isNull()).drop(ERROR_REASON)
+        good.createOrReplaceTempView(name)
+        result.views[name] = good
+        return tagged.filter(F.col(ERROR_REASON).isNotNull())
 
     def _phase2_transform(self, config: JobConfig, result: JobResult) -> str | None:
         """Ordered transformation chain; each step sees all prior views

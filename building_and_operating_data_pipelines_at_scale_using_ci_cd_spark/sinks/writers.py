@@ -28,8 +28,11 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.scd2 import scd2_merge, SCD2_META_COLS
+from ..operators.validation import ERROR_REASON
 
 if TYPE_CHECKING:
+    from pyspark.sql import Column
+
     from ..config import ErrorSinkSpec, TargetSpec
 
 _FORMAT_ALIASES = {"deltalake": "delta", "txt": "text"}
@@ -517,16 +520,14 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
 
 
 def write_error_records(
-    spark: SparkSession, bad: DataFrame, spec: "ErrorSinkSpec", reason: str
-) -> int:
-    """W11: quarantine the error lane (``spark.json:97-101``), tagged with
-    the failing validation."""
+    spark: SparkSession, bad: DataFrame, spec: "ErrorSinkSpec", reason: str | Column
+) -> None:
+    """W11: quarantine the error lane (``spark.json:97-101``) in one
+    append, tagged with the failing validation: ``reason`` is one string
+    for the whole lane, or a Column naming each row's validation."""
     from pyspark.sql import functions as F
 
-    n = bad.count()
-    if n == 0:
-        return 0
-    tagged = bad.withColumn("__error_reason", F.lit(reason))
+    tagged = bad.withColumn(ERROR_REASON, F.lit(reason))
     if spec.file_target == "database":
         # quarantine straight into the DB next to the data it failed to
         # join — append-only so repeated runs accumulate an audit trail
@@ -543,9 +544,8 @@ def write_error_records(
         for k, v in spec.jdbc_properties.items():
             writer = writer.option(k, v)
         writer.save()
-        return n
+        return
     tagged.write.mode("append").format(_fmt(spec.file_format)).save(spec.path)
-    return n
 
 
 def archive_input(

@@ -1,4 +1,6 @@
 import os
+import threading
+import uuid
 
 import pytest
 
@@ -38,3 +40,24 @@ def tables(spark, sf_dir):
         df.createOrReplaceTempView(t)
         out[t] = df
     return out
+
+
+def jobs_started(spark, work) -> list[int]:
+    """Run ``work`` in its own thread under a fresh job group; the ids
+    of the Spark jobs it started."""
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    errors = []
+
+    def target():
+        spark.sparkContext.setJobGroup(group, "job count pin")
+        try:
+            work()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            errors.append(e)
+
+    th = threading.Thread(target=target)
+    th.start()
+    th.join()
+    if errors:
+        raise errors[0]
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))

@@ -13,6 +13,8 @@ from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.plans.engi
     ThresholdExceeded,
 )
 
+from conftest import jobs_started
+
 
 def _base_config(name, src_path, out_path, **configs_extra):
     return {
@@ -257,3 +259,49 @@ def test_single_file_csv_with_prefix_and_compression(spark, tmp_path, dirty_src)
     assert os.path.isfile(os.path.join(out, "daily_export.csv.gz"))
     df = spark.read.option("header", "true").csv(os.path.join(out, "daily_export.csv.gz"))
     assert df.count() == 6
+
+
+def _quarantine_config(name, src_path, out_path, err_path, threshold):
+    cfg = _with_validation(_base_config(name, src_path, out_path, thresholdLimit=threshold))
+    cfg["phase_3"]["ErrorRecordInsert"] = {"fileTarget": "local", "targetS3Location": err_path}
+    return cfg
+
+
+def test_threshold_failure_publishes_nothing(spark, tmp_path, dirty_src):
+    """The V4 gate is decided from counts before any write: a failing run
+    leaves neither the quarantine nor the target on disk."""
+    out, err = str(tmp_path / "out_f"), str(tmp_path / "errors_f")
+    cfg = _quarantine_config("lanes_fail_quiet", dirty_src, out, err, "30%")
+    with pytest.raises(ThresholdExceeded, match="3/6"):
+        Orchestrator(spark).run(cfg)
+    assert not os.path.exists(err)
+    assert not os.path.exists(out)
+
+
+def test_validated_run_job_count(spark, tmp_path, dirty_src):
+    """statusTracker pin: both validation lanes, an error sink, one SQL
+    transform and a reconciled truncateInsert take at most 10 Spark jobs —
+    one grouped count over the tagged rows, one quarantine write, the
+    target write and its reconciliation counts."""
+    out, err = str(tmp_path / "out_n"), str(tmp_path / "errors_n")
+    cfg = _quarantine_config("lanes_jobs", dirty_src, out, err, "60%")
+    cfg["phase_3"]["target_record_insert"][0]["reconciliation"] = "true"
+    orch = Orchestrator(spark)
+    results = []
+    jobs = jobs_started(spark, lambda: results.append(orch.run(cfg)))
+    result = results[0]
+    assert (result.input_count, result.bad_count) == (3, 3)
+    assert sorted(result.views) == ["out", "src"]
+    assert result.write_results[0]["reconciliation"]["ok"]
+    assert len(jobs) <= 10, sorted(jobs)
+
+
+def test_valid_rows_replace_the_primary_view(spark, tmp_path, dirty_src):
+    """A target that names the primary input view directly writes only
+    the valid rows, as a SQL step reading that view sees them."""
+    out = str(tmp_path / "out_direct")
+    cfg = _with_validation(_base_config("direct_src", dirty_src, out))
+    cfg["phase_3"]["target_record_insert"][0]["dataFrameName"] = "src"
+    result = Orchestrator(spark).run(cfg)
+    assert result.input_count == 3
+    assert [r["pk"] for r in spark.read.parquet(out).orderBy("pk").collect()] == [1, 2, 3]

@@ -7,8 +7,6 @@ import contextlib
 import datetime
 import decimal
 import os
-import threading
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,7 +17,7 @@ from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.sources.re
     read_parquet,
 )
 
-from conftest import TABLES
+from conftest import TABLES, jobs_started
 
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -194,27 +192,6 @@ def test_reads_leave_nanos_as_long_unchanged(spark, tmp_path):
 EAGER_OPERATORS = {"bfs_reachability", "k_generalize"}
 
 
-def _jobs_started(spark, work) -> list[int]:
-    """Run ``work`` in its own thread under a fresh job group; the ids
-    of the Spark jobs it started."""
-    group = f"footer-schema-{uuid.uuid4().hex}"
-    errors = []
-
-    def target():
-        spark.sparkContext.setJobGroup(group, "footer schema pin")
-        try:
-            work()
-        except BaseException as e:  # noqa: BLE001 - re-raised below
-            errors.append(e)
-
-    th = threading.Thread(target=target)
-    th.start()
-    th.join()
-    if errors:
-        raise errors[0]
-    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-
-
 def test_view_builds_start_no_jobs(spark, sf_dir):
     """statusTracker pin: building every registry entry that registers
     its tables through _sql or _views starts 0 Spark jobs: no schema
@@ -233,7 +210,7 @@ def test_view_builds_start_no_jobs(spark, sf_dir):
                 fn(spark, sf_dir)
         em._views(spark, sf_dir, em.TABLES)
 
-    assert _jobs_started(spark, build_all) == []
+    assert jobs_started(spark, build_all) == []
 
 
 def test_sql_entries_register_only_named_tables(spark, sf_dir):

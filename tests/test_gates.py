@@ -50,3 +50,33 @@ def test_plan_audit_green_at_head():
         "plan_audit flagged queries (add a documented allowlist entry or "
         "fix the plan):\n" + tail + "\n" + proc.stderr[-2000:]
     )
+
+
+def test_perfbench_wrapped_names_resolve():
+    """Every ``(module, attr)`` the benchmark tracer wraps
+    (``perfbench/tracing.py:WRAPPED``) is bound in that package module's
+    own namespace, so a refactor that drops a binding fails here instead
+    of crashing traced benchmark runs."""
+    import ast
+    import importlib
+
+    with open(os.path.join(REPO, "perfbench", "tracing.py"), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    wrapped = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "WRAPPED" for t in node.targets)
+    )
+    assert wrapped
+    missing = []
+    for mod_name, attr, _layer in wrapped:
+        owner = importlib.import_module(
+            f"building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.{mod_name}"
+        )
+        for part in attr.split("."):
+            owner = vars(owner).get(part)
+            if owner is None:
+                missing.append(f"{mod_name}.{attr}")
+                break
+    assert not missing, missing

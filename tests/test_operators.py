@@ -1,5 +1,6 @@
 """Validation splits, cleansing, as-of join, dedup family."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.asof import (
@@ -15,8 +16,10 @@ from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.
     simhash_fingerprints,
 )
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.validation import (
+    ERROR_REASON,
     dedup_split,
     null_pk_split,
+    tag_lanes,
 )
 
 
@@ -37,6 +40,49 @@ def test_dedup_split_survivor_deterministic(spark):
     s = {r["pk"]: r for r in survivors.collect()}
     assert s[1]["d"] == "2020-03-01"  # latest wins
     assert dups.count() == 2
+
+
+def test_dedup_split_survivors_plan_as_window_group_limit(spark):
+    df = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "pk int, d string")
+    survivors, _ = dedup_split(df, ["pk"], ["d"])
+    assert "WindowGroupLimit" in survivors._jdf.queryExecution().executedPlan().toString()
+
+
+#: (a, b, ts, v): NULLs in both key columns, duplicates on a, on b and on
+#: (a, b), distinct ts per row and two fully identical rows
+_LANE_ROWS = [
+    (1, 10, 1, "p"), (1, 10, 2, "q"), (1, 11, 3, "r"), (None, 10, 4, "s"),
+    (None, 10, 5, "s"), (2, None, 6, "t"), (2, None, 7, "u"), (3, 12, 8, "v"),
+    (3, 12, 9, "v"), (None, None, 10, "w"), (4, 11, 11, "x"), (4, 11, 11, "x"),
+]
+
+
+@pytest.mark.parametrize("null_keys,dup_keys,order_by", [
+    (["a"], ["a"], ["ts"]),
+    (["a"], ["b"], ["ts"]),
+    (["b"], ["a"], None),
+    (["a", "b"], ["b"], None),
+    (["a"], ["a", "b"], None),
+    ([], ["a"], None),
+    (["b"], [], None),
+])
+def test_tag_lanes_matches_split_chain(spark, null_keys, dup_keys, order_by):
+    """One tagged pass gives the same lanes as null_pk_split followed by
+    dedup_split, whether or not the key lists differ."""
+    df = spark.createDataFrame(_LANE_ROWS, "a int, b int, ts int, v string")
+    valid, null_lane = null_pk_split(df, null_keys)
+    survivors, dup_lane = dedup_split(valid, dup_keys, order_by)
+    chain = (
+        survivors.withColumn(ERROR_REASON, F.lit(None).cast("string"))
+        .unionByName(null_lane.withColumn(ERROR_REASON, F.lit("null_primary_key")))
+        .unionByName(dup_lane.withColumn(ERROR_REASON, F.lit("duplicate_record")))
+    )
+
+    def rows(frame):
+        return sorted(map(str, frame.collect()))
+
+    # every row with its lane, from both sides, in one job each
+    assert rows(tag_lanes(df, null_keys, dup_keys, order_by)) == rows(chain)
 
 
 def test_junk_char_removal(spark):

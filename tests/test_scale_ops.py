@@ -1,15 +1,12 @@
-"""Skew salting and bucketed co-located joins: results must match the
-plain formulations, and the bucketed join plan must be shuffle-free."""
-
-import io
-import contextlib
+"""Skew salting, compaction and file layout: results must match the
+plain formulations. The bucketed co-located join is pinned through the
+catalog target (test_round2_fixes.py)."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.scale import (
-    bucketed_write,
     salted_join,
     skewed_keys,
 )
@@ -47,26 +44,6 @@ def test_salted_join_spreads_hot_key(spark, skewed_pair):
     )
     n_buckets = salted_l.filter("k = 1").select("__salt").distinct().count()
     assert n_buckets > 1
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force the issue
-    try:
-        a = spark.range(0, 10000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
-        b = spark.range(0, 10000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
-        bucketed_write(a, "bkt_a", ["k"], num_buckets=8)
-        bucketed_write(b, "bkt_b", ["k"], num_buckets=8)
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
 def test_compact_files_reduces_file_count(spark, tmp_path):

@@ -135,7 +135,11 @@ def main() -> int:
         (a.split("=", 1)[1] for a in sys.argv[1:] if a.startswith("--json=")), None
     )
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    spark = get_session(app_name="plan-audit", master="local[8]")
+    # 8 shuffle partitions, not Spark's 200: the streaming entries run an
+    # availableNow drain at build time, paying one state-store commit per
+    # shuffle partition per microbatch, while no audited plan line
+    # (joins, exchanges, pushdown, flags) depends on the count
+    spark = get_session(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     # Checkpoint transparency (round-13 ADVICE fix): a localCheckpoint
