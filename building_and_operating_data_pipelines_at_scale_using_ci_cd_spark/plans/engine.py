@@ -266,8 +266,11 @@ class Orchestrator:
         checkpointed ``foreachBatch`` write reusing the batch load modes.
         ``Trigger.AvailableNow`` processes exactly the unseen input and
         stops — the reference's incremental cron-batch posture
-        (spark.json:8-12) with exactly-once bookkeeping instead of a
-        fingerprint ledger. Requires ``s3TempPath`` for the checkpoint."""
+        (spark.json:8-12) with checkpoint bookkeeping instead of a
+        fingerprint ledger. Delta-lite targets are exactly-once: each batch
+        commits with ``txn=(<query id>, batch_id)``, so a replayed batch
+        lands once; other targets are at-least-once. Requires
+        ``s3TempPath`` for the checkpoint."""
         from ..streaming.ops import foreach_batch_writer
 
         if not config.temp_path:
@@ -278,7 +281,7 @@ class Orchestrator:
             config.temp_path, "stream_ckpt", config.name, target.dataframe_name
         )
         q = (
-            df.writeStream.foreachBatch(foreach_batch_writer(target))
+            df.writeStream.foreachBatch(foreach_batch_writer(target, ckpt))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()

@@ -20,7 +20,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 from typing import TYPE_CHECKING
@@ -98,7 +97,9 @@ def _single_file_rename(spark: SparkSession, path: str, prefix: str | None) -> N
             raw.delete(crc.getPath(), False)
 
 
-def _write_file(df: DataFrame, spec: "TargetSpec", mode: str) -> None:
+def _write_file(
+    df: DataFrame, spec: "TargetSpec", mode: str, txn: tuple | None = None
+) -> None:
     fmt = _fmt(spec.file_format)
     out = df.coalesce(1) if spec.single_file else df
     if spec.sort_by:
@@ -153,6 +154,7 @@ def _write_file(df: DataFrame, spec: "TargetSpec", mode: str) -> None:
         # through Spark's parquet writer, then records one atomic commit.
         # options.replaceWhere (with an overwrite load) reloads ONLY the
         # rows matching the predicate — the daily-partition-reload shape.
+        # ``txn`` makes a replayed streaming micro-batch a no-op.
         from ..sources.delta_lite import write_delta_lite
 
         write_delta_lite(
@@ -161,6 +163,7 @@ def _write_file(df: DataFrame, spec: "TargetSpec", mode: str) -> None:
             mode=mode,
             partition_by=spec.partition_by,
             replace_where=spec.options.get("replaceWhere"),
+            txn=txn,
         )
         return
     writer.format(fmt).save(spec.path)
@@ -247,11 +250,20 @@ def _has_delta_spark() -> bool:
 
 
 def _read_back(spark: SparkSession, spec: "TargetSpec") -> DataFrame:
-    """Read a file target back for reconciliation / pre-count. Format-
-    aware: a delta target is a transaction log, not a parquet glob —
+    """Read a target back for reconciliation / pre-count: a catalog
+    target through ``spark.table``, a database target through a JDBC
+    read of its table, a file target by its format. Format-aware: a
+    delta target is a transaction log, not a parquet glob —
     ``spark.read.format('delta')`` needs delta-spark, so without it the
     read-back routes through delta_lite (same routing as the S9 reader;
     a raw glob would double-count removed-but-unvacuumed files)."""
+    if spec.data_target == "catalog":
+        return spark.table(spec.table_name)
+    if spec.data_target == "database":
+        reader = spark.read.format("jdbc").option("url", spec.jdbc_url)
+        for k, v in spec.jdbc_properties.items():
+            reader = reader.option(k, v)
+        return reader.option("dbtable", spec.table_name).load()
     fmt = _fmt(spec.file_format)
     if fmt == "delta" and not _has_delta_spark():
         from ..sources.delta_lite import read_delta_lite
@@ -445,9 +457,13 @@ def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> None:
     _swap_dirs(spark, staging, spec.path)
 
 
-def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict:
+def write_target(
+    spark: SparkSession, df: DataFrame, spec: "TargetSpec", txn: tuple | None = None
+) -> dict:
     """Write one target_record_insert entry; returns a reconciliation
-    record (V6, ``spark.json:80``) when requested."""
+    record (V6, ``spark.json:80``) when requested. ``txn=(app_id,
+    version)`` reaches a delta-lite file write as its idempotent-writer
+    ``txn`` action (see ``write_delta_lite``); other targets ignore it."""
     from ..operators.reconcile import reconcile_counts, reconcile_hash
 
     load = spec.load_type or "simpleInsert"
@@ -467,17 +483,10 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
     # previous loads and would fail a perfectly good append).
     pre_existing = 0
     if spec.reconciliation and mode == "append" and load != "scdType2Insert":
-        if spec.data_target == "catalog" and spec.table_name:
-            # a second append onto a catalog table must reconcile the count
-            # DELTA too — comparing expected=df.count() against the FULL
-            # table total would fail every append after the first
-            if spark.catalog.tableExists(spec.table_name):
-                pre_existing = spark.table(spec.table_name).count()
-        elif spec.path and _fs_exists(spark, spec.path):
-            try:
-                pre_existing = _read_back(spark, spec).count()
-            except Exception:
-                pre_existing = 0  # unreadable/empty dir: treat as fresh target
+        try:
+            pre_existing = _read_back(spark, spec).count()
+        except Exception:
+            pre_existing = 0  # absent/unreadable target: treat as fresh
 
     if mode == "scd2" or load == "scdType2Insert":
         _scd2_write(spark, df, spec)
@@ -488,19 +497,13 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
     elif spec.data_target == "sftp":
         _write_sftp(spark, df, spec, mode)
     else:
-        _write_file(df, spec, mode)
+        _write_file(df, spec, mode, txn)
 
     result: dict = {"path": spec.path, "loadType": load}
     if spec.reconciliation:
         # V6 (spark.json:80): count check by default (metadata-only for
         # parquet), value-level checksum when reconciliationMode=hash.
-        if spec.data_target == "catalog" and spec.table_name:
-            expected = df.count()
-            written = spark.table(spec.table_name).count()
-            result["reconciliation"] = reconcile_counts(expected, written, pre_existing)
-        elif not spec.path:
-            result["reconciliation"] = {"mode": "count", "ok": True, "expected": None}
-        elif spec.reconciliation_mode == "hash" and load != "scdType2Insert" and mode != "append":
+        if spec.reconciliation_mode == "hash" and load != "scdType2Insert" and mode != "append":
             written_df = _read_back(spark, spec)
             result["reconciliation"] = reconcile_hash(df, written_df)
         else:
@@ -549,32 +552,22 @@ def write_error_records(
 
 
 def archive_input(
-    path: str, archive_path: str, delete_source: bool, spark: SparkSession | None = None
+    path: str, archive_path: str, delete_source: bool, spark: SparkSession
 ) -> None:
     """W12 (``spark.json:10-12``): copy processed input to the archive,
-    optionally removing the source. With a session, the copy goes through
-    Hadoop ``FileUtil`` so any supported filesystem works (s3a://, hdfs://,
-    file://) — the same discipline as the SCD2 swap; without one it falls
-    back to local shutil."""
+    optionally removing the source. The copy goes through Hadoop
+    ``FileUtil`` so any supported filesystem works (s3a://, hdfs://,
+    file://) — the same discipline as the SCD2 swap."""
     dest = archive_path.rstrip("/") + "/" + os.path.basename(path.rstrip("/"))
-    if spark is not None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        jsrc = jvm.org.apache.hadoop.fs.Path(path)
-        jdst = jvm.org.apache.hadoop.fs.Path(dest)
-        src_fs = jsrc.getFileSystem(hconf)
-        dst_fs = jdst.getFileSystem(hconf)
-        dst_fs.mkdirs(jvm.org.apache.hadoop.fs.Path(archive_path))
-        ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
-            src_fs, jsrc, dst_fs, jdst, bool(delete_source), True, hconf
-        )
-        if not ok:
-            raise IOError(f"archival copy failed: {path} -> {dest}")
-        return
-    os.makedirs(archive_path, exist_ok=True)
-    if os.path.isdir(path):
-        shutil.copytree(path, dest, dirs_exist_ok=True)
-    else:
-        shutil.copy2(path, dest)
-    if delete_source:
-        shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    jsrc = jvm.org.apache.hadoop.fs.Path(path)
+    jdst = jvm.org.apache.hadoop.fs.Path(dest)
+    src_fs = jsrc.getFileSystem(hconf)
+    dst_fs = jdst.getFileSystem(hconf)
+    dst_fs.mkdirs(jvm.org.apache.hadoop.fs.Path(archive_path))
+    ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
+        src_fs, jsrc, dst_fs, jdst, bool(delete_source), True, hconf
+    )
+    if not ok:
+        raise IOError(f"archival copy failed: {path} -> {dest}")

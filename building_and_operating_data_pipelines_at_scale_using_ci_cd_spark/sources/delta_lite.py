@@ -18,6 +18,13 @@ delta read/write/MERGE paths execute and are testable here:
     it into place, which FAILS if the version already exists — that failed
     link IS the optimistic-concurrency conflict signal (the same mutual
     exclusion delta-spark gets from its LogStore on HDFS/local).
+  - every mutating operation (WRITE, which also carries the streaming
+    sink's ``txn`` appends; DELETE, UPDATE, MERGE, replaceWhere and SCD2
+    MERGE through ``_pruned_rewrite``; OPTIMIZE, SET TBLPROPERTIES,
+    ADD/DROP CONSTRAINT, RESTORE, CONVERT and CLONE) commits through
+    one function, ``_transact``: it writes the ``commitInfo``, publishes
+    through the ``LogStore``, applies the one conflict rule on a lost
+    race, and checkpoints every ``CHECKPOINT_INTERVAL`` versions.
 
 Honest scope gate (checked, not assumed): reader protocol ≤ 1, writer
 protocol ≤ 3 — CHECK constraints (``delta.constraints.*``), column
@@ -1147,17 +1154,19 @@ def _assert_commutes(
     from_version: int,
     to_version: int,
     read_set: set,
-    conjuncts: list,
+    conjuncts: list | None,
     types: dict,
 ) -> None:
     """Raise :class:`DeltaConcurrentWriteError` unless every winner
     commit in ``(from_version, to_version]`` provably commutes with a
-    DML transaction that scanned the files in ``read_set`` and whose
-    row predicate is bounded by ``conjuncts`` (pre-normalized). The
-    winner commutes only when it
+    transaction that scanned the files in ``read_set`` and whose row
+    predicate is bounded by ``conjuncts`` (pre-normalized; ``None`` for
+    a blind append, which has no predicate). The winner commutes only
+    when it
 
-      - carries no ``metaData``/``protocol`` action (a racing schema or
-        protocol change invalidates our staged parquet), AND
+      - carries no ``metaData``/``protocol`` action (a racing schema,
+        constraint or protocol change invalidates our staged parquet,
+        which was cast and validated under the old metadata), AND
       - removed no file we read (our matched rows / planned removes all
         live inside the read set — a removed read file means our
         rewrite was computed against rows that no longer exist), AND
@@ -1167,8 +1176,8 @@ def _assert_commutes(
         and anti-join).
 
     ``_file_may_match`` is stats-conservative, so anything unprovable
-    conflicts — partition-disjoint DML (the common real case) commutes,
-    everything doubtful raises exactly as before."""
+    conflicts — partition-disjoint DML (the common real case) and blind
+    appends commute, everything doubtful raises."""
     log = _log_path(table_path)
     for v in range(from_version + 1, to_version + 1):
         fpath = os.path.join(log, f"{v:020d}.json")
@@ -1194,53 +1203,102 @@ def _assert_commutes(
                         f"transaction read: {rm['path']}"
                     )
                 add = action.get("add")
-                if add and _file_may_match(add, conjuncts, types):
+                if (
+                    add
+                    and conjuncts is not None
+                    and _file_may_match(add, conjuncts, types)
+                ):
                     raise DeltaConcurrentWriteError(
                         f"concurrent commit {v} added a file that may "
                         f"match this transaction's predicate: {add['path']}"
                     )
 
 
-def _commit_dml(
-    table_path: str,
-    snap: "DeltaSnapshot",
-    actions: list,
-    read_set: set,
-    conjuncts: list,
-) -> int:
-    """Commit a DML rewrite with disjoint-transaction retry: a lost
-    commit race re-aims at the next version slot IF every winner commit
-    commutes (:func:`_assert_commutes`) — partition-/range-disjoint
-    MERGEs from independent pipelines both land, one commit each, while
-    overlapping or schema-changing winners still raise. Winner commits
-    are checked once each across retries."""
-    types = _schema_types(snap)
-    conjuncts = _normalize_conjuncts(types, conjuncts) if conjuncts else []
-    version = snap.version + 1
-    checked_to = snap.version
-    for attempt in range(_APPEND_COMMIT_RETRIES + 1):
-        try:
-            _commit(table_path, version, actions)
-            return version
-        except DeltaConcurrentWriteError:
-            if attempt == _APPEND_COMMIT_RETRIES:
-                raise
-            latest = load_snapshot(table_path).version
-            _assert_commutes(
-                table_path, checked_to, latest, read_set, conjuncts, types
-            )
-            checked_to = latest
-            version = latest + 1
-    raise AssertionError("unreachable")  # loop always returns or raises
-
-
 #: like delta-spark's default: a parquet checkpoint every N commits bounds
 #: log-replay length for long-lived tables
 CHECKPOINT_INTERVAL = 10
 
-#: how many version slots a losing blind-append re-aims at before
+#: how many version slots a losing transaction re-aims at before
 #: surfacing the conflict (delta-spark's commit loop has the same shape)
-_APPEND_COMMIT_RETRIES = 10
+_COMMIT_RETRIES = 10
+
+_ENGINE_INFO = "delta-lite (PySpark analytics engine)"
+
+
+def _remove(path: str, data_change: bool = True) -> dict:
+    """The ``remove`` action for the file an ``add`` recorded at
+    ``path``, stamped with the current time."""
+    return {
+        "remove": {
+            "path": path,
+            "deletionTimestamp": int(time.time() * 1000),
+            "dataChange": data_change,
+        }
+    }
+
+
+def _transact(
+    table_path: str,
+    version: int,
+    operation: str,
+    params: dict,
+    actions: list,
+    conflicts: tuple | None = None,
+    txn: tuple | None = None,
+    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
+) -> int:
+    """Commit ``actions`` (``protocol``/``metaData``/``remove``/``add``)
+    as ``version`` of the table; the one commit path of every mutating
+    operation. Returns the committed version. It
+
+      - heads the commit with the ``commitInfo`` of ``operation`` and
+        its ``params`` (:func:`_commit` stamps its ``timestamp``), plus
+        the ``txn`` action of ``txn=(app_id, app_version)``;
+      - publishes through the module's :func:`_commit`, looked up at
+        call time;
+      - on a lost race: raises when ``conflicts`` is None; otherwise
+        returns the latest version if a winner already applied our
+        ``txn`` (an idempotent replay), and re-aims at the next slot
+        once every winner commutes with ``conflicts=(read_set,
+        conjuncts)`` (:func:`_assert_commutes`; each winner is checked
+        once across retries);
+      - checkpoints every ``checkpoint_interval`` versions."""
+    head = [
+        {
+            "commitInfo": {
+                "operation": operation,
+                "operationParameters": params,
+                "engineInfo": _ENGINE_INFO,
+            }
+        }
+    ]
+    if txn is not None:
+        head.append({"txn": {"appId": str(txn[0]), "version": int(txn[1])}})
+    actions = head + actions
+    checked_to = version - 1
+    for attempt in range(_COMMIT_RETRIES + 1):
+        try:
+            _commit(table_path, version, actions)
+            break
+        except DeltaConcurrentWriteError:
+            if conflicts is None or attempt == _COMMIT_RETRIES:
+                raise
+            latest = load_snapshot(table_path)
+            if txn is not None and latest.txns.get(str(txn[0]), -1) >= int(txn[1]):
+                # the winner was our own replay; our staged files stay
+                # unreferenced (vacuum-able)
+                return latest.version
+            read_set, conjuncts = conflicts
+            types = _schema_types(latest)
+            if conjuncts is not None:
+                conjuncts = _normalize_conjuncts(types, conjuncts)
+            _assert_commutes(
+                table_path, checked_to, latest.version, read_set, conjuncts, types
+            )
+            checked_to = latest.version
+            version = latest.version + 1
+    _maybe_checkpoint(table_path, version, checkpoint_interval)
+    return version
 
 
 def _rule_observe(df: DataFrame, rules: list):
@@ -1394,8 +1452,6 @@ def write_delta_lite(
     spark = df.sparkSession
     if replace_where is not None and mode != "overwrite":
         raise ValueError("replace_where requires mode='overwrite'")
-    if replace_where is not None and txn is not None:
-        raise ValueError("replace_where does not compose with txn watermarks")
     exists = is_delta_table(table_path)
     snap = load_snapshot(table_path) if exists else None
     if exists and mode == "ignore":
@@ -1406,9 +1462,11 @@ def write_delta_lite(
         _check_writable(snap)
         if mode == "overwrite" and replace_where is None and snap.files:
             _check_append_only(snap, "overwrite WRITE")
+        if txn is not None and snap.txns.get(str(txn[0]), -1) >= int(txn[1]):
+            return snap.version  # already applied — idempotent replay
     if replace_where is not None and snap is not None:
         return _replace_where(
-            spark, df, table_path, snap, replace_where, checkpoint_interval
+            spark, df, table_path, snap, replace_where, checkpoint_interval, txn
         )
     # replace_where on a fresh table degenerates to a plain create (there
     # is nothing to replace) — fall through, predicate still validated
@@ -1421,10 +1479,6 @@ def write_delta_lite(
                 f"replaceWhere violation: input rows do not all satisfy "
                 f"{replace_where!r}"
             )
-    if txn is not None and snap is not None:
-        app_id, app_version = txn
-        if snap.txns.get(str(app_id), -1) >= int(app_version):
-            return snap.version  # already applied — idempotent replay
 
     pcols = list(partition_by or (snap.partition_columns if snap else []))
     if snap and partition_by and list(partition_by) != snap.partition_columns:
@@ -1465,15 +1519,7 @@ def write_delta_lite(
         operation=f"WRITE ({mode})",
     )
 
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode.upper()},
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        }
-    ]
+    actions = []
     if snap is None:
         ss = _schema_string(df)
         actions.append({"protocol": _protocol_for_schema(ss)})
@@ -1502,63 +1548,23 @@ def write_delta_lite(
                 actions.append({"protocol": up})
             actions.append({"metaData": new_metadata})
         if mode == "overwrite":
-            for rel, add in sorted(snap.files.items()):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": add["path"],
-                            "deletionTimestamp": int(
-                                os.path.getmtime(table_path) * 1000
-                            ),
-                            "dataChange": True,
-                        }
-                    }
-                )
-    if txn is not None:
-        actions.append(
-            {"txn": {"appId": str(txn[0]), "version": int(txn[1])}}
-        )
-    actions.extend(adds)
-    for attempt in range(_APPEND_COMMIT_RETRIES + 1):
-        try:
-            _commit(table_path, version, actions)
-            break
-        except DeltaConcurrentWriteError:
-            # Blind appends COMMUTE (delta-spark auto-retries them too):
-            # our staged files are already inside the table dir and the
-            # actions reference nothing the winner touched, so losing
-            # the race just means re-aiming at the next version slot.
-            # Anything else — overwrite (its removes were computed
-            # against a stale snapshot), schema evolution, an exhausted
-            # retry budget — re-raises for the caller to reconcile.
-            if mode != "append" or new_metadata is not None or snap is None:
-                raise
-            if attempt == _APPEND_COMMIT_RETRIES:
-                raise
-            snap2 = load_snapshot(table_path)
-            if txn is not None and snap2.txns.get(str(txn[0]), -1) >= int(txn[1]):
-                # the RACING writer was our own replay: already applied.
-                # Our just-staged files stay unreferenced (vacuum-able).
-                return snap2.version
-            if snap2.schema != snap.schema:
-                # a concurrent schema CHANGE — not commutable. Full
-                # StructType equality, not just field names: a racing
-                # type/nullability evolution (same columns, new types)
-                # would otherwise land parquet files whose physical
-                # types no longer match the table metadata.
-                raise
-            if (
-                snap2.configuration != snap.configuration
-                or snap2.protocol != snap.protocol
-            ):
-                # a racing ADD CONSTRAINT / property / protocol change:
-                # our staged rows were validated against the OLD rules,
-                # so re-aiming would land rows the new rule never saw
-                # (delta's MetadataChangedException shape)
-                raise
-            version = snap2.version + 1
-    _maybe_checkpoint(table_path, version, checkpoint_interval)
-    return version
+            actions += [_remove(snap.files[rel]["path"]) for rel in sorted(snap.files)]
+    # Blind appends COMMUTE (delta-spark auto-retries them too): the
+    # staged files are already inside the table dir and the actions
+    # reference nothing a winner touched, so a lost race re-aims unless
+    # a winner changed metadata or protocol. Create, overwrite (its
+    # removes came from a stale snapshot) and schema evolution raise.
+    blind_append = mode == "append" and snap is not None and new_metadata is None
+    return _transact(
+        table_path,
+        version,
+        "WRITE",
+        {"mode": mode.upper()},
+        actions + adds,
+        conflicts=(set(), None) if blind_append else None,
+        txn=txn,
+        checkpoint_interval=checkpoint_interval,
+    )
 
 
 def convert_to_delta(
@@ -1598,13 +1604,6 @@ def convert_to_delta(
         if "=" in comp
     ]
     actions = [
-        {
-            "commitInfo": {
-                "operation": "CONVERT",
-                "operationParameters": {"numFiles": len(data_files)},
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        },
         {"protocol": _protocol_for_schema(json.dumps(schema.jsonValue()))},
         {
             "metaData": {
@@ -1643,7 +1642,7 @@ def convert_to_delta(
                 }
             }
         )
-    _commit(dir_path, 0, actions)
+    _transact(dir_path, 0, "CONVERT", {"numFiles": len(data_files)}, actions)
     if checkpoint:
         checkpoint_delta_lite(dir_path)
     return 0
@@ -1680,18 +1679,7 @@ def set_table_properties(
         conf.pop(k, None)
     meta = dict(snap.metadata)
     meta["configuration"] = conf
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {
-                    "properties": sorted((properties or {}).keys()),
-                    "unset": sorted(unset or []),
-                },
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        },
-    ]
+    actions = []
     if str(conf.get("delta.appendOnly", "")).lower() == "true":
         # legacy writer 2 implies appendOnly; a table-features table
         # must LIST it or the property is set under an undeclared feature
@@ -1701,10 +1689,13 @@ def set_table_properties(
         if up is not None:
             actions.append({"protocol": up})
     actions.append({"metaData": meta})
-    version = snap.version + 1
-    _commit(table_path, version, actions)
-    _maybe_checkpoint(table_path, version, CHECKPOINT_INTERVAL)
-    return version
+    return _transact(
+        table_path,
+        snap.version + 1,
+        "SET TBLPROPERTIES",
+        {"properties": sorted((properties or {}).keys()), "unset": sorted(unset or [])},
+        actions,
+    )
 
 
 def add_check_constraint(
@@ -1746,25 +1737,17 @@ def add_check_constraint(
     conf[key] = expr
     meta = dict(snap.metadata)
     meta["configuration"] = conf
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        }
-    ]
     up = _ensure_writer_feature(
         snap.protocol or _PROTOCOL, "checkConstraints", legacy_version=3
     )
-    if up is not None:
-        actions.append({"protocol": up})
-    actions.append({"metaData": meta})
-    version = snap.version + 1
-    _commit(table_path, version, actions)
-    _maybe_checkpoint(table_path, version, CHECKPOINT_INTERVAL)
-    return version
+    actions = ([{"protocol": up}] if up is not None else []) + [{"metaData": meta}]
+    return _transact(
+        table_path,
+        snap.version + 1,
+        "ADD CONSTRAINT",
+        {"name": name, "expr": expr},
+        actions,
+    )
 
 
 def drop_check_constraint(
@@ -1785,20 +1768,9 @@ def drop_check_constraint(
     conf.pop(key)
     meta = dict(snap.metadata)
     meta["configuration"] = conf
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name},
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        },
-        {"metaData": meta},
-    ]
-    version = snap.version + 1
-    _commit(table_path, version, actions)
-    _maybe_checkpoint(table_path, version, CHECKPOINT_INTERVAL)
-    return version
+    return _transact(
+        table_path, snap.version + 1, "DROP CONSTRAINT", {"name": name}, [{"metaData": meta}]
+    )
 
 
 def table_constraints(table_path: str) -> dict:
@@ -1888,23 +1860,13 @@ def clone_delta_lite(
     meta["id"] = str(uuid.uuid4())
     os.makedirs(dst_path, exist_ok=True)
     meta["createdTime"] = int(time.time() * 1000)
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": src_root,
-                    "sourceVersion": src_snap.version,
-                },
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        },
-        {"protocol": dict(src_snap.protocol or _PROTOCOL)},
-        {"metaData": meta},
-    ]
-    actions.extend(adds)
-    _commit(dst_path, 0, actions)
-    return 0
+    return _transact(
+        dst_path,
+        0,
+        "CLONE",
+        {"source": src_root, "sourceVersion": src_snap.version},
+        [{"protocol": dict(src_snap.protocol or _PROTOCOL)}, {"metaData": meta}] + adds,
+    )
 
 
 def streaming_delta_sink(
@@ -1972,36 +1934,20 @@ def optimize_delta_lite(
         )
     else:
         df = df.coalesce(max(1, int(target_files)))
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "inputFiles": len(snap.files),
-                    **({"zOrderBy": list(zorder_by)} if zorder_by else {}),
-                },
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        }
-    ]
-    now_ms = int(os.path.getmtime(table_path) * 1000)
-    for rel in sorted(snap.files):
-        actions.append(
-            {
-                "remove": {
-                    "path": snap.files[rel]["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                }
-            }
-        )
     adds = _stage_and_adds(df, table_path, snap.partition_columns)
     for a in adds:
         a["add"]["dataChange"] = False
-    actions.extend(adds)
-    version = snap.version + 1
-    _commit(table_path, version, actions)
-    return version
+    return _transact(
+        table_path,
+        snap.version + 1,
+        "OPTIMIZE",
+        {
+            "inputFiles": len(snap.files),
+            **({"zOrderBy": list(zorder_by)} if zorder_by else {}),
+        },
+        [_remove(snap.files[rel]["path"], data_change=False) for rel in sorted(snap.files)]
+        + adds,
+    )
 
 
 def _parse_conjuncts(condition: str):
@@ -2341,6 +2287,7 @@ def _pruned_rewrite(
     out_schema: StructType | None = None,
     new_metadata: dict | None = None,
     checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
+    txn: tuple | None = None,
 ) -> int:
     """The one transaction path of every data-removing DML (DELETE,
     UPDATE, MERGE, replaceWhere, SCD2 MERGE). The caller supplies its
@@ -2356,10 +2303,10 @@ def _pruned_rewrite(
       - applies the appendOnly rule when anything is removed;
       - sizes the output from the matched bytes and stages it under the
         table's CHECK constraints / invariants;
-      - commits remove(matched) + add(rewritten) in one version, with the
-        disjoint-transaction retry over the scanned files
-        (:func:`_commit_dml`), then checkpoints every
-        ``checkpoint_interval`` commits.
+      - commits remove(matched) + add(rewritten) in one version through
+        :func:`_transact`, whose disjoint-transaction retry checks
+        winners against the scanned files and the conjuncts, then
+        checkpoints every ``checkpoint_interval`` commits.
 
     Untouched files never move; driver traffic = file paths.
 
@@ -2411,40 +2358,22 @@ def _pruned_rewrite(
         spark.conf.get("spark.deltaLite.targetFileSize", str(128 * 1024 * 1024))
     )
     rewritten = rewritten.coalesce(max(1, -(-matched_bytes // max(1, target_fs))))
-    actions = [
-        {
-            "commitInfo": {
-                "operation": operation,
-                "operationParameters": {
-                    **op_params,
-                    "candidateFiles": len(cand),
-                    "matchedFiles": len(rel_matched),
-                },
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        }
-    ]
-    if new_metadata is not None:
-        actions.append({"metaData": new_metadata})
-    now_ms = int(os.path.getmtime(table_path) * 1000)
-    for rel in rel_matched:
-        actions.append(
-            {
-                "remove": {
-                    "path": urllib.parse.quote(rel),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-        )
-    new_adds = _stage_and_adds(
+    actions = [{"metaData": new_metadata}] if new_metadata is not None else []
+    actions += [_remove(urllib.parse.quote(rel)) for rel in rel_matched]
+    actions += _stage_and_adds(
         rewritten, table_path, snap.partition_columns,
         rules=_row_rules(new_metadata or snap.metadata), operation=operation,
     )
-    actions.extend(new_adds)
-    version = _commit_dml(table_path, snap, actions, set(cand), conjuncts)
-    _maybe_checkpoint(table_path, version, checkpoint_interval)
-    return version
+    return _transact(
+        table_path,
+        snap.version + 1,
+        operation,
+        {**op_params, "candidateFiles": len(cand), "matchedFiles": len(rel_matched)},
+        actions,
+        conflicts=(set(cand), conjuncts),
+        txn=txn,
+        checkpoint_interval=checkpoint_interval,
+    )
 
 
 def delete_delta_lite(spark: SparkSession, table_path: str, condition: str) -> int:
@@ -2654,6 +2583,7 @@ def _replace_where(
     snap: DeltaSnapshot,
     condition: str,
     checkpoint_interval: int | None,
+    txn: tuple | None,
 ) -> int:
     """``overwrite`` + ``replaceWhere``: one atomic commit that deletes
     every existing row matching ``condition`` and inserts ``df`` (whose
@@ -2692,6 +2622,7 @@ def _replace_where(
         "WRITE",
         {"mode": "OVERWRITE", "replaceWhere": condition},
         checkpoint_interval=checkpoint_interval,
+        txn=txn,
     )
 
 
@@ -2837,35 +2768,12 @@ def restore_delta_lite(
     to_remove = sorted(rel for rel in cur.files if rel not in target.files)
     if to_remove:
         _check_append_only(cur, "RESTORE")
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "RESTORE",
-                "operationParameters": {"version": target.version},
-                "engineInfo": "delta-lite (PySpark analytics engine)",
-            }
-        }
-    ]
-    if cur.metadata != target.metadata:
-        actions.append({"metaData": dict(target.metadata)})
-    now_ms = int(time.time() * 1000)
-    for rel in to_remove:
-        actions.append(
-            {
-                "remove": {
-                    "path": cur.files[rel]["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-        )
-    for rel in to_add:
-        add = dict(target.files[rel])
-        add["dataChange"] = True
-        actions.append({"add": add})
-    new_version = cur.version + 1
-    _commit(table_path, new_version, actions)
-    _maybe_checkpoint(table_path, new_version, CHECKPOINT_INTERVAL)
+    actions = [{"metaData": dict(target.metadata)}] if cur.metadata != target.metadata else []
+    actions += [_remove(cur.files[rel]["path"]) for rel in to_remove]
+    actions += [{"add": {**target.files[rel], "dataChange": True}} for rel in to_add]
+    new_version = _transact(
+        table_path, cur.version + 1, "RESTORE", {"version": target.version}, actions
+    )
     return {
         "version": new_version,
         "restored_source_version": target.version,

@@ -17,6 +17,7 @@ batch so sink semantics don't fork.
 
 from __future__ import annotations
 
+import json
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -285,13 +286,38 @@ def session_close_events(
     )
 
 
-def foreach_batch_writer(spec: "TargetSpec"):
+def _stream_query_id(spark, checkpoint: str) -> str:
+    """The query id Spark records in ``<checkpoint>/metadata`` when a query
+    first starts on that checkpoint: stable across restarts, new for a
+    new checkpoint."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(checkpoint.rstrip("/") + "/metadata")
+    stream = path.getFileSystem(spark._jsc.hadoopConfiguration()).open(path)
+    try:
+        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(raw.splitlines()[0])["id"]
+
+
+def foreach_batch_writer(spec: "TargetSpec", checkpoint: str | None = None):
     """Bridge every batch load mode (including SCD2) into a streaming sink:
-    ``stream.writeStream.foreachBatch(foreach_batch_writer(spec))``."""
+    ``stream.writeStream.foreachBatch(foreach_batch_writer(spec, ckpt))``.
+
+    With ``checkpoint`` (the query's ``checkpointLocation``), each batch's
+    write to a delta-lite file target carries ``txn=(query id,
+    batch_id)``, so a micro-batch replayed after a failure lands once:
+    exactly-once. The query id keys the watermark, as in delta-spark's
+    streaming sink: a query restarted on a new checkpoint restarts batch
+    ids at 0 under a new id, so its batches are not taken for replays.
+    Every other target and load mode stays at-least-once — a replayed
+    batch writes again."""
     from ..sinks.writers import write_target
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_target(batch_df.sparkSession, batch_df, spec)
+        spark = batch_df.sparkSession
+        txn = None if checkpoint is None else (_stream_query_id(spark, checkpoint), batch_id)
+        write_target(spark, batch_df, spec, txn=txn)
 
     return _write
 

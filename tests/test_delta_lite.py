@@ -459,6 +459,13 @@ def test_txn_idempotent_writes(spark, tmp_path):
     dl.write_delta_lite(df, tp, mode="append", txn=("job-b", 0))
     assert dl.read_delta_lite(spark, tp).count() == 3
     assert dl.load_snapshot(tp).txns == {"job-a": 1, "job-b": 0}
+    # a replaceWhere reload carries its txn through the DML commit
+    for _replay in range(2):
+        v = dl.write_delta_lite(
+            df, tp, mode="overwrite", replace_where="id = 1", txn=("job-a", 2)
+        )
+    assert v == 3 and dl.read_delta_lite(spark, tp).count() == 1
+    assert dl.load_snapshot(tp).txns == {"job-a": 2, "job-b": 0}
 
 
 def test_txn_watermark_survives_checkpoint(spark, tmp_path):
@@ -1260,10 +1267,11 @@ def test_log_store_seam_racing_writer(spark, tmp_path):
     assert rows == {(i, "x") for i in range(5) if i != 1}  # y gone, id=1 gone
 
 
-@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+@pytest.mark.parametrize("op", ["delete", "update", "merge", "optimize"])
 def test_dml_writes_checkpoint_every_interval(spark, tmp_path, op):
-    """DELETE, UPDATE and MERGE commit through the shared DML path, which
-    checkpoints every CHECKPOINT_INTERVAL commits like a write does."""
+    """DELETE, UPDATE, MERGE and OPTIMIZE commit through the one commit
+    path, which checkpoints every CHECKPOINT_INTERVAL commits like a
+    write does."""
     tp = str(tmp_path / "t")
     dl.write_delta_lite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), tp)
     for i in range(dl.CHECKPOINT_INTERVAL - 1):  # log-only commits
@@ -1272,6 +1280,8 @@ def test_dml_writes_checkpoint_every_interval(spark, tmp_path, op):
         v = dl.delete_delta_lite(spark, tp, "k = 1")
     elif op == "update":
         v = dl.update_delta_lite(spark, tp, "k = 1", {"v": "'z'"})
+    elif op == "optimize":
+        v = dl.optimize_delta_lite(tp, spark)
     else:
         src = spark.createDataFrame([(1, "m")], "k int, v string")
         v = dl.merge_delta_lite(spark, tp, src, ["k"], when_matched_update={"v": "src_v"})
@@ -1345,3 +1355,56 @@ def test_dml_fault_leaves_old_version(spark, tmp_path, op, fault):
     finally:
         dl.set_log_store(prev)
     assert _rows(dl.read_delta_lite(spark, tp)) != rows_before
+
+
+def _commit_fault_op(spark, tp, op, tmp_path):
+    """One non-DML mutating operation; returns the version it committed."""
+    rows = spark.createDataFrame([(9, "z")], "k int, v string")
+    if op in ("append", "overwrite"):
+        return dl.write_delta_lite(rows, tp, mode=op)
+    if op == "optimize":
+        return dl.optimize_delta_lite(tp, spark)
+    if op == "properties":
+        return dl.set_table_properties(tp, {"owner": "etl"})
+    if op == "constraint":
+        return dl.add_check_constraint(spark, tp, "k_nonneg", "k >= 0")
+    if op == "restore":
+        return dl.restore_delta_lite(tp, version=0)["version"]
+    if op == "clone":
+        return dl.clone_delta_lite(tp, str(tmp_path / "clone"))
+    return dl.convert_to_delta(spark, str(tmp_path / "pq"))
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["append", "overwrite", "optimize", "properties", "constraint", "restore", "clone", "convert"],
+)
+def test_commit_fault_leaves_old_version(spark, tmp_path, op):
+    """A failing ``write_commit`` under any non-DML operation leaves the
+    table at its old version with the same rows (CLONE and CONVERT leave
+    no table at all); the retry then commits."""
+    tp = str(tmp_path / "t")
+    dl.write_delta_lite(spark.createDataFrame([(0, "a"), (1, "b")], "k int, v string"), tp)
+    dl.write_delta_lite(spark.createDataFrame([(2, "c")], "k int, v string"), tp, mode="append")
+    spark.createDataFrame([(5, "p")], "k int, v string").write.parquet(str(tmp_path / "pq"))
+    before = dl.load_snapshot(tp)
+    rows_before = _rows(dl.read_delta_lite(spark, tp))
+    created = {"clone": str(tmp_path / "clone"), "convert": str(tmp_path / "pq")}.get(op)
+    store = _FaultStore("commit")
+    prev = dl.set_log_store(store)
+    try:
+        with pytest.raises(OSError, match="injected"):
+            _commit_fault_op(spark, tp, op, tmp_path)
+        assert store.raised
+        after = dl.load_snapshot(tp)
+        assert after.version == before.version
+        assert set(after.files) == set(before.files)
+        assert after.metadata == before.metadata
+        assert _rows(dl.read_delta_lite(spark, tp)) == rows_before
+        if created:
+            assert not dl.is_delta_table(created)
+        expected = 0 if created else before.version + 1
+        assert _commit_fault_op(spark, tp, op, tmp_path) == expected
+    finally:
+        dl.set_log_store(prev)
+    assert dl.load_snapshot(created or tp).version == expected

@@ -134,6 +134,20 @@ def test_engine_roundtrip_truncate_and_append(spark, tmp_path):
     assert spark.read.parquet(out).count() == 80
 
 
+def test_database_target_reconciliation_reads_the_table(spark, tmp_path):
+    """``reconciliation`` on a database target reads the table back over
+    JDBC: expected == written == the rows loaded, and an append
+    reconciles its count delta over the rows already there."""
+    src = _src(spark, tmp_path)
+    orch = Orchestrator(spark)
+    for name, load in (("rc1", "truncateInsert"), ("rc2", "simpleInsert")):
+        cfg = _write_cfg(name, src, "rc_table", load_type=load)
+        cfg["phase_3"]["target_record_insert"][0]["reconciliation"] = "true"
+        rec = orch.run(cfg).write_results[0]["reconciliation"]
+        assert rec["ok"] and rec["expected"] == rec["written"] == 40
+    assert rec["pre_existing"] == 40
+
+
 def test_table_query_pushdown_runs_in_derby(spark, tmp_path):
     src = _src(spark, tmp_path)
     orch = Orchestrator(spark)

@@ -187,6 +187,67 @@ def test_foreach_batch_reuses_batch_writer(spark, tmp_path):
     assert spark.read.parquet(out_path).count() == 1
 
 
+def test_streaming_load_into_delta_lite_is_exactly_once(spark, tmp_path):
+    """A streaming config job loading a delta-lite target commits each
+    micro-batch with txn=(<query id>, batch_id): replaying a batch through
+    the engine's batch writer (what a restart after a failure between
+    commit and offset-log write does) lands its rows once. A new
+    checkpoint is a new query, so its batch 0 is not taken for a replay."""
+    import os
+    import shutil
+
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.config import TargetSpec
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.plans.engine import (
+        Orchestrator,
+    )
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.sources.delta_lite import (
+        load_snapshot,
+        read_delta_lite,
+    )
+    from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.streaming.ops import (
+        foreach_batch_writer,
+    )
+
+    src, out, temp = (str(tmp_path / d) for d in ("src", "out", "temp"))
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    batch.write.parquet(src)
+    target = {
+        "dataTarget": "local",
+        "dataFrameName": "src",
+        "loadType": "simpleInsert",
+        "path": out,
+        "outputDataProperties": {"fileFormat": "deltalake"},
+    }
+    cfg = {
+        "configs": {
+            "name": "stream_delta",
+            "s3TempPath": temp,
+            "phase_1": {
+                "input_data": {
+                    "dataSource": "local",
+                    "dataFrameName": "src",
+                    "path": src,
+                    "streaming": "true",
+                    "fileProperties": {"fileFormat": "parquet"},
+                }
+            },
+        },
+        "phase_3": {"target_record_insert": [target]},
+    }
+    Orchestrator(spark).run(cfg)
+    ckpt = os.path.join(temp, "stream_ckpt", "stream_delta", "src")
+    (query_id,) = load_snapshot(out).txns
+    assert load_snapshot(out).txns == {query_id: 0}
+    write = foreach_batch_writer(TargetSpec.from_dict(target), ckpt)
+    write(batch, 0)  # the replayed batch
+    assert read_delta_lite(spark, out).count() == 2
+
+    shutil.rmtree(ckpt)
+    spark.createDataFrame([(3, "c")], "k int, v string").write.mode("append").parquet(src)
+    Orchestrator(spark).run(cfg)
+    assert sorted(r.k for r in read_delta_lite(spark, out).collect()) == [1, 1, 2, 2, 3]
+
+
 def test_interval_join_stream(spark, tmp_path):
     """Stream-stream interval join: click within 30 min BEFORE purchase."""
     from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.streaming.ops import (

@@ -15,8 +15,9 @@ check is cheap enough to run every session:
   - every config-registry step resolves to a callable whose first
     parameter is the input DataFrame;
   - delta-lite data files are staged only by the three writers that own
-    a transaction (``PRIMITIVE_CALLERS``), and DML commits only through
-    ``_pruned_rewrite`` — read from the package source's AST.
+    a transaction, and every commit — the ``_commit`` call and the
+    ``commitInfo`` it carries — goes through ``_transact``
+    (``PRIMITIVE_CALLERS``) — read from the package source's AST.
 
 Exit code 1 on any failure; prints each finding.
 """
@@ -35,16 +36,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(REPO, "building_and_operating_data_pipelines_at_scale_using_ci_cd_spark")
 
 #: delta-lite primitive → the only functions of ``sources/delta_lite.py``
-#: that may call it. ``optimize_delta_lite`` is the one dataChange=false
-#: writer; every data-removing DML goes through ``_pruned_rewrite``.
+#: that may call it (or, for ``commitInfo``, write it as a dict-literal
+#: key). ``optimize_delta_lite`` is the one dataChange=false writer;
+#: every data-removing DML goes through ``_pruned_rewrite``; every
+#: commit goes through ``_transact``.
 PRIMITIVE_CALLERS = {
     "_stage_and_adds": {"write_delta_lite", "_pruned_rewrite", "optimize_delta_lite"},
-    "_commit_dml": {"_pruned_rewrite"},
+    "_commit": {"_transact"},
+    "commitInfo": {"_transact"},
 }
 
 
 def primitive_call_findings(package: str = PACKAGE) -> list[str]:
-    """Calls of a ``PRIMITIVE_CALLERS`` primitive from anywhere else in the
+    """Uses of a ``PRIMITIVE_CALLERS`` primitive from anywhere else in the
     package (another delta_lite function, another module, module level)."""
     findings = []
     for root, _dirs, files in os.walk(package):
@@ -57,18 +61,23 @@ def primitive_call_findings(package: str = PACKAGE) -> list[str]:
             for top in tree.body:
                 owner = getattr(top, "name", "<module>")
                 for node in ast.walk(top):
-                    if not isinstance(node, ast.Call):
+                    if isinstance(node, ast.Call):
+                        f = node.func
+                        used = [f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)]
+                    elif isinstance(node, ast.Dict):
+                        used = [k.value for k in node.keys if isinstance(k, ast.Constant)]
+                    else:
                         continue
-                    f = node.func
-                    callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-                    allowed = PRIMITIVE_CALLERS.get(callee)
-                    if allowed is None:
-                        continue
-                    if rel != os.path.join("sources", "delta_lite.py") or owner not in allowed:
-                        findings.append(
-                            f"{rel}:{node.lineno} {owner} calls {callee}; only "
-                            f"{sorted(allowed)} may (route DML through _pruned_rewrite)"
-                        )
+                    for name in used:
+                        allowed = PRIMITIVE_CALLERS.get(name)
+                        if allowed is None:
+                            continue
+                        if rel != os.path.join("sources", "delta_lite.py") or owner not in allowed:
+                            findings.append(
+                                f"{rel}:{node.lineno} {owner} uses {name}; only "
+                                f"{sorted(allowed)} may (commit through _transact, "
+                                f"DML through _pruned_rewrite)"
+                            )
     return findings
 
 
@@ -166,7 +175,7 @@ def main() -> int:
         ):
             failures.append(f"registry step {name}: first parameter is not the input DataFrame ({first})")
 
-    # 8. one transaction path for delta-lite DML
+    # 8. one commit path in delta-lite, one transaction path for its DML
     failures += primitive_call_findings()
 
     for f in failures:
