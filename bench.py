@@ -344,6 +344,23 @@ def _failed_tasks(sc) -> int:
         return -1
 
 
+def _failed_tasks_all_jobs(sc) -> int:
+    """Cumulative failed-task count across every job so far, whatever its
+    job group: the executors' failed-task totals in the JVM status store
+    (the ``/allexecutors`` figures of the status REST API).
+    ``_failed_tasks`` walks only the ungrouped jobs, so it misses every
+    streaming micro-batch job (Spark groups those under the run id) and
+    every job a caller ran under ``setJobGroup``. An executor's record is
+    rewritten whenever it goes idle, so the count is exact between
+    queries; it survives the UI's job and stage retention limits.
+    Returns -1 if the store is unavailable."""
+    try:
+        execs = sc._jsc.sc().statusStore().executorList(False)
+        return sum(execs.apply(i).failedTasks() for i in range(execs.size()))
+    except Exception:
+        return -1
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -379,6 +396,7 @@ def main() -> None:
     run_totals = [0.0, 0.0, 0.0]
     failed_by_query: dict[str, int] = {}
     failed_before_all = _failed_tasks(spark.sparkContext)
+    failed_before_all_jobs = _failed_tasks_all_jobs(spark.sparkContext)
     for name in HEADLINE:
         failed_before = _failed_tasks(spark.sparkContext)
         df = qs[name](spark, sf_dir)
@@ -413,6 +431,7 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     failed_total = _failed_tasks(spark.sparkContext)
+    failed_total_all_jobs = _failed_tasks_all_jobs(spark.sparkContext)
     # fixed calibration query: its cross-round ratio separates uniform
     # environment drift (every query slower by the same factor) from real
     # per-query regressions — round 5 shipped a phantom uniform 1.35x
@@ -437,6 +456,12 @@ def main() -> None:
             else -1
         ),
         "failed_tasks_by_query": failed_by_query,
+        # every job group, streaming micro-batches included
+        "failed_tasks_all_jobs": (
+            failed_total_all_jobs - failed_before_all_jobs
+            if failed_total_all_jobs >= 0 and failed_before_all_jobs >= 0
+            else -1
+        ),
         "calibration": {
             "query": calib,
             "sec": timings.get(calib),

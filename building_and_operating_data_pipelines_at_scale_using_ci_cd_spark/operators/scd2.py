@@ -95,9 +95,14 @@ def scd2_merge(
     keys: list[str],
     compare_cols: list[str] | None = None,
     effective_ts=None,
+    hits=None,
 ) -> DataFrame:
     """Merge an incoming snapshot into an SCD2 target; returns the full
     rewritten table (history + closed + carried + inserted).
+
+    ``hits`` (an Observation) observes, as ``hits``, the count of the
+    target's current rows that an incoming key matches, in the merge's
+    own join — how a delta-lite MERGE learns whether it touched a file.
 
     ``target`` rows must carry the SCD2 meta columns (as produced by this
     function / ``scd2_initial``). ``compare_cols`` defaults to all non-key,
@@ -142,6 +147,11 @@ def scd2_merge(
 
     cond = reduce(and_, [current[k].eqNullSafe(inc_side[f"__i_{k}"]) for k in keys])
     joined = current.join(inc_side, cond, "full_outer")
+    if hits is not None:
+        joined = joined.observe(
+            hits,
+            F.count_if(F.col("__t_fp").isNotNull() & F.col("__i_fp").isNotNull()).alias("hits"),
+        )
 
     # ONE pass over the joined rows (round-12 optimization): the previous
     # form filtered the same join three times and unioned the lanes, but

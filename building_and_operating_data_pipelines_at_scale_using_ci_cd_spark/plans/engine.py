@@ -19,9 +19,9 @@ Execution model (SURVEY.md §3, entry point A):
      post hooks (spark.json:68-107)
 
 Scale notes: views are lazy; nothing is collected except validation counts
-(which the dialect requires). Validation tags each row's lane once; one
-grouped count over the checkpointed tags feeds both gates, which pass
-before the quarantine or any target is written.
+(which the dialect requires). Validation tags each row's lane once; the
+eager checkpoint of the tagged rows observes the lane counts that feed
+both gates, which pass before the quarantine or any target is written.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ import subprocess
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import JobConfig
@@ -307,8 +307,8 @@ class Orchestrator:
 
     def _phase2_validate(self, config: JobConfig, result: JobResult) -> DataFrame | None:
         """Applies V1/V2 to the primary input view in one tagged pass: the
-        valid rows replace the view, one grouped count sets ``input_count``
-        and ``bad_count``; returns the tagged invalid rows."""
+        valid rows replace the view, the metrics observed on the pass set
+        ``input_count`` and ``bad_count``; returns the tagged invalid rows."""
         if not config.data_validation_required or not config.primary_input:
             return None
         name = config.primary_input.dataframe_name
@@ -322,14 +322,19 @@ class Orchestrator:
         v = config.validations
         null_keys = v.null_primary_keys if v.null_value_validation else []
         dup_keys = v.dup_primary_keys if v.duplicate_record_validation else []
-        # the count, the valid lane and the quarantine all read these rows.
+        # the valid lane and the quarantine both read these rows.
         # localCheckpoint, NOT cache: a cached deterministic subtree is
         # silently substituted into any identical later plan, leaking state
-        # across runs and pinning memory for the session's lifetime
-        tagged = tag_lanes(df, null_keys, dup_keys, v.dup_order_by_cols).localCheckpoint(eager=False)
-        counts = dict(tagged.groupBy(ERROR_REASON).count().collect())
-        result.input_count = counts.pop(None, 0)
-        result.bad_count = sum(counts.values())
+        # across runs and pinning memory for the session's lifetime. The
+        # eager checkpoint is the one action of this phase; the lane counts
+        # ride on it as observed metrics.
+        obs = Observation()
+        tagged = tag_lanes(df, null_keys, dup_keys, v.dup_order_by_cols).observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.count(ERROR_REASON).alias("bad")
+        ).localCheckpoint(eager=True)
+        counts = obs.get
+        result.input_count = counts["rows"] - counts["bad"]
+        result.bad_count = counts["bad"]
         good = tagged.filter(F.col(ERROR_REASON).isNull()).drop(ERROR_REASON)
         good.createOrReplaceTempView(name)
         result.views[name] = good

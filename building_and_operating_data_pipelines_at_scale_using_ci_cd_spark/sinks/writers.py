@@ -22,9 +22,11 @@ from __future__ import annotations
 
 import os
 import shutil
+import urllib.parse
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.scd2 import scd2_merge, SCD2_META_COLS
 from ..operators.validation import ERROR_REASON
@@ -99,7 +101,9 @@ def _single_file_rename(spark: SparkSession, path: str, prefix: str | None) -> N
 
 def _write_file(
     df: DataFrame, spec: "TargetSpec", mode: str, txn: tuple | None = None
-) -> None:
+) -> int | None:
+    """Write a file target; returns the table version a delta-lite write
+    left, None for every other format."""
     fmt = _fmt(spec.file_format)
     out = df.coalesce(1) if spec.single_file else df
     if spec.sort_by:
@@ -147,8 +151,8 @@ def _write_file(
                     for row in pdf.itertuples(index=False, name=None)
                 ],
             )
-        return
-    if fmt == "delta" and not _has_delta_spark():
+        return None
+    if _is_delta_lite(spec):
         # S9/W2 executed for real without delta-spark: the in-repo
         # transaction-log implementation (sources/delta_lite.py). Stages
         # through Spark's parquet writer, then records one atomic commit.
@@ -157,7 +161,7 @@ def _write_file(
         # ``txn`` makes a replayed streaming micro-batch a no-op.
         from ..sources.delta_lite import write_delta_lite
 
-        write_delta_lite(
+        return write_delta_lite(
             out,
             spec.path,
             mode=mode,
@@ -165,10 +169,10 @@ def _write_file(
             replace_where=spec.options.get("replaceWhere"),
             txn=txn,
         )
-        return
     writer.format(fmt).save(spec.path)
     if spec.single_file:
         _single_file_rename(df.sparkSession, spec.path, spec.output_file_name_prefix)
+    return None
 
 
 def _write_catalog(df: DataFrame, spec: "TargetSpec", mode: str) -> None:
@@ -270,6 +274,58 @@ def _read_back(spark: SparkSession, spec: "TargetSpec") -> DataFrame:
 
         return read_delta_lite(spark, spec.path)
     return spark.read.format(fmt).load(spec.path)
+
+
+def _is_delta_lite(spec: "TargetSpec") -> bool:
+    """A file target that ``_write_file`` hands to delta-lite."""
+    return (
+        spec.data_target not in ("catalog", "database", "sftp")
+        and _fmt(spec.file_format) == "delta"
+        and not _has_delta_spark()
+    )
+
+
+def _footer_rows(path: str) -> int:
+    """Sum of the footer row counts of the parquet files a read of the
+    local directory ``path`` (hive partition dirs included) would scan —
+    the same counts Spark's own parquet ``count()`` reads."""
+    import pyarrow.parquet as pq
+
+    from ..sources.readers import _hidden
+
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for name in files:
+            if not _hidden(name):
+                total += pq.ParquetFile(os.path.join(root, name)).metadata.num_rows
+    return total
+
+
+def _target_rows(spark: SparkSession, spec: "TargetSpec") -> int:
+    """The row count a read-back of the target would give, from metadata
+    where the target keeps it: a delta-lite table's add stats, or the
+    footers of a local parquet target. Any other target — other formats,
+    non-local paths, catalog and database tables, a delta-lite add
+    without a row count, a footer pyarrow cannot parse — is read back
+    and counted."""
+    if _is_delta_lite(spec):
+        from ..sources.delta_lite import live_row_count
+
+        rows = live_row_count(spec.path)
+        if rows is not None:
+            return rows
+    elif (
+        spec.data_target not in ("catalog", "database", "sftp")
+        and _fmt(spec.file_format) == "parquet"
+    ):
+        url = urllib.parse.urlparse(spec.path)
+        if url.scheme in ("", "file"):
+            try:
+                return _footer_rows(url.path if url.scheme else spec.path)
+            except (OSError, ValueError, NotImplementedError):
+                pass  # a footer pyarrow cannot parse: Spark's count decides
+    return _read_back(spark, spec).count()
 
 
 def _delta_table(spark: SparkSession, path: str):
@@ -408,11 +464,12 @@ def _swap_dirs(spark: SparkSession, staging: str, final: str) -> None:
         fs.delete(aside, True)
 
 
-def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> None:
+def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> int | None:
     """W5 as a load mode. With delta-spark present and a Delta target, the
     merge is a Delta ``MERGE INTO`` (rewrites only matched files); the
     file-sink fallback merges in Spark and swaps the rewritten table in
-    via Hadoop-FS renames."""
+    via Hadoop-FS renames. Returns the version a delta-lite merge
+    committed, else None."""
     fmt = _fmt(spec.file_format)
     keys = spec.scd2_keys
     if not keys:
@@ -424,14 +481,14 @@ def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> None:
         dt = _delta_table(spark, spec.path)
         if dt is not None:  # pragma: no cover - delta-spark not in container
             _scd2_delta_merge(spark, dt, df, spec)
-            return
+            return None
         if not _has_delta_spark():
             # the delta-lite lane: real transaction-log MERGE that rewrites
             # only matched files (and creates the table on first load),
             # replacing the full-table swap the plain file sink needs
             from ..sources.delta_lite import merge_scd2_delta_lite
 
-            merge_scd2_delta_lite(
+            return merge_scd2_delta_lite(
                 spark,
                 spec.path,
                 df,
@@ -439,7 +496,6 @@ def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> None:
                 compare_cols=spec.scd2_compare_cols or None,
                 effective_ts=spec.scd2_effective_col,
             )
-            return
 
     # scd2_merge refuses an existing table that lacks the SCD2 meta columns
     target = (
@@ -455,15 +511,33 @@ def _scd2_write(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> None:
     staging = spec.path.rstrip("/") + "__staging"
     merged.write.mode("overwrite").format(fmt).save(staging)
     _swap_dirs(spark, staging, spec.path)
+    return None
 
 
 def write_target(
     spark: SparkSession, df: DataFrame, spec: "TargetSpec", txn: tuple | None = None
 ) -> dict:
-    """Write one target_record_insert entry; returns a reconciliation
-    record (V6, ``spark.json:80``) when requested. ``txn=(app_id,
-    version)`` reaches a delta-lite file write as its idempotent-writer
-    ``txn`` action (see ``write_delta_lite``); other targets ignore it."""
+    """Write one target_record_insert entry and return its run record:
+    ``path`` and ``loadType``; for a delta-lite target the commit's
+    ``version``, ``filesAdded``, ``filesRemoved``, ``bytesAdded`` and
+    ``matchedFiles``, read from its log entry; and the reconciliation
+    (V6, ``spark.json:80``) when requested:
+
+      - count (the default): ``expected`` is observed on the target write
+        itself, so the rows are counted as they are written, with no job
+        of their own. ``written`` (and, for an append, the ``pre_existing``
+        rows counted before the write) comes from metadata where the
+        target keeps it — delta-lite add stats or local parquet footers —
+        and from a read-back count otherwise;
+      - ``reconciliationMode=hash``: checksums of the source and a
+        read-back of the target;
+      - scdType2Insert: the snapshot's distinct business keys against the
+        target's current rows (ok when there are at least as many current
+        rows; keys missing from a snapshot keep their current row).
+
+    ``txn=(app_id, version)`` reaches a delta-lite file write as its
+    idempotent-writer ``txn`` action (see ``write_delta_lite``); other
+    targets ignore it."""
     from ..operators.reconcile import reconcile_counts, reconcile_hash
 
     load = spec.load_type or "simpleInsert"
@@ -478,18 +552,31 @@ def write_target(
     mode = spec.save_mode or {"simpleInsert": "append", "truncateInsert": "overwrite"}.get(
         load, "overwrite"
     )
+    scd2 = mode == "scd2" or load == "scdType2Insert"
+    hashed = spec.reconciliation_mode == "hash" and not scd2 and mode != "append"
+    counted = spec.reconciliation and not scd2 and not hashed
     # V6 pre-count: an append onto a non-empty target must reconcile the
     # count DELTA, not the absolute target count (which includes rows from
     # previous loads and would fail a perfectly good append).
     pre_existing = 0
-    if spec.reconciliation and mode == "append" and load != "scdType2Insert":
+    if counted and mode == "append":
         try:
-            pre_existing = _read_back(spark, spec).count()
+            pre_existing = _target_rows(spark, spec)
         except Exception:
             pre_existing = 0  # absent/unreadable target: treat as fresh
+    if counted:
+        # before any coalesce/sort the writer adds: every source row once
+        rows = Observation()
+        df = df.observe(rows, F.count(F.lit(1)).alias("rows"))
+    delta_lite = _is_delta_lite(spec)
+    if delta_lite:
+        from ..sources.delta_lite import commit_stats, table_version
 
-    if mode == "scd2" or load == "scdType2Insert":
-        _scd2_write(spark, df, spec)
+        before = table_version(spec.path)
+
+    version = None
+    if scd2:
+        version = _scd2_write(spark, df, spec)
     elif spec.data_target == "catalog":
         _write_catalog(df, spec, mode)
     elif spec.data_target == "database":
@@ -497,28 +584,35 @@ def write_target(
     elif spec.data_target == "sftp":
         _write_sftp(spark, df, spec, mode)
     else:
-        _write_file(df, spec, mode, txn)
+        version = _write_file(df, spec, mode, txn)
 
     result: dict = {"path": spec.path, "loadType": load}
-    if spec.reconciliation:
-        # V6 (spark.json:80): count check by default (metadata-only for
-        # parquet), value-level checksum when reconciliationMode=hash.
-        if spec.reconciliation_mode == "hash" and load != "scdType2Insert" and mode != "append":
-            written_df = _read_back(spark, spec)
-            result["reconciliation"] = reconcile_hash(df, written_df)
-        else:
-            expected = df.count()
-            written = _read_back(spark, spec).count()
-            if load == "scdType2Insert":
-                # merge output ≥ snapshot (history rows carried through)
-                result["reconciliation"] = {
-                    "mode": "count",
-                    "expected": expected,
-                    "written": written,
-                    "ok": written >= expected,
-                }
-            else:
-                result["reconciliation"] = reconcile_counts(expected, written, pre_existing)
+    committed = True
+    if delta_lite:
+        # a delta-lite write that found its txn applied, or an ``ignore``
+        # write onto an existing table, commits nothing and runs no job
+        committed = version > before
+        result.update(commit_stats(spec.path, version) if committed else {"version": version})
+    if not spec.reconciliation:
+        return result
+    if scd2:
+        from ..operators.scd2 import IS_CURRENT
+
+        expected = df.select(*spec.scd2_keys).distinct().count()
+        written = _read_back(spark, spec).filter(F.col(IS_CURRENT)).count()
+        result["reconciliation"] = {
+            "mode": "count",
+            "expected": expected,
+            "written": written,
+            "ok": written >= expected,
+        }
+    elif hashed:
+        result["reconciliation"] = reconcile_hash(df, _read_back(spark, spec))
+    else:
+        expected = rows.get["rows"] if committed else df.count()
+        result["reconciliation"] = reconcile_counts(
+            expected, _target_rows(spark, spec), pre_existing
+        )
     return result
 
 

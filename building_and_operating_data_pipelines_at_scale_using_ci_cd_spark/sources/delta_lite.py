@@ -44,8 +44,10 @@ Scale notes:
     the read is Catalyst-native.
   - MERGE rewrites ONLY the files that contain a matched current business
     key (found with one ``input_file_name()`` semi-join, driver traffic
-    bounded by the file COUNT) — the at-scale property that makes Delta
-    MERGE cheaper than the full-table overwrite the file sink does.
+    bounded by the file COUNT; a single candidate file is staged straight
+    away and its match counted on the staging write) — the at-scale
+    property that makes Delta MERGE cheaper than the full-table overwrite
+    the file sink does.
   - every ``add`` action records per-file ``stats`` (numRecords +
     min/maxValues/nullCount from the parquet footers — the public
     protocol field), and DELETE/UPDATE/MERGE + predicate reads use them
@@ -534,6 +536,51 @@ def _resolve_timestamp(table_path: str, ts) -> int:
             f"omit timestampAsOf to read the current snapshot"
         )
     return max(v for v, t in stamps.items() if t <= ms)
+
+
+def table_version(table_path: str) -> int:
+    """The latest version of the table at ``table_path``; -1 when there
+    is no table there yet. Reads the log directory listing only."""
+    log = _log_path(table_path)
+    if not os.path.isdir(log):
+        return -1
+    return max(_commit_versions(log) + _checkpoint_versions(log), default=-1)
+
+
+def commit_stats(table_path: str, version: int) -> dict:
+    """What the commit at ``version`` did, from its log entry alone (no
+    Spark job): ``version``, ``filesAdded``, ``filesRemoved``,
+    ``bytesAdded``, and the ``matchedFiles`` its commitInfo records
+    (None for operations that record none)."""
+    out = {"version": version, "filesAdded": 0, "filesRemoved": 0,
+           "bytesAdded": 0, "matchedFiles": None}
+    with open(os.path.join(_log_path(table_path), f"{version:020d}.json"), encoding="utf-8") as fh:
+        for line in fh:
+            if not line.strip():
+                continue
+            action = json.loads(line)
+            if "add" in action:
+                out["filesAdded"] += 1
+                out["bytesAdded"] += int(action["add"].get("size") or 0)
+            elif "remove" in action:
+                out["filesRemoved"] += 1
+            elif "commitInfo" in action:
+                params = action["commitInfo"].get("operationParameters") or {}
+                out["matchedFiles"] = params.get("matchedFiles")
+    return out
+
+
+def live_row_count(table_path: str) -> int | None:
+    """Rows of the table's latest snapshot from its add stats alone:
+    each add's ``numRecords`` less its deletion vector's cardinality.
+    None when an add records no row count."""
+    total = 0
+    for add in load_snapshot(table_path).files.values():
+        rows = json.loads(add.get("stats") or "{}").get("numRecords")
+        if rows is None or rows < 0:
+            return None
+        total += rows - int((add.get("deletionVector") or {}).get("cardinality") or 0)
+    return total
 
 
 def history_delta_lite(table_path: str) -> list:
@@ -1261,7 +1308,8 @@ def _transact(
         ``txn`` (an idempotent replay), and re-aims at the next slot
         once every winner commutes with ``conflicts=(read_set,
         conjuncts)`` (:func:`_assert_commutes`; each winner is checked
-        once across retries);
+        once across retries). ``conflicts`` may also be a function
+        returning that pair, called on the first lost race only;
       - checkpoints every ``checkpoint_interval`` versions."""
     head = [
         {
@@ -1288,6 +1336,8 @@ def _transact(
                 # the winner was our own replay; our staged files stay
                 # unreferenced (vacuum-able)
                 return latest.version
+            if callable(conflicts):
+                conflicts = conflicts()
             read_set, conjuncts = conflicts
             types = _schema_types(latest)
             if conjuncts is not None:
@@ -1354,12 +1404,16 @@ def _stage_and_adds(
     pcols: list,
     rules: list | None = None,
     operation: str = "WRITE",
-) -> list:
+    gate=None,
+) -> list | None:
     """Stage ``df`` through Spark's parquet writer, move the part files
     into the table (hive dirs preserved for partitioned layouts) and
     return their ``add`` actions. ``rules`` (the table's row-level
     CHECK constraints / invariants from :func:`_row_rules`) are
-    enforced inside the staging write itself — see :func:`_rule_observe`."""
+    enforced inside the staging write itself — see :func:`_rule_observe`.
+    ``gate()``, when given, runs after the staging write and before the
+    rules are checked: False discards the staged files and returns None
+    (it may also raise); nothing is published either way."""
     os.makedirs(table_path, exist_ok=True)
     stage = tempfile.mkdtemp(prefix=".delta_stage_", dir=table_path)
     obs = None
@@ -1370,6 +1424,8 @@ def _stage_and_adds(
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(stage)
+        if gate is not None and not gate():
+            return None
         if obs is not None:
             metrics = obs.get
             if metrics["n_bad"]:
@@ -2275,11 +2331,30 @@ def _source_key_conjuncts(source: DataFrame, on_keys: list) -> list:
     return out
 
 
+def _key_bound(snap: DeltaSnapshot, source: DataFrame, on_keys: list):
+    """MERGE's key-range bound for :func:`_pruned_rewrite`: the
+    conjuncts of :func:`_source_key_conjuncts` when they can prune, i.e.
+    when more than one live file carries partition values or min/max
+    stats on a key; otherwise the same computation deferred, as a
+    function, so the source's min/max job runs only if a lost commit
+    race needs the bound to check the winners."""
+    l2p = _column_mapping(snap.metadata)
+    phys = {l2p.get(k, k) for k in on_keys}
+    prunable = 0
+    for add in snap.files.values():
+        stats = json.loads(add.get("stats") or "{}")
+        if phys & (set(add.get("partitionValues") or {}) | set(stats.get("minValues") or {})):
+            prunable += 1
+            if prunable > 1:
+                return _source_key_conjuncts(source, on_keys)
+    return lambda: _source_key_conjuncts(source, on_keys)
+
+
 def _pruned_rewrite(
     spark: SparkSession,
     table_path: str,
     snap: DeltaSnapshot,
-    conjuncts: list,
+    conjuncts,
     match,
     rewrite,
     operation: str,
@@ -2291,16 +2366,33 @@ def _pruned_rewrite(
 ) -> int:
     """The one transaction path of every data-removing DML (DELETE,
     UPDATE, MERGE, replaceWhere, SCD2 MERGE). The caller supplies its
-    predicate bound (``conjuncts``), ``match(tagged)`` — the rows of the
-    ``__file``-tagged candidate scan that the operation touches — and
-    ``rewrite(rows)``, the new content of the matched files; this
-    skeleton does the rest:
+    predicate bound (``conjuncts``, or a function computing them that
+    only a lost commit race calls — see :func:`_key_bound`),
+    ``match(tagged)`` — the rows of the ``__file``-tagged candidate scan
+    that the operation touches — and ``rewrite(rows, hits)``, the new
+    content of the matched files. When ``hits`` is an Observation,
+    ``rewrite`` observes on it, as ``hits``, the count of ``rows`` it
+    matches, at the place it computes that match anyway (the predicate,
+    MERGE's source-key join, the SCD2 merge join). This skeleton does
+    the rest:
 
       - refuses tables whose writer protocol it cannot honour;
-      - scans only the files the conjuncts' stats cannot rule out, and
-        keys the matched files as the snapshot does (table-relative for
-        owned files, absolute for files a shallow CLONE references);
-      - applies the appendOnly rule when anything is removed;
+      - scans only the files the conjuncts' stats cannot rule out;
+      - finds the matched files in one of two shapes, chosen by the
+        candidate count:
+          - one candidate file: no separate pass. It stages
+            ``rewrite(candidate rows, hits)`` straight away and reads the
+            match count off that staging write. With no hit the staged
+            files are discarded unpublished, and the commit stages
+            ``rewrite(no rows)`` and removes nothing, as the two-pass
+            shape does when nothing matches;
+          - otherwise two passes: one job collects the files holding a
+            ``match`` row (keyed as the snapshot keys them:
+            table-relative for owned files, absolute for files a shallow
+            CLONE references), then the rewrite of just those files is
+            staged;
+      - applies the appendOnly rule when anything is removed, before any
+        file is published;
       - sizes the output from the matched bytes and stages it under the
         table's CHECK constraints / invariants;
       - commits remove(matched) + add(rewritten) in one version through
@@ -2316,64 +2408,101 @@ def _pruned_rewrite(
     so the upsert + evolution are one atomic version."""
     _check_writable(snap)
     out_schema = out_schema or snap.schema
-    cand = _candidate_files(snap, conjuncts)
-    tagged = _read_files(spark, snap, cand).withColumn(
-        "__file", F.input_file_name()
-    )
-    matched_files = [
-        r["__file"] for r in match(tagged).select("__file").distinct().collect()
-    ]
+    rules = _row_rules(new_metadata or snap.metadata)
+    if callable(conjuncts):
+        bound, cand = conjuncts, sorted(snap.files)
 
-    def _snapshot_key(f: str) -> str:
-        # input_file_name() gives the physical URI; the snapshot keys
-        # files by their add-action path — table-relative for owned
-        # files, absolute for files referenced across tables (CLONE)
-        phys = urllib.parse.unquote(urllib.parse.urlparse(f).path)
-        if _is_under(phys, table_path):
-            return os.path.relpath(phys, table_path).replace(os.sep, "/")
-        return phys
+        def conflicts():
+            # the read set and bound the computed bound would have given
+            bounded = bound()
+            return set(_candidate_files(snap, bounded)), bounded
+    else:
+        cand = _candidate_files(snap, conjuncts)
+        conflicts = (set(cand), conjuncts)
 
-    rel_matched = sorted(_snapshot_key(f) for f in matched_files)
-    if rel_matched:
-        # the protocol's exact appendOnly rule: a commit may not carry
-        # dataChange=true removes — a DML that matched nothing is legal
-        _check_append_only(snap, operation)
-    pruned = _read_files(spark, snap, rel_matched)
-    rewritten = rewrite(pruned).select(
-        *[F.col(f.name).cast(f.dataType) for f in out_schema.fields]
-    )
-    # output sizing (round 13, guide §6): without it the staged rewrite
-    # inherits the session's shuffle partitioning, so the file count per
-    # commit scaled with CORE COUNT — 32 near-empty files per DML commit
-    # at local[32] (the r12 8-core bench lane ran delta_replace_where 3x
-    # faster than 32-core, scaling ratio 0.33: pure add-action/stat/
-    # publish overhead). Size the output from the matched input bytes
-    # instead: ceil(matched_bytes / targetFileSize) files, minimum 1 —
-    # a 10 GB rewrite still fans out (and keeps its upstream scan
-    # parallelism through the coalesce), a 2 MB one lands as one file.
-    matched_bytes = sum(
-        int((snap.files.get(rel) or {}).get("size") or 0) for rel in rel_matched
-    )
-    target_fs = int(
-        spark.conf.get("spark.deltaLite.targetFileSize", str(128 * 1024 * 1024))
-    )
-    rewritten = rewritten.coalesce(max(1, -(-matched_bytes // max(1, target_fs))))
+    def stage(rows: DataFrame, matched: list, gate=None):
+        rewritten = rows.select(
+            *[F.col(f.name).cast(f.dataType) for f in out_schema.fields]
+        )
+        # output sizing (round 13, guide §6): without it the staged rewrite
+        # inherits the session's shuffle partitioning, so the file count
+        # per commit scaled with CORE COUNT — 32 near-empty files per DML
+        # commit at local[32] (the r12 8-core bench lane ran
+        # delta_replace_where 3x faster than 32-core, scaling ratio 0.33:
+        # pure add-action/stat/publish overhead). Size the output from the
+        # matched input bytes instead: ceil(matched_bytes /
+        # targetFileSize) files, minimum 1 — a 10 GB rewrite still fans out
+        # (and keeps its upstream scan parallelism through the coalesce), a
+        # 2 MB one lands as one file.
+        matched_bytes = sum(
+            int((snap.files.get(rel) or {}).get("size") or 0) for rel in matched
+        )
+        target_fs = int(
+            spark.conf.get("spark.deltaLite.targetFileSize", str(128 * 1024 * 1024))
+        )
+        return _stage_and_adds(
+            rewritten.coalesce(max(1, -(-matched_bytes // max(1, target_fs)))),
+            table_path, snap.partition_columns,
+            rules=rules, operation=operation, gate=gate,
+        )
+
+    adds = None
+    if len(cand) == 1:
+        hits = Observation()
+
+        def gate() -> bool:
+            if not hits.get["hits"]:
+                return False
+            # the protocol's exact appendOnly rule: a commit may not carry
+            # dataChange=true removes — a DML that matched nothing is legal
+            _check_append_only(snap, operation)
+            return True
+
+        adds = stage(rewrite(_read_files(spark, snap, cand), hits), cand, gate)
+        rel_matched = cand if adds is not None else []
+    else:
+        tagged = _read_files(spark, snap, cand).withColumn(
+            "__file", F.input_file_name()
+        )
+        matched_files = [
+            r["__file"] for r in match(tagged).select("__file").distinct().collect()
+        ]
+
+        def _snapshot_key(f: str) -> str:
+            # input_file_name() gives the physical URI; the snapshot keys
+            # files by their add-action path — table-relative for owned
+            # files, absolute for files referenced across tables (CLONE)
+            phys = urllib.parse.unquote(urllib.parse.urlparse(f).path)
+            if _is_under(phys, table_path):
+                return os.path.relpath(phys, table_path).replace(os.sep, "/")
+            return phys
+
+        rel_matched = sorted(_snapshot_key(f) for f in matched_files)
+        if rel_matched:
+            _check_append_only(snap, operation)
+    if adds is None:
+        adds = stage(rewrite(_read_files(spark, snap, rel_matched), None), rel_matched)
     actions = [{"metaData": new_metadata}] if new_metadata is not None else []
     actions += [_remove(urllib.parse.quote(rel)) for rel in rel_matched]
-    actions += _stage_and_adds(
-        rewritten, table_path, snap.partition_columns,
-        rules=_row_rules(new_metadata or snap.metadata), operation=operation,
-    )
     return _transact(
         table_path,
         snap.version + 1,
         operation,
         {**op_params, "candidateFiles": len(cand), "matchedFiles": len(rel_matched)},
-        actions,
-        conflicts=(set(cand), conjuncts),
+        actions + adds,
+        conflicts=conflicts,
         txn=txn,
         checkpoint_interval=checkpoint_interval,
     )
+
+
+def _count_hits(rows: DataFrame, flag, hits: Observation | None) -> DataFrame:
+    """``rows`` with the count of those where ``flag`` is true observed
+    on ``hits`` (see :func:`_pruned_rewrite`); ``rows`` itself without
+    an Observation."""
+    if hits is None:
+        return rows
+    return rows.observe(hits, F.count_if(flag).alias("hits"))
 
 
 def delete_delta_lite(spark: SparkSession, table_path: str, condition: str) -> int:
@@ -2394,7 +2523,7 @@ def delete_delta_lite(spark: SparkSession, table_path: str, condition: str) -> i
         load_snapshot(table_path),
         _parse_conjuncts(condition),
         lambda tagged: tagged.filter(F.expr(condition)),
-        lambda rows: rows.filter(keep),
+        lambda rows, hits: _count_hits(rows, F.expr(condition), hits).filter(keep),
         "DELETE",
         {"predicate": condition},
     )
@@ -2409,10 +2538,11 @@ def update_delta_lite(
     (evaluated only on matching rows)."""
     cond = F.expr(condition)
 
-    def rewrite(rows: DataFrame) -> DataFrame:
+    def rewrite(rows: DataFrame, hits) -> DataFrame:
         # all SET expressions see the PRE-update row (standard SQL UPDATE
         # semantics — UPDATE t SET a=b, b=a swaps): ONE select, never
         # chained withColumns (each of those would see prior SETs)
+        rows = _count_hits(rows, cond, hits)
         newcols = {
             c: F.when(cond, F.expr(e)).otherwise(F.col(c)).alias(c)
             for c, e in set_exprs.items()
@@ -2472,7 +2602,9 @@ def merge_delta_lite(
     scan AND the insert anti-join (a skipped file provably contains no
     source key, so it cannot veto an insert) — a keyed MERGE into a
     key-clustered 100-TB table reads the overlapping files, not the
-    table.
+    table. The aggregate runs only when it can prune, i.e. when more
+    than one file carries stats or partition values on a key
+    (:func:`_key_bound`); otherwise only a lost commit race runs it.
     """
     snap = load_snapshot(table_path)
     declared = snap.schema
@@ -2509,8 +2641,8 @@ def merge_delta_lite(
         *[F.col(c).alias(f"src_{c}") for c in source.columns if c not in on_keys],
     ).dropDuplicates(on_keys).withColumn("__src_hit", F.lit(True))
 
-    def rewrite(rows: DataFrame) -> DataFrame:
-        out = rows.join(marker, on=on_keys, how="left")
+    def rewrite(rows: DataFrame, hits) -> DataFrame:
+        out = _count_hits(rows.join(marker, on=on_keys, how="left"), F.col("__src_hit"), hits)
         # pre-evolution rows lack the new columns: their non-updated
         # value is NULL of the declared type, not a column reference
         have = set(rows.columns)
@@ -2562,7 +2694,7 @@ def merge_delta_lite(
         spark,
         table_path,
         snap,
-        _source_key_conjuncts(source, on_keys),
+        _key_bound(snap, source, on_keys),
         # no broadcast hint: Catalyst/AQE picks broadcast for a small key
         # set and falls back to a shuffled semi-join when the MERGE source
         # is batch-sized — an unconditional broadcast would cap the source
@@ -2618,7 +2750,7 @@ def _replace_where(
         snap,
         _parse_conjuncts(condition),
         lambda tagged: tagged.filter(cond),
-        lambda rows: rows.filter(keep).unionByName(aligned),
+        lambda rows, hits: _count_hits(rows, cond, hits).filter(keep).unionByName(aligned),
         "WRITE",
         {"mode": "OVERWRITE", "replaceWhere": condition},
         checkpoint_interval=checkpoint_interval,
@@ -2963,7 +3095,10 @@ def merge_scd2_delta_lite(
     since a parquet file may hold both — are re-merged with the standard
     ``scd2_merge`` lanes (feeding it only these rows is sufficient:
     untouched files contain no matched current key, so their merge would
-    be the identity). Brand-new keys insert regardless of pruning.
+    be the identity). Brand-new keys insert regardless of pruning. A
+    one-file table skips the key range and the semi-join: the file's
+    merge is staged at once, and ``scd2_merge``'s own join counts the
+    matched current rows.
 
     Partitioned tables work the same way — the pruned read recovers the
     partition columns from the matched files' hive paths, and the
@@ -2981,22 +3116,26 @@ def merge_scd2_delta_lite(
         )
     snap = load_snapshot(table_path)
     require_scd2_columns(snap.schema.fieldNames(), table_path)
-    # Materialize the incoming snapshot once (delta-spark's MERGE
-    # materializes its source the same way): it is consumed by the
-    # key-range bound, the matched-file semi-join and the rewrite's
-    # scd2_merge — an aggregated snapshot would otherwise re-execute its
-    # shuffle 3×.
-    incoming = incoming.localCheckpoint(eager=False)
+    if len(snap.files) > 1:
+        # Materialize the incoming snapshot once (delta-spark's MERGE
+        # materializes its source the same way): it may feed the key-range
+        # bound, the matched-file semi-join and the rewrite's scd2_merge —
+        # an aggregated snapshot would otherwise re-execute its shuffle 3×.
+        # A one-file table takes the single pass, where only the rewrite
+        # reads it.
+        incoming = incoming.localCheckpoint(eager=False)
     inc_keys = incoming.select(*keys).dropDuplicates(keys)
     return _pruned_rewrite(
         spark,
         table_path,
         snap,
-        _source_key_conjuncts(incoming, keys),
+        _key_bound(snap, incoming, keys),
+        # null-safe, as scd2_merge pairs keys: a NULL key's current row is
+        # matched (and closed) like any other. AQE sizes the key set.
         lambda tagged: tagged.filter(F.col(IS_CURRENT)).join(
-            inc_keys, on=keys, how="leftsemi"  # AQE sizes the key set
+            inc_keys, [tagged[k].eqNullSafe(inc_keys[k]) for k in keys], "leftsemi"
         ),
-        lambda rows: scd2_merge(rows, incoming, keys, **opts),
+        lambda rows, hits: scd2_merge(rows, incoming, keys, **opts, hits=hits),
         "MERGE",
         {"on": keys},
     )
