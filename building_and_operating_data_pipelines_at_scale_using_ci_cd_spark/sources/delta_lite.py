@@ -26,13 +26,18 @@ delta read/write/MERGE paths execute and are testable here:
     through the ``LogStore``, applies the one conflict rule on a lost
     race, and checkpoints every ``CHECKPOINT_INTERVAL`` versions.
 
-Honest scope gate (checked, not assumed): reader protocol ≤ 1, writer
-protocol ≤ 3 — CHECK constraints (``delta.constraints.*``), column
-invariants (``delta.invariants`` schema metadata), and
-``delta.appendOnly`` are ENFORCED on every mutating path; deletion
-vectors, column mapping, and generated columns are not implemented, and
-tables requiring them raise ValueError (reads at replay, writes via
-``_check_writable``) instead of returning or corrupting rows.
+Honest scope gate (checked, not assumed): CHECK constraints
+(``delta.constraints.*``), column invariants (``delta.invariants``
+schema metadata) and ``delta.appendOnly`` are ENFORCED on every mutating
+path, and TIMESTAMP_NTZ / VARIANT columns are declared as table
+features; every commit that creates a table or changes its metaData
+takes its ``protocol`` and ``metaData`` actions from one function,
+``_metadata_actions``, which declares what the metaData uses. Deletion
+vectors and 'name'-mode column mapping are READ (batch and streaming);
+writes to tables that use them, 'id'-mode mapping, and generated
+columns are not implemented, and such tables raise ValueError (reads at
+replay, writes via ``_check_writable``) instead of returning or
+corrupting rows.
 
 Scale notes:
   - the log replay touches only ``_delta_log`` (KBs per commit) and the
@@ -96,7 +101,7 @@ class DeltaSnapshot:
 
     @property
     def schema(self) -> StructType:
-        return StructType.fromJson(json.loads(self.metadata["schemaString"]))
+        return _schema(self.metadata)
 
     @property
     def partition_columns(self) -> list:
@@ -105,6 +110,10 @@ class DeltaSnapshot:
     @property
     def configuration(self) -> dict:
         return dict(self.metadata.get("configuration") or {})
+
+
+def _schema(metadata: dict) -> StructType:
+    return StructType.fromJson(json.loads(metadata["schemaString"]))
 
 
 def _log_path(table_path: str) -> str:
@@ -129,6 +138,20 @@ def _commit_versions(log: str) -> list:
         if f.endswith(".json") and len(f) == 25 and f[:20].isdigit():
             out.append(int(f[:20]))
     return sorted(out)
+
+
+def _commit_path(table_path: str, version: int) -> str:
+    return os.path.join(_log_path(table_path), f"{version:020d}.json")
+
+
+def commit_actions(table_path: str, version: int) -> list | None:
+    """The actions of the commit at ``version``, in log order; None when
+    its file is absent (each caller says what that means for it)."""
+    try:
+        with open(_commit_path(table_path, version), encoding="utf-8") as fh:
+            return [json.loads(line) for line in fh if line.strip()]
+    except FileNotFoundError:
+        return None
 
 
 def _checkpoint_files(log: str, version: int | None = None) -> dict:
@@ -234,34 +257,9 @@ _SUPPORTED_WRITER_FEATURES = {
     "variantType",
 }
 
-#: legacy writer versions imply these features when a table upgrades to
-#: the table-features protocol (delta PROTOCOL.md "Table Features")
-_LEGACY_WRITER_FEATURES = {
-    2: {"appendOnly", "invariants"},
-    3: {"appendOnly", "invariants", "checkConstraints"},
-}
-
-
-def _ensure_writer_feature(proto: dict, feature: str, legacy_version: int):
-    """The protocol action needed so the table DECLARES ``feature``
-    (None when already declared). Legacy-versioned tables bump to
-    ``legacy_version`` (which implies the feature); tables already on
-    the table-features protocol (writer 7) must LIST it explicitly —
-    skipping that would commit a feature the protocol does not claim,
-    which delta-spark is entitled to reject."""
-    w = int(proto.get("minWriterVersion", 2))
-    if w == 7:
-        feats = set(proto.get("writerFeatures") or [])
-        if feature in feats:
-            return None
-        return {**proto, "writerFeatures": sorted(feats | {feature})}
-    if w >= legacy_version:
-        return None
-    return {
-        "minReaderVersion": int(proto.get("minReaderVersion", 1)),
-        "minWriterVersion": legacy_version,
-    }
-
+#: the writer features a table's metaData can use, each with the legacy
+#: writer version that implies it (delta PROTOCOL.md "Table Features")
+_LEGACY_VERSION = {"appendOnly": 2, "invariants": 2, "checkConstraints": 3}
 
 #: data types whose mere presence in the schema requires a declared
 #: reader+writer table feature (delta PROTOCOL.md: readers/writers that
@@ -292,45 +290,69 @@ def _schema_type_features(node) -> set:
     return set()
 
 
-def _protocol_for_schema(schema_string: str) -> dict:
-    """The protocol a NEW table with this schema must declare: the
-    legacy (1,2) default, or — when the schema uses a feature-gated
-    type (TIMESTAMP_NTZ, VARIANT) — the table-features form with that
-    feature in BOTH lists (they are reader+writer features; delta-spark
-    refuses such tables when undeclared)."""
-    need = _schema_type_features(json.loads(schema_string))
-    if not need:
-        return dict(_PROTOCOL)
-    return {
-        "minReaderVersion": 3,
-        "minWriterVersion": 7,
-        "readerFeatures": sorted(need),
-        "writerFeatures": sorted(_LEGACY_WRITER_FEATURES[2] | need),
-    }
+def _metadata_actions(protocol: dict | None, metadata: dict, new_table: bool = False) -> list:
+    """The ``protocol`` and ``metaData`` actions of a commit that sets
+    ``metadata`` on a table whose protocol is ``protocol`` (the source's
+    for CLONE; None for a new table, which starts from the legacy (1,2)
+    default); the only place a commit's protocol or metaData is made.
 
+    Every feature comes from ``metadata`` itself: TIMESTAMP_NTZ and
+    VARIANT columns need reader+writer features, ``delta.appendOnly``,
+    column invariants and CHECK constraints writer features. A legacy
+    table bumps its writer version to the one implying what it uses;
+    a feature-typed schema moves it to the table-features protocol (3,7),
+    listing the features its old writer version implied; a (3,7) table
+    lists every feature it uses. The ``protocol`` action comes first,
+    and only when something new must be declared — a new table
+    (``protocol`` None, or ``new_table``) always gets one, and its
+    metaData a fresh ``id`` and ``createdTime``."""
+    new_table = new_table or protocol is None
+    if new_table:
+        metadata = {
+            "format": {"provider": "parquet", "options": {}},
+            "configuration": {},
+            **metadata,
+            "id": str(uuid.uuid4()),
+            "createdTime": int(time.time() * 1000),
+        }
+    have = dict(protocol or _PROTOCOL)
+    r, w = int(have.get("minReaderVersion", 1)), int(have.get("minWriterVersion", 2))
+    schema = json.loads(metadata["schemaString"])
+    conf = metadata.get("configuration") or {}
+    types = _schema_type_features(schema)
+    used = set(types)
+    if str(conf.get("delta.appendOnly", "")).lower() == "true":
+        used.add("appendOnly")
+    if any((f.get("metadata") or {}).get("delta.invariants") for f in schema.get("fields", [])):
+        used.add("invariants")
+    if any(k.startswith(_CONSTRAINT_PREFIX) for k in conf):
+        used.add("checkConstraints")
+    if w != 7 and not types:
+        want = {
+            "minReaderVersion": r,
+            "minWriterVersion": max([w] + [_LEGACY_VERSION[f] for f in used]),
+        }
+    else:
+        implied = {f for f, v in _LEGACY_VERSION.items() if v <= w}
+        wf = set(have.get("writerFeatures") or []) if w == 7 else implied
+        want = {**have, "minWriterVersion": 7, "writerFeatures": sorted(wf | used)}
+        if types or r == 3:
+            rf = set(have.get("readerFeatures") or []) | types
+            want.update(minReaderVersion=3, readerFeatures=sorted(rf))
 
-def _ntz_protocol_upgrade(proto: dict, schema_string: str):
-    """Protocol action needed when SCHEMA EVOLUTION introduces a
-    feature-gated type (TIMESTAMP_NTZ / VARIANT) into a table whose
-    protocol does not yet declare it; None when already declared or not
-    needed."""
-    need = _schema_type_features(json.loads(schema_string))
-    if not need:
-        return None
-    r = int(proto.get("minReaderVersion", 1))
-    w = int(proto.get("minWriterVersion", 2))
-    rfeats = set(proto.get("readerFeatures") or [])
-    wfeats = set(proto.get("writerFeatures") or [])
-    if r == 3 and w == 7 and need <= rfeats and need <= wfeats:
-        return None
-    if w != 7:
-        wfeats = set(_LEGACY_WRITER_FEATURES.get(w, _LEGACY_WRITER_FEATURES[3]))
-    return {
-        "minReaderVersion": 3,
-        "minWriterVersion": 7,
-        "readerFeatures": sorted(rfeats | need),
-        "writerFeatures": sorted(wfeats | need),
-    }
+    def declared(p: dict) -> tuple:
+        return (
+            int(p.get("minReaderVersion", 1)),
+            int(p.get("minWriterVersion", 2)),
+            set(p.get("readerFeatures") or []),
+            set(p.get("writerFeatures") or []),
+        )
+
+    if declared(want) == declared(have):
+        if not new_table:
+            return [{"metaData": metadata}]
+        want = have
+    return [{"protocol": want}, {"metaData": metadata}]
 
 
 def _check_writable(snap: "DeltaSnapshot") -> None:
@@ -467,24 +489,13 @@ def _commit_heads(table_path: str) -> dict:
     out: dict = {}
     prev = -1
     for v in _commit_versions(log):
-        fpath = os.path.join(log, f"{v:020d}.json")
-        ts, op, params = None, None, {}
-        with open(fpath, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    ci = action["commitInfo"]
-                    ts = ci.get("timestamp")
-                    op = ci.get("operation")
-                    params = ci.get("operationParameters", {})
-                    break
+        actions = commit_actions(table_path, v) or []
+        ci = next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+        ts = ci.get("timestamp")
         if ts is None:
-            ts = int(os.path.getmtime(fpath) * 1000)
+            ts = int(os.path.getmtime(_commit_path(table_path, v)) * 1000)
         ts = max(int(ts), prev + 1)
-        out[v] = (ts, op, params)
+        out[v] = (ts, ci.get("operation"), ci.get("operationParameters", {}))
         prev = ts
     return out
 
@@ -554,19 +565,18 @@ def commit_stats(table_path: str, version: int) -> dict:
     (None for operations that record none)."""
     out = {"version": version, "filesAdded": 0, "filesRemoved": 0,
            "bytesAdded": 0, "matchedFiles": None}
-    with open(os.path.join(_log_path(table_path), f"{version:020d}.json"), encoding="utf-8") as fh:
-        for line in fh:
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "add" in action:
-                out["filesAdded"] += 1
-                out["bytesAdded"] += int(action["add"].get("size") or 0)
-            elif "remove" in action:
-                out["filesRemoved"] += 1
-            elif "commitInfo" in action:
-                params = action["commitInfo"].get("operationParameters") or {}
-                out["matchedFiles"] = params.get("matchedFiles")
+    actions = commit_actions(table_path, version)
+    if actions is None:
+        raise FileNotFoundError(f"no commit {version} in {_log_path(table_path)}")
+    for action in actions:
+        if "add" in action:
+            out["filesAdded"] += 1
+            out["bytesAdded"] += int(action["add"].get("size") or 0)
+        elif "remove" in action:
+            out["filesRemoved"] += 1
+        elif "commitInfo" in action:
+            params = action["commitInfo"].get("operationParameters") or {}
+            out["matchedFiles"] = params.get("matchedFiles")
     return out
 
 
@@ -628,19 +638,16 @@ def load_snapshot(
             _read_checkpoint(part, state)
         start = cp + 1
     for v in range(start, target + 1):
-        fpath = os.path.join(log, f"{v:020d}.json")
-        if not os.path.exists(fpath):
+        actions = commit_actions(table_path, v)
+        if actions is None:
             # commits before a checkpoint may legally be vacuumed; only
             # versions whose replay tail still exists are reachable
             raise ValueError(
                 f"version {target} not available (missing commit {v}) for "
                 f"{table_path}"
             )
-        with open(fpath, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    _apply_action(state, json.loads(line))
+        for action in actions:
+            _apply_action(state, action)
     if not state.metadata:
         raise ValueError(f"delta log has no metaData action: {table_path}")
     return state
@@ -1225,40 +1232,30 @@ def _assert_commutes(
     ``_file_may_match`` is stats-conservative, so anything unprovable
     conflicts — partition-disjoint DML (the common real case) and blind
     appends commute, everything doubtful raises."""
-    log = _log_path(table_path)
     for v in range(from_version + 1, to_version + 1):
-        fpath = os.path.join(log, f"{v:020d}.json")
-        if not os.path.exists(fpath):
+        actions = commit_actions(table_path, v)
+        if actions is None:
             raise DeltaConcurrentWriteError(
                 f"concurrent commit {v} of {table_path} is unreadable"
             )
-        with open(fpath, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if action.get("metaData") or action.get("protocol"):
-                    raise DeltaConcurrentWriteError(
-                        f"concurrent metadata/protocol change in commit {v} "
-                        f"of {table_path}"
-                    )
-                rm = action.get("remove")
-                if rm and urllib.parse.unquote(rm["path"]) in read_set:
-                    raise DeltaConcurrentWriteError(
-                        f"concurrent commit {v} removed a file this "
-                        f"transaction read: {rm['path']}"
-                    )
-                add = action.get("add")
-                if (
-                    add
-                    and conjuncts is not None
-                    and _file_may_match(add, conjuncts, types)
-                ):
-                    raise DeltaConcurrentWriteError(
-                        f"concurrent commit {v} added a file that may "
-                        f"match this transaction's predicate: {add['path']}"
-                    )
+        for action in actions:
+            if action.get("metaData") or action.get("protocol"):
+                raise DeltaConcurrentWriteError(
+                    f"concurrent metadata/protocol change in commit {v} "
+                    f"of {table_path}"
+                )
+            rm = action.get("remove")
+            if rm and urllib.parse.unquote(rm["path"]) in read_set:
+                raise DeltaConcurrentWriteError(
+                    f"concurrent commit {v} removed a file this "
+                    f"transaction read: {rm['path']}"
+                )
+            add = action.get("add")
+            if add and conjuncts is not None and _file_may_match(add, conjuncts, types):
+                raise DeltaConcurrentWriteError(
+                    f"concurrent commit {v} added a file that may "
+                    f"match this transaction's predicate: {add['path']}"
+                )
 
 
 #: like delta-spark's default: a parquet checkpoint every N commits bounds
@@ -1484,12 +1481,13 @@ def write_delta_lite(
     skeleton as DML, so two reloads of provably disjoint ranges from
     independent pipelines commute instead of raising.
 
-    ``merge_schema=True`` allows ADDITIVE evolution on append/overwrite:
-    new columns join the table schema (a new ``metaData`` action rides
-    the commit); rows in old files read back NULL for them — exactly
-    Spark's missing-column parquet semantics, so no rewrite happens.
-    Dropping or retyping columns still refuses (that's a rewrite, not
-    an evolution).
+    ``merge_schema=True`` allows ADDITIVE evolution on append, overwrite
+    and replaceWhere (:func:`_align`): new columns join the table schema
+    (a new ``metaData`` action, with any protocol upgrade a new column's
+    type needs, rides the commit); rows in old files read back NULL for
+    them — exactly Spark's missing-column parquet semantics, so no
+    rewrite happens. Dropping or retyping columns still refuses (that's
+    a rewrite, not an evolution).
 
     ``mode``: ``append`` | ``overwrite`` | ``errorifexists`` | ``ignore``.
     The data files are staged with Spark's own parquet writer (so file
@@ -1505,7 +1503,6 @@ def write_delta_lite(
     the exactly-once half of the streaming→delta contract. Watermarks
     survive checkpoints.
     """
-    spark = df.sparkSession
     if replace_where is not None and mode != "overwrite":
         raise ValueError("replace_where requires mode='overwrite'")
     exists = is_delta_table(table_path)
@@ -1514,95 +1511,44 @@ def write_delta_lite(
         return snap.version
     if exists and mode in ("error", "errorifexists"):
         raise ValueError(f"delta table already exists: {table_path}")
+    metadata = None
     if snap is not None:
         _check_writable(snap)
         if mode == "overwrite" and replace_where is None and snap.files:
             _check_append_only(snap, "overwrite WRITE")
         if txn is not None and snap.txns.get(str(txn[0]), -1) >= int(txn[1]):
             return snap.version  # already applied — idempotent replay
-    if replace_where is not None and snap is not None:
-        return _replace_where(
-            spark, df, table_path, snap, replace_where, checkpoint_interval, txn
-        )
-    # replace_where on a fresh table degenerates to a plain create (there
-    # is nothing to replace) — fall through, predicate still validated
-    # (NULL counts as a violation: such a row would not be replace-able)
+        if partition_by and list(partition_by) != snap.partition_columns:
+            raise ValueError(
+                f"partition columns {partition_by} do not match table's "
+                f"{snap.partition_columns}"
+            )
+        df, metadata = _align(snap, df, merge_schema, "write")
     if replace_where is not None:
-        if df.filter(
-            ~F.coalesce(F.expr(replace_where), F.lit(False))
-        ).limit(1).count():
+        # NULL counts as a violation: such a row would not be replace-able
+        if df.filter(~F.coalesce(F.expr(replace_where), F.lit(False))).limit(1).count():
             raise ValueError(
                 f"replaceWhere violation: input rows do not all satisfy "
                 f"{replace_where!r}"
             )
+        if snap is not None:
+            return _replace_where(
+                df, table_path, snap, metadata, replace_where, checkpoint_interval, txn
+            )
+        # on a fresh table there is nothing to replace: a plain create
 
     pcols = list(partition_by or (snap.partition_columns if snap else []))
-    if snap and partition_by and list(partition_by) != snap.partition_columns:
-        raise ValueError(
-            f"partition columns {partition_by} do not match table's "
-            f"{snap.partition_columns}"
-        )
-    new_metadata = None
-    if snap:
-        declared = snap.schema
-        declared_names = {f.name for f in declared.fields}
-        extra = [c for c in df.columns if c not in declared_names]
-        missing = declared_names - set(df.columns)
-        if (extra and not merge_schema) or missing:
-            raise ValueError(
-                f"schema mismatch: table has {sorted(declared_names)}, "
-                f"write has {df.columns}"
-                + (" (pass merge_schema=True to add columns)" if extra and not missing else "")
-            )
-        if extra:
-            evolved = StructType(
-                list(declared.fields)
-                + [df.schema[c] for c in df.columns if c in extra]
-            )
-            df = df.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in evolved.fields]
-            )
-            new_metadata = dict(snap.metadata)
-            new_metadata["schemaString"] = json.dumps(evolved.jsonValue())
-        else:
-            df = df.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
-            )
-
     adds = _stage_and_adds(
         df, table_path, pcols,
-        rules=_row_rules(new_metadata or snap.metadata) if snap is not None else None,
+        rules=_row_rules(metadata or snap.metadata) if snap is not None else None,
         operation=f"WRITE ({mode})",
     )
-
-    actions = []
     if snap is None:
-        ss = _schema_string(df)
-        actions.append({"protocol": _protocol_for_schema(ss)})
-        actions.append(
-            {
-                "metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": ss,
-                    "partitionColumns": pcols,
-                    "configuration": {},
-                    "createdTime": int(os.path.getmtime(table_path) * 1000),
-                }
-            }
+        actions = _metadata_actions(
+            None, {"schemaString": _schema_string(df), "partitionColumns": pcols}
         )
-        version = 0
     else:
-        version = snap.version + 1
-        if new_metadata is not None:
-            # schema evolution that introduces TIMESTAMP_NTZ must declare
-            # the timestampNtz feature in the SAME commit
-            up = _ntz_protocol_upgrade(
-                snap.protocol or _PROTOCOL, new_metadata["schemaString"]
-            )
-            if up is not None:
-                actions.append({"protocol": up})
-            actions.append({"metaData": new_metadata})
+        actions = _metadata_actions(snap.protocol, metadata) if metadata else []
         if mode == "overwrite":
             actions += [_remove(snap.files[rel]["path"]) for rel in sorted(snap.files)]
     # Blind appends COMMUTE (delta-spark auto-retries them too): the
@@ -1610,10 +1556,10 @@ def write_delta_lite(
     # reference nothing a winner touched, so a lost race re-aims unless
     # a winner changed metadata or protocol. Create, overwrite (its
     # removes came from a stale snapshot) and schema evolution raise.
-    blind_append = mode == "append" and snap is not None and new_metadata is None
+    blind_append = mode == "append" and snap is not None and metadata is None
     return _transact(
         table_path,
-        version,
+        snap.version + 1 if snap else 0,
         "WRITE",
         {"mode": mode.upper()},
         actions + adds,
@@ -1621,6 +1567,34 @@ def write_delta_lite(
         txn=txn,
         checkpoint_interval=checkpoint_interval,
     )
+
+
+def _align(
+    snap: DeltaSnapshot, df: DataFrame, merge_schema: bool, what: str, inserts: bool = True
+):
+    """Line ``df`` up with the table of ``snap``, the one schema rule of
+    WRITE, MERGE and replaceWhere: columns the table lacks are refused
+    unless ``merge_schema``, which evolves the table additively (they join
+    its schema in ``df``'s order); columns ``df`` lacks are refused when
+    its rows are inserted as they are (``inserts``); values are cast to
+    the table's types. Returns ``(df, metadata)``: ``df`` cast to the
+    (evolved) schema when ``inserts``, as given otherwise, and the evolved
+    metaData (None when the schema is unchanged)."""
+    declared = snap.schema
+    names = set(declared.fieldNames())
+    extra = [c for c in df.columns if c not in names]
+    missing = inserts and names - set(df.columns)
+    if (extra and not merge_schema) or missing:
+        raise ValueError(
+            f"schema mismatch: table has {sorted(names)}, {what} has {df.columns}"
+            + (" (pass merge_schema=True to add columns)" if extra and not missing else "")
+        )
+    schema = StructType(declared.fields + [df.schema[c] for c in extra])
+    if inserts:
+        df = df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
+    if not extra:
+        return df, None
+    return df, {**snap.metadata, "schemaString": json.dumps(schema.jsonValue())}
 
 
 def convert_to_delta(
@@ -1659,19 +1633,9 @@ def convert_to_delta(
         for comp in sample_rel.split(os.sep)[:-1]
         if "=" in comp
     ]
-    actions = [
-        {"protocol": _protocol_for_schema(json.dumps(schema.jsonValue()))},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": json.dumps(schema.jsonValue()),
-                "partitionColumns": pcols,
-                "configuration": {},
-                "createdTime": int(time.time() * 1000),
-            }
-        },
-    ]
+    actions = _metadata_actions(
+        None, {"schemaString": json.dumps(schema.jsonValue()), "partitionColumns": pcols}
+    )
     for full_path in sorted(data_files):
         rel = os.path.relpath(full_path, dir_path).replace(os.sep, "/")
         pvals = {}
@@ -1733,24 +1697,12 @@ def set_table_properties(
         if k.startswith(_CONSTRAINT_PREFIX):
             raise ValueError(f"unset {k!r} via drop_check_constraint")
         conf.pop(k, None)
-    meta = dict(snap.metadata)
-    meta["configuration"] = conf
-    actions = []
-    if str(conf.get("delta.appendOnly", "")).lower() == "true":
-        # legacy writer 2 implies appendOnly; a table-features table
-        # must LIST it or the property is set under an undeclared feature
-        up = _ensure_writer_feature(
-            snap.protocol or _PROTOCOL, "appendOnly", legacy_version=2
-        )
-        if up is not None:
-            actions.append({"protocol": up})
-    actions.append({"metaData": meta})
     return _transact(
         table_path,
         snap.version + 1,
         "SET TBLPROPERTIES",
         {"properties": sorted((properties or {}).keys()), "unset": sorted(unset or [])},
-        actions,
+        _metadata_actions(snap.protocol, {**snap.metadata, "configuration": conf}),
     )
 
 
@@ -1791,18 +1743,12 @@ def add_check_constraint(
             f"CHECK ({expr}), e.g. {bad[0].asDict()!r}"
         )
     conf[key] = expr
-    meta = dict(snap.metadata)
-    meta["configuration"] = conf
-    up = _ensure_writer_feature(
-        snap.protocol or _PROTOCOL, "checkConstraints", legacy_version=3
-    )
-    actions = ([{"protocol": up}] if up is not None else []) + [{"metaData": meta}]
     return _transact(
         table_path,
         snap.version + 1,
         "ADD CONSTRAINT",
         {"name": name, "expr": expr},
-        actions,
+        _metadata_actions(snap.protocol, {**snap.metadata, "configuration": conf}),
     )
 
 
@@ -1822,10 +1768,12 @@ def drop_check_constraint(
             return snap.version
         raise ValueError(f"no such constraint {name!r} on {table_path}")
     conf.pop(key)
-    meta = dict(snap.metadata)
-    meta["configuration"] = conf
     return _transact(
-        table_path, snap.version + 1, "DROP CONSTRAINT", {"name": name}, [{"metaData": meta}]
+        table_path,
+        snap.version + 1,
+        "DROP CONSTRAINT",
+        {"name": name},
+        _metadata_actions(snap.protocol, {**snap.metadata, "configuration": conf}),
     )
 
 
@@ -1912,16 +1860,13 @@ def clone_delta_lite(
                 "pathOrInlineDv": resolve_dv_path(src_root, dv),
             }
         adds.append({"add": clone_add})
-    meta = dict(src_snap.metadata)
-    meta["id"] = str(uuid.uuid4())
     os.makedirs(dst_path, exist_ok=True)
-    meta["createdTime"] = int(time.time() * 1000)
     return _transact(
         dst_path,
         0,
         "CLONE",
         {"source": src_root, "sourceVersion": src_snap.version},
-        [{"protocol": dict(src_snap.protocol or _PROTOCOL)}, {"metaData": meta}] + adds,
+        _metadata_actions(src_snap.protocol, src_snap.metadata, new_table=True) + adds,
     )
 
 
@@ -2359,8 +2304,7 @@ def _pruned_rewrite(
     rewrite,
     operation: str,
     op_params: dict,
-    out_schema: StructType | None = None,
-    new_metadata: dict | None = None,
+    metadata: dict | None = None,
     checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
     txn: tuple | None = None,
 ) -> int:
@@ -2373,19 +2317,22 @@ def _pruned_rewrite(
     content of the matched files. When ``hits`` is an Observation,
     ``rewrite`` observes on it, as ``hits``, the count of ``rows`` it
     matches, at the place it computes that match anyway (the predicate,
-    MERGE's source-key join, the SCD2 merge join). This skeleton does
-    the rest:
+    MERGE's source-key join, the SCD2 merge join). When no file matched,
+    ``rows`` is None and ``rewrite`` returns what the operation inserts
+    anyway, or None when that is nothing (DELETE, UPDATE), which stages
+    nothing. This skeleton does the rest:
 
       - refuses tables whose writer protocol it cannot honour;
       - scans only the files the conjuncts' stats cannot rule out;
       - finds the matched files in one of two shapes, chosen by the
         candidate count:
+          - no candidate file: nothing is read;
           - one candidate file: no separate pass. It stages
             ``rewrite(candidate rows, hits)`` straight away and reads the
             match count off that staging write. With no hit the staged
             files are discarded unpublished, and the commit stages
-            ``rewrite(no rows)`` and removes nothing, as the two-pass
-            shape does when nothing matches;
+            ``rewrite(None)`` and removes nothing, as the two-pass shape
+            does when nothing matches;
           - otherwise two passes: one job collects the files holding a
             ``match`` row (keyed as the snapshot keys them:
             table-relative for owned files, absolute for files a shallow
@@ -2402,13 +2349,14 @@ def _pruned_rewrite(
 
     Untouched files never move; driver traffic = file paths.
 
-    ``out_schema`` / ``new_metadata`` carry an ADDITIVE schema
-    evolution (MERGE ``merge_schema=True``): the rewritten rows cast to
-    the evolved schema and the metaData action rides the same commit,
-    so the upsert + evolution are one atomic version."""
+    ``metadata`` carries an ADDITIVE schema evolution (``merge_schema``
+    of MERGE and replaceWhere, see :func:`_align`): the rewritten rows
+    cast to the evolved schema and the metaData action, with any protocol
+    upgrade it needs, rides the same commit, so the rewrite and the
+    evolution are one atomic version."""
     _check_writable(snap)
-    out_schema = out_schema or snap.schema
-    rules = _row_rules(new_metadata or snap.metadata)
+    out_schema = _schema(metadata or snap.metadata)
+    rules = _row_rules(metadata or snap.metadata)
     if callable(conjuncts):
         bound, cand = conjuncts, sorted(snap.files)
 
@@ -2460,6 +2408,8 @@ def _pruned_rewrite(
 
         adds = stage(rewrite(_read_files(spark, snap, cand), hits), cand, gate)
         rel_matched = cand if adds is not None else []
+    elif not cand:
+        rel_matched = []
     else:
         tagged = _read_files(spark, snap, cand).withColumn(
             "__file", F.input_file_name()
@@ -2481,8 +2431,10 @@ def _pruned_rewrite(
         if rel_matched:
             _check_append_only(snap, operation)
     if adds is None:
-        adds = stage(rewrite(_read_files(spark, snap, rel_matched), None), rel_matched)
-    actions = [{"metaData": new_metadata}] if new_metadata is not None else []
+        rows = _read_files(spark, snap, rel_matched) if rel_matched else None
+        new = rewrite(rows, None)
+        adds = [] if new is None else stage(new, rel_matched)
+    actions = _metadata_actions(snap.protocol, metadata) if metadata else []
     actions += [_remove(urllib.parse.quote(rel)) for rel in rel_matched]
     return _transact(
         table_path,
@@ -2523,7 +2475,9 @@ def delete_delta_lite(spark: SparkSession, table_path: str, condition: str) -> i
         load_snapshot(table_path),
         _parse_conjuncts(condition),
         lambda tagged: tagged.filter(F.expr(condition)),
-        lambda rows, hits: _count_hits(rows, F.expr(condition), hits).filter(keep),
+        lambda rows, hits: None if rows is None else (
+            _count_hits(rows, F.expr(condition), hits).filter(keep)
+        ),
         "DELETE",
         {"predicate": condition},
     )
@@ -2542,6 +2496,8 @@ def update_delta_lite(
         # all SET expressions see the PRE-update row (standard SQL UPDATE
         # semantics — UPDATE t SET a=b, b=a swaps): ONE select, never
         # chained withColumns (each of those would see prior SETs)
+        if rows is None:
+            return None
         rows = _count_hits(rows, cond, hits)
         newcols = {
             c: F.when(cond, F.expr(e)).otherwise(F.col(c)).alias(c)
@@ -2584,7 +2540,8 @@ def merge_delta_lite(
     - ``when_matched_delete``: True, or a SQL condition string —
       matched rows satisfying it are dropped (evaluated before update).
     - ``when_not_matched_insert``: source rows with no target match
-      insert as-is (source must carry the table's columns).
+      insert as-is (source must carry the table's columns; without
+      inserts it needs only the keys and the columns the clauses read).
     - ``merge_schema``: delta-spark's ``schema.autoMerge`` for MERGE —
       a source carrying NEW columns evolves the table ADDITIVELY in the
       same atomic commit: inserts carry the new columns, matched
@@ -2607,23 +2564,6 @@ def merge_delta_lite(
     (:func:`_key_bound`); otherwise only a lost commit race runs it.
     """
     snap = load_snapshot(table_path)
-    declared = snap.schema
-    declared_names = {f.name for f in declared.fields}
-    extra = [c for c in source.columns if c not in declared_names]
-    out_schema, new_metadata = declared, None
-    if extra:
-        if not merge_schema:
-            raise ValueError(
-                f"MERGE source carries columns not in the table schema: "
-                f"{extra} (table has {sorted(declared_names)}); pass "
-                f"merge_schema=True to evolve the table additively"
-            )
-        out_schema = StructType(
-            list(declared.fields)
-            + [source.schema[c] for c in source.columns if c in extra]
-        )
-        new_metadata = dict(snap.metadata)
-        new_metadata["schemaString"] = json.dumps(out_schema.jsonValue())
     # Materialize the MERGE source once (round-12 optimization; also
     # delta-spark's own posture — its MERGE materializes the source):
     # the plan below consumes it for the key-range bound, the matched-
@@ -2632,6 +2572,8 @@ def merge_delta_lite(
     # (a groupBy'd snapshot, a join) re-executes up to 4×, and a
     # nondeterministic source could diverge between the passes.
     source = source.localCheckpoint(eager=False)
+    aligned, metadata = _align(snap, source, merge_schema, "MERGE source", when_not_matched_insert)
+    out_schema = _schema(metadata or snap.metadata)
     src_keys = source.select(*on_keys).dropDuplicates(on_keys)
 
     # source side: keys + src_-prefixed payload, tagged so the left join
@@ -2641,7 +2583,17 @@ def merge_delta_lite(
         *[F.col(c).alias(f"src_{c}") for c in source.columns if c not in on_keys],
     ).dropDuplicates(on_keys).withColumn("__src_hit", F.lit(True))
 
-    def rewrite(rows: DataFrame, hits) -> DataFrame:
+    def rewrite(rows: DataFrame | None, hits) -> DataFrame | None:
+        # inserts: source keys absent from the PRE-merge table, unioned
+        # into the rewrite so the whole MERGE is ONE atomic commit. Every
+        # target row holding a source key sits in a matched file, so the
+        # matched files' rows are the whole anti-join side.
+        new = aligned
+        if rows is not None:
+            new = aligned.join(rows.select(*on_keys), on=on_keys, how="leftanti")
+        inserts = new.dropDuplicates(on_keys) if when_not_matched_insert else None
+        if rows is None:
+            return inserts
         out = _count_hits(rows.join(marker, on=on_keys, how="left"), F.col("__src_hit"), hits)
         # pre-evolution rows lack the new columns: their non-updated
         # value is NULL of the declared type, not a column reference
@@ -2677,18 +2629,7 @@ def merge_delta_lite(
                 for f in out_schema.fields
             ]
         )
-        if not when_not_matched_insert:
-            return out
-        # inserts: source keys absent from the PRE-merge table, unioned
-        # into the rewrite so the whole MERGE is ONE atomic commit. Every
-        # target row holding a source key sits in a matched file, so the
-        # matched files' rows are the whole anti-join side.
-        inserts = (
-            source.join(rows.select(*on_keys), on=on_keys, how="leftanti")
-            .dropDuplicates(on_keys)
-            .select(*[F.col(f.name) for f in out_schema.fields])
-        )
-        return out.unionByName(inserts)
+        return out if inserts is None else out.unionByName(inserts)
 
     return _pruned_rewrite(
         spark,
@@ -2703,56 +2644,43 @@ def merge_delta_lite(
         rewrite,
         "MERGE",
         {"on": on_keys},
-        out_schema=out_schema,
-        new_metadata=new_metadata,
+        metadata=metadata,
     )
 
 
 def _replace_where(
-    spark: SparkSession,
     df: DataFrame,
     table_path: str,
     snap: DeltaSnapshot,
+    metadata: dict | None,
     condition: str,
     checkpoint_interval: int | None,
     txn: tuple | None,
 ) -> int:
     """``overwrite`` + ``replaceWhere``: one atomic commit that deletes
-    every existing row matching ``condition`` and inserts ``df`` (whose
-    rows must ALL match it — delta's constraint, checked with one
-    bounded job). Stats/partition pruning bounds the rewrite to files
-    that can hold a matching row; a mixed file is rewritten keeping its
-    non-matching rows. Runs through :func:`_pruned_rewrite`, so two
-    reloads of provably disjoint ranges commute on a commit race."""
-    declared = snap.schema
-    declared_names = {f.name for f in declared.fields}
-    if set(df.columns) != declared_names:
-        raise ValueError(
-            f"replaceWhere write must match the table schema "
-            f"{sorted(declared_names)}; got {sorted(df.columns)}"
-        )
-    aligned = df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in declared.fields]
-    )
+    every existing row matching ``condition`` and inserts ``df`` (already
+    lined up with the table, evolving it to ``metadata`` when given; its
+    rows were checked to ALL match the predicate — delta's constraint).
+    Stats/partition pruning bounds the rewrite to files that can hold a
+    matching row; a mixed file is rewritten keeping its non-matching
+    rows. Runs through :func:`_pruned_rewrite`, so two reloads of
+    provably disjoint ranges commute on a commit race."""
     cond = F.expr(condition)
-    # NULL counts as a violation on the way IN (the row would not be
-    # replace-able) and as a KEEPER on the way out (only rows where the
-    # predicate is TRUE are replaced — SQL DELETE semantics)
-    if aligned.filter(~F.coalesce(cond, F.lit(False))).limit(1).count():
-        raise ValueError(
-            f"replaceWhere violation: input rows do not all satisfy "
-            f"{condition!r}"
-        )
+    # only rows where the predicate is TRUE are replaced (SQL DELETE
+    # semantics): a NULL-predicate row is a KEEPER
     keep = ~F.coalesce(cond, F.lit(False))
     return _pruned_rewrite(
-        spark,
+        df.sparkSession,
         table_path,
         snap,
         _parse_conjuncts(condition),
         lambda tagged: tagged.filter(cond),
-        lambda rows, hits: _count_hits(rows, cond, hits).filter(keep).unionByName(aligned),
+        lambda rows, hits: df if rows is None else (
+            _count_hits(rows, cond, hits).filter(keep).unionByName(df, allowMissingColumns=True)
+        ),
         "WRITE",
         {"mode": "OVERWRITE", "replaceWhere": condition},
+        metadata=metadata,
         checkpoint_interval=checkpoint_interval,
         txn=txn,
     )
@@ -2900,7 +2828,11 @@ def restore_delta_lite(
     to_remove = sorted(rel for rel in cur.files if rel not in target.files)
     if to_remove:
         _check_append_only(cur, "RESTORE")
-    actions = [{"metaData": dict(target.metadata)}] if cur.metadata != target.metadata else []
+    actions = (
+        _metadata_actions(cur.protocol, target.metadata)
+        if cur.metadata != target.metadata
+        else []
+    )
     actions += [_remove(cur.files[rel]["path"]) for rel in to_remove]
     actions += [{"add": {**target.files[rel], "dataChange": True}} for rel in to_add]
     new_version = _transact(
@@ -3063,10 +2995,22 @@ def checkpoint_delta_lite(table_path: str) -> int:
             }
         )
     log = _log_path(table_path)
-    cp_path = os.path.join(log, f"{snap.version:020d}.checkpoint.parquet")
-    pq.write_table(pa.Table.from_pylist(rows, schema=schema), cp_path)
-    with open(os.path.join(log, "_last_checkpoint"), "w", encoding="utf-8") as fh:
-        json.dump({"version": snap.version, "size": len(rows)}, fh)
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+    # each file is written under a temporary name and renamed into place,
+    # so a crash mid-write never leaves a torn checkpoint for replay to read
+    for name, payload in (
+        (f"{snap.version:020d}.checkpoint.parquet", buf.getvalue().to_pybytes()),
+        ("_last_checkpoint", json.dumps({"version": snap.version, "size": len(rows)}).encode()),
+    ):
+        fd, tmp = tempfile.mkstemp(dir=log, suffix=".tmp")
+        try:
+            with os.fdopen(fd, "wb") as fh:
+                fh.write(payload)
+            os.replace(tmp, os.path.join(log, name))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
     return snap.version
 
 
@@ -3135,7 +3079,10 @@ def merge_scd2_delta_lite(
         lambda tagged: tagged.filter(F.col(IS_CURRENT)).join(
             inc_keys, [tagged[k].eqNullSafe(inc_keys[k]) for k in keys], "leftsemi"
         ),
-        lambda rows, hits: scd2_merge(rows, incoming, keys, **opts, hits=hits),
+        lambda rows, hits: scd2_merge(
+            _read_files(spark, snap, []) if rows is None else rows,
+            incoming, keys, **opts, hits=hits,
+        ),
         "MERGE",
         {"on": keys},
     )

@@ -40,7 +40,11 @@ Semantics mirror delta-spark's streaming source for append-only tables:
   - one ``InputPartition`` per data file → executor-parallel Arrow
     reads; the driver touches only the log (KBs per commit), never
     data — at 100 TB a microbatch plans from one JSON file and fans
-    out to the executors, the same shape delta-spark's source has.
+    out to the executors, the same shape delta-spark's source has;
+  - column-mapped ('name' mode) tables stream like the batch reader
+    reads them: parquet columns and ``partitionValues`` are looked up by
+    physical name and delivered under the logical names, so a renamed
+    column streams its values.
 
 Initial load: a FRESH stream's first batch is the current RECONCILED
 snapshot (the live file set, exactly what ``read_delta_lite`` would
@@ -59,7 +63,6 @@ it is mutually exclusive with ``startingVersion``, delta's contract.
 from __future__ import annotations
 
 import datetime as _dt
-import json
 import os
 from decimal import Decimal
 
@@ -218,6 +221,21 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
                 "exclusive: the change feed DELIVERS change commits"
             )
         self._schema = schema
+        #: column mapping ('name' mode): logical column -> (its parquet
+        #: name, its Arrow type under the physical nested names), the map
+        #: the batch reader reads through; partitionValues are keyed by
+        #: the physical name too. Empty for unmapped tables.
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from .delta_lite import _column_mapping, _physical_schema, _schema, load_snapshot
+
+        meta = load_snapshot(self._path).metadata
+        self._physical = {}
+        if _column_mapping(meta):
+            self._physical = {
+                lf.name: (pf.name, pf.type)
+                for lf, pf in zip(_schema(meta).fields, to_arrow_schema(_physical_schema(meta)))
+            }
 
     def _base_fields(self) -> list:
         """The table's own fields (CDF metadata columns excluded)."""
@@ -283,16 +301,15 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
 
     # -- planning (driver) -----------------------------------------------
     def _commit_actions(self, version: int) -> list:
-        from .delta_lite import LOG_DIR
+        from .delta_lite import commit_actions
 
-        fpath = os.path.join(self._path, LOG_DIR, f"{version:020d}.json")
-        if not os.path.exists(fpath):
+        actions = commit_actions(self._path, version)
+        if actions is None:
             raise ValueError(
                 f"commit {version} of {self._path} is gone (expired log?) — "
                 f"cannot stream a gap"
             )
-        with open(fpath, encoding="utf-8") as fh:
-            return [json.loads(line) for line in fh if line.strip()]
+        return actions
 
     def _version_adds(self, version: int) -> list:
         """The ``dataChange: true`` add actions of one commit, enforcing
@@ -525,10 +542,12 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
         """One parquet file as an Arrow table aligned to ``target`` (the
         Arrow form of ``fields``): partition columns re-attached as
         constants, pre-evolution missing columns as NULL, physical types
-        cast to the declared ones. ``dv`` masks out the deletion
-        vector's row positions FIRST (executor-side roaring decode, the
-        same ``dv_positions`` kernel the batch reader uses), so every
-        downstream consumer sees only the file's live rows."""
+        cast to the declared ones, and a mapped table's physical column
+        names (nested ones too) relabelled to the logical ones. ``dv``
+        masks out the deletion vector's row positions FIRST (executor-side
+        roaring decode, the same ``dv_positions`` kernel the batch reader
+        uses), so every downstream consumer sees only the file's live
+        rows."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -545,16 +564,19 @@ class DeltaLiteStreamReader(DataSourceStreamReader):
         n = table.num_rows
         arrays = []
         for field, spark_field in zip(target, fields):
-            if field.name in table.column_names:
-                col = table.column(field.name)
-                if col.type != field.type:
-                    col = col.cast(field.type)
-                arrays.append(col.combine_chunks())
+            name, ptype = self._physical.get(field.name, (field.name, field.type))
+            if name in table.column_names:
+                col = table.column(name)
+                if col.type != ptype:
+                    col = col.cast(ptype)
+                col = col.combine_chunks()
+                # same layout, physical nested names -> logical ones
+                arrays.append(col if ptype == field.type else col.view(field.type))
             else:  # partition column (constant per file) or a column
                 # added by schema evolution after this file was written
                 # (reads NULL, parquet missing-column semantics)
                 val = _python_partition_value(
-                    partition_values.get(field.name),
+                    partition_values.get(name),
                     spark_field.dataType,
                 )
                 arrays.append(pa.array([val] * n, type=field.type))

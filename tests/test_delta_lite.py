@@ -1119,29 +1119,34 @@ def test_timestamp_ntz_feature_roundtrip(spark, tmp_path):
 
 
 def test_ntz_schema_evolution_upgrades_protocol(spark, tmp_path):
-    """Evolving a TIMESTAMP_NTZ column into a legacy (1,2) table must
-    declare timestampNtz in the SAME commit (plus the legacy-implied
-    writer features, per the table-features upgrade rule)."""
-    tp = str(tmp_path / "t")
-    dl.write_delta_lite(spark.createDataFrame([(1,)], "k long"), tp)
-    assert dl.load_snapshot(tp).protocol == {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    evolved = spark.sql(
-        "SELECT CAST(2 AS LONG) AS k, TIMESTAMP_NTZ '2024-01-01 00:00:00' AS ts"
-    )
-    dl.write_delta_lite(evolved, tp, mode="append", merge_schema=True)
-    proto = dl.load_snapshot(tp).protocol
-    assert (proto["minReaderVersion"], proto["minWriterVersion"]) == (3, 7)
-    assert proto["readerFeatures"] == ["timestampNtz"]
-    assert set(proto["writerFeatures"]) == {
-        "appendOnly",
-        "invariants",
-        "timestampNtz",
-    }
-    got = {(r["k"], r["ts"] is None) for r in dl.read_delta_lite(spark, tp).collect()}
-    assert got == {(1, True), (2, False)}  # old rows read NULL ntz
+    """Evolving a TIMESTAMP_NTZ column into a legacy (1,2) table — by a
+    WRITE or by a MERGE — must declare timestampNtz in the SAME commit
+    (plus the legacy-implied writer features, per the table-features
+    upgrade rule)."""
+    for how in ("write", "merge"):
+        tp = str(tmp_path / how)
+        dl.write_delta_lite(spark.createDataFrame([(1,)], "k long"), tp)
+        assert dl.load_snapshot(tp).protocol == {
+            "minReaderVersion": 1,
+            "minWriterVersion": 2,
+        }
+        evolved = spark.sql(
+            "SELECT CAST(2 AS LONG) AS k, TIMESTAMP_NTZ '2024-01-01 00:00:00' AS ts"
+        )
+        if how == "write":
+            dl.write_delta_lite(evolved, tp, mode="append", merge_schema=True)
+        else:
+            dl.merge_delta_lite(spark, tp, evolved, ["k"], merge_schema=True)
+        proto = dl.load_snapshot(tp).protocol
+        assert (proto["minReaderVersion"], proto["minWriterVersion"]) == (3, 7), how
+        assert proto["readerFeatures"] == ["timestampNtz"]
+        assert set(proto["writerFeatures"]) == {
+            "appendOnly",
+            "invariants",
+            "timestampNtz",
+        }
+        got = {(r["k"], r["ts"] is None) for r in dl.read_delta_lite(spark, tp).collect()}
+        assert got == {(1, True), (2, False)}  # old rows read NULL ntz
 
 
 def test_multipart_checkpoint_read(spark, tmp_path):

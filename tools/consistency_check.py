@@ -15,8 +15,9 @@ check is cheap enough to run every session:
   - every config-registry step resolves to a callable whose first
     parameter is the input DataFrame;
   - delta-lite data files are staged only by the three writers that own
-    a transaction, and every commit — the ``_commit`` call and the
-    ``commitInfo`` it carries — goes through ``_transact``
+    a transaction, every commit — the ``_commit`` call and the
+    ``commitInfo`` it carries — goes through ``_transact``, and every
+    ``protocol`` / ``metaData`` action comes from ``_metadata_actions``
     (``PRIMITIVE_CALLERS``) — read from the package source's AST.
 
 Exit code 1 on any failure; prints each finding.
@@ -36,14 +37,18 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(REPO, "building_and_operating_data_pipelines_at_scale_using_ci_cd_spark")
 
 #: delta-lite primitive → the only functions of ``sources/delta_lite.py``
-#: that may call it (or, for ``commitInfo``, write it as a dict-literal
+#: that may call it (or, for an action name, write it as a dict-literal
 #: key). ``optimize_delta_lite`` is the one dataChange=false writer;
 #: every data-removing DML goes through ``_pruned_rewrite``; every
-#: commit goes through ``_transact``.
+#: commit goes through ``_transact``; every protocol and metaData action
+#: comes from ``_metadata_actions`` (``checkpoint_delta_lite``'s rows
+#: copy the snapshot's).
 PRIMITIVE_CALLERS = {
     "_stage_and_adds": {"write_delta_lite", "_pruned_rewrite", "optimize_delta_lite"},
     "_commit": {"_transact"},
     "commitInfo": {"_transact"},
+    "protocol": {"_metadata_actions", "checkpoint_delta_lite"},
+    "metaData": {"_metadata_actions", "checkpoint_delta_lite"},
 }
 
 
@@ -76,7 +81,8 @@ def primitive_call_findings(package: str = PACKAGE) -> list[str]:
                             findings.append(
                                 f"{rel}:{node.lineno} {owner} uses {name}; only "
                                 f"{sorted(allowed)} may (commit through _transact, "
-                                f"DML through _pruned_rewrite)"
+                                f"DML through _pruned_rewrite, protocol and "
+                                f"metaData through _metadata_actions)"
                             )
     return findings
 
@@ -175,7 +181,8 @@ def main() -> int:
         ):
             failures.append(f"registry step {name}: first parameter is not the input DataFrame ({first})")
 
-    # 8. one commit path in delta-lite, one transaction path for its DML
+    # 8. one commit path in delta-lite, one transaction path for its DML,
+    # one function for its protocol and metaData actions
     failures += primitive_call_findings()
 
     for f in failures:
